@@ -896,10 +896,16 @@ def connected_components(
     (``driver_threshold`` edges, default 2²⁰ ≈ 16 MB), skip the
     iterative job entirely and run a path-compressed union-find there
     — the dup-pair graph of a curated corpus is normally minuscule
-    next to the corpus, and one collect of an already-materialized
-    edge list beats ~5 rounds × several stages of scheduling. The
-    distributed LS/SS path is the ≥threshold path (and the
-    ``driver_threshold=0`` path in tests)."""
+    next to the corpus. The gate and the fetch are ONE action,
+    ``limit(driver_threshold + 1).collect()``: a result of threshold
+    + 1 rows means "too big" without a separate count. Over the
+    threshold that fetch is wasted (its driver memory peak is the
+    driver path's own) and the edge set is computed again for the
+    loop. The labels go back to Spark as a
+    ``pyarrow.Table`` (JVM-side Arrow decode: no pickled RDD, no Python
+    worker, no silent non-Arrow fallback). Only the distributed LS/SS
+    path — over the threshold, or ``driver_threshold=0`` in tests —
+    ``localCheckpoint``-s the edge set before its loop."""
     # Canonical orientation: (u, v) with u > v, deduped.
     e = (
         pairs.select(
@@ -907,10 +913,12 @@ def connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     spark = pairs.sparkSession
-    if driver_threshold > 0 and e.count() <= driver_threshold:
+    edges = e.limit(driver_threshold + 1).collect() if driver_threshold > 0 else None
+    if edges is not None and len(edges) <= driver_threshold:
+        import pyarrow as pa
+
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -921,19 +929,27 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in e.collect():
+        for row in edges:
             ru, rv = find(row.u), find(row.v)
             if ru != rv:  # union by MIN label (component = min id)
                 hi, lo = (ru, rv) if ru > rv else (rv, ru)
                 parent[hi] = lo
-        labels_rows = [(x, find(x)) for x in parent]
-        lab = spark.createDataFrame(labels_rows, "id long, component long")
+        ids = list(parent)
+        lab = spark.createDataFrame(
+            pa.table(
+                {
+                    "id": pa.array(ids, pa.int64()),
+                    "component": pa.array([find(x) for x in ids], pa.int64()),
+                }
+            )
+        )
         out = vertices.select(F.col(id_col).alias("id")).join(
             F.broadcast(lab), "id", "left"
         )
         return out.select(
             F.col("id").alias(id_col), F.coalesce("component", "id").alias("component")
         )
+    e = e.localCheckpoint()
     # The iterative loop runs many tiny multi-stage jobs; size its
     # shuffles to the session's core count for the duration (a
     # production CC job sizes shuffle partitions to its edge volume),

@@ -131,10 +131,14 @@ def tfidf_top_terms(
     (doc_id, term) — a doc's tokens are scan-partition-local, so the
     partial agg collapses every doc's term counts BEFORE its
     exchange, which therefore carries |distinct (doc, term)| rows,
-    not raw occurrences. The df aggregation and the tf⨝df join both
-    derive from the SAME tf subtree, so AQE materializes the tf
-    exchange once and ReusedExchange-es the df branch; the df
-    aggregation itself ships only (term, partial count) rows, and
+    not raw occurrences. The df aggregation and the tf⨝df join are
+    written over the same tf subtree, but the physical plan does NOT
+    share it (plans/r17/x34_tfidf_topterms_after.txt): column pruning
+    leaves the df branch's (doc_id, term) exchange without the count
+    column the tf branch's exchange carries, so the two exchanges
+    differ, nothing is a ReusedExchange, and the corpus is scanned and
+    exploded once per branch. The df aggregation itself ships only
+    (term, partial count) rows, and
     the join's term distribution is left to the planner — at bench
     scale dfreq broadcasts (observed plan), at corpus scale the
     planner inserts the term exchange on tf rows (≤ one per (doc,
@@ -400,17 +404,15 @@ def _containment_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     verification (mirrors dedup._candidate_pairs)."""
     num = round(threshold * 1_000_000)
     n_sc = D.scaled_join_partitions(sh)
-    # ONE exploded-index exchange serves BOTH join sides (r17): the
-    # probe side is a position-filter over the same df-ordered
-    # posexplode the inverted side scans — slice(osh, 1, L) ≡ the
-    # p < L filter on posexplode(osh) — so deriving both from one
-    # _cluster(s) subtree lets AQE materialize that shuffle once and
-    # ReusedExchange the second side. The old shape paid two exchanges
-    # (full index 1.0× + prefix slice ~0.4× at t=0.6 = 1.4× exploded
-    # rows written); this writes 1.0× once. The Jaccard twin
-    # (dedup._candidate_pairs) already had this property because both
-    # its sides ARE the prefix table; here the sides differ only by
-    # the position filter, which sits above the shared exchange.
+    # Both join sides are written over one df-ordered posexplode
+    # (slice(osh, 1, L) ≡ the p < L filter on posexplode(osh)), but
+    # the plan still has TWO exploded-index exchanges, not one shared
+    # one (plans/r17/x38_containment_after.txt): Catalyst pushes the
+    # probe side's p < L filter below its exchange, so the two
+    # subtrees differ and neither is a ReusedExchange. The probe side
+    # ships only prefix rows (~0.4× the exploded rows at t=0.6) but
+    # explodes the full array before filtering; the inverted side
+    # ships the full index (1.0×).
     exploded = D._cluster(
         D.ordered_shingle_index(sh).select(
             "id", "sz", F.posexplode("osh").alias("p", "s")

@@ -60,6 +60,31 @@ _DEFAULTS: dict[str, str] = {
     # Keep scan partitions reasonable for small local files while still
     # splitting 100 TB inputs (default 128 MiB per partition).
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # Compiled codegen classes, keyed by generated source, LRU. Spark's
+    # default of 100 entries is below one pass of the dedup family
+    # (x20 x02 x38 x01 s04 s08 at sf0.01: 147 distinct sources), so a
+    # session repeating that pass missed on every lookup and
+    # Janino-compiled 133 sources again per pass, then JIT-compiled the
+    # fresh classes. Distinct sources with an unbounded cache: 131 for
+    # that pass, 71 for the SQL / TPC-H / retrieval pass, 1,275 for
+    # every matrix entry once at sf0.001, 2,172 for the whole pytest
+    # session. 4096 holds all of these with headroom; a cached entry
+    # costs about 8-12 KB of metaspace and code heap (all matrix
+    # entries cached vs 100: +10-15 MB). The cache is JVM-wide (one per
+    # driver JVM, shared by every session in it, sized when the JVM
+    # first generates code), and this is a static conf: it only takes
+    # effect when get_spark creates the session. An existing session
+    # returned by getOrCreate, such as one a caller built without these
+    # defaults, keeps the size its JVM started with.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # By default a whole-stage class name carries its codegen stage id.
+    # Under AQE that id follows the order in which the query's stages
+    # are planned, which can differ between runs of the same query, so
+    # an unchanged pipeline came back under a new class name and missed
+    # the cache (x38: 4 of 16 sources in a second pass). Without the id
+    # in the name, equal pipelines are equal cache keys; explain output
+    # still shows the stage ids.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -72,23 +72,18 @@ def stream_incremental_dedup(
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = incremental_pairs_vs_corpus(batch_df, corpus_df, n=n, threshold=threshold)
-        # foreachBatch hands a batch_df bound to a micro-batch-scoped
-        # session CLONE — the overwrite mode must be set on THAT
-        # session or the write runs static and wipes every earlier
-        # batch's partition (same pattern as
+        # Dynamic overwrite as a WRITE option (it takes precedence over
+        # the session conf): a static overwrite would wipe every earlier
+        # batch's partition, and a session-conf toggle would leak into
+        # any plan running on the session meanwhile (same pattern as
         # windows.stream_to_parquet_exactly_once).
-        bspark = batch_df.sparkSession
-        prev = bspark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        bspark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                pairs.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(out_path)
-            )
-        finally:
-            bspark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            pairs.withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id")
+            .parquet(out_path)
+        )
 
     q = (
         new_docs_stream.writeStream.trigger(availableNow=True)

@@ -275,7 +275,9 @@ def stream_to_parquet_exactly_once(
     overwrite, so a replayed batch (failure between sink commit and
     checkpoint commit — the at-least-once window every foreachBatch
     sink has) OVERWRITES its own partition instead of appending
-    duplicates. Idempotence + checkpointed offsets = exactly-once
+    duplicates. The overwrite mode is a per-write option, so the
+    session conf, which every other plan on the session reads, is never
+    touched. Idempotence + checkpointed offsets = exactly-once
     output, the contract a 100 TB/day ingest pipeline needs from a
     plain-parquet lake (no Delta/transactional table required).
 
@@ -283,18 +285,13 @@ def stream_to_parquet_exactly_once(
     same call without awaitTermination."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch_df.withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id")
+            .parquet(path)
+        )
 
     q = (
         stream_df.writeStream.trigger(availableNow=True)
@@ -408,18 +405,13 @@ def stream_late_data_accounting(
     out_path = _os.path.join(work_dir, "out")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        prev = bspark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        bspark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(out_path)
-            )
-        finally:
-            bspark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch_df.withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id")
+            .parquet(out_path)
+        )
 
     q = (
         agg.writeStream.trigger(availableNow=True)

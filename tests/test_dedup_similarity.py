@@ -174,15 +174,8 @@ def test_connected_components_100_hop_chain_logarithmic_rounds(spark):
     assert set(labels.values()) == {0}
 
 
-def test_connected_components_random_graph_matches_union_find(spark):
-    """Random sparse graphs vs a driver-side union-find oracle:
-    multi-cluster, isolated vertices, min-id labeling."""
-    import random
-
-    rng = random.Random(7)
-    n = 120
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
-    edges = [(a, b) for a, b in edges if a != b]
+def _union_find_labels(n, edges):
+    """Reference labels: vertex -> minimum id of its component."""
     parent = list(range(n))
 
     def find(x):
@@ -195,7 +188,19 @@ def test_connected_components_random_graph_matches_union_find(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {v: find(v) for v in range(n)}
+    return {v: find(v) for v in range(n)}
+
+
+def test_connected_components_random_graph_matches_union_find(spark):
+    """Random sparse graphs vs a driver-side union-find oracle:
+    multi-cluster, isolated vertices, min-id labeling."""
+    import random
+
+    rng = random.Random(7)
+    n = 120
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
+    edges = [(a, b) for a, b in edges if a != b]
+    want = _union_find_labels(n, edges)
 
     e_df = spark.createDataFrame(edges, "id_a long, id_b long")
     v_df = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
@@ -211,6 +216,80 @@ def test_connected_components_random_graph_matches_union_find(spark):
     }
     assert got_fast == want
     assert got_dist == want
+
+
+def test_connected_components_driver_threshold_boundary(spark, monkeypatch):
+    """The driver gate counts DISTINCT canonical edges: exactly
+    ``driver_threshold`` of them take the driver union-find, one more
+    takes the distributed LS/SS loop, and both label like the
+    reference. Duplicates, reversed duplicates and self-loops in the
+    input must not count towards the gate."""
+    import random
+
+    rng = random.Random(11)
+    n = 60
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(40)]
+    edges += [(b, a) for a, b in edges[:10]] + edges[:5] + [(3, 3), (7, 7)]
+    k = len({(max(a, b), min(a, b)) for a, b in edges if a != b})
+    want = _union_find_labels(n, [(a, b) for a, b in edges if a != b])
+
+    loops = []
+    fixpoint = D._ls_ss_fixpoint
+
+    def counted_fixpoint(e, max_iterations):
+        loops.append(1)
+        return fixpoint(e, max_iterations)
+
+    monkeypatch.setattr(D, "_ls_ss_fixpoint", counted_fixpoint)
+    e_df = spark.createDataFrame(edges, "id_a long, id_b long")
+    v_df = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+
+    def labels(threshold):
+        out = D.connected_components(e_df, v_df, driver_threshold=threshold)
+        return {r.doc_id: r.component for r in out.collect()}
+
+    assert labels(k) == want
+    assert loops == []  # k edges, threshold k: driver path
+    assert labels(k - 1) == want
+    assert loops == [1]  # k edges, threshold k - 1: LS/SS path
+
+    # No edges at all: the driver path's labels table is empty, and it
+    # must still carry long columns for the broadcast join.
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    out = D.connected_components(none, v_df)
+    assert out.schema.simpleString() == "struct<doc_id:bigint,component:bigint>"
+    assert {r.doc_id: r.component for r in out.collect()} == {i: i for i in range(n)}
+    assert loops == [1]
+
+
+def test_dedup_family_second_pass_compiles_nothing(spark, sf_dir):
+    """The dedup family's distinct whole-stage-codegen sources fit in
+    the session's codegen cache, and an unchanged pipeline is an
+    unchanged cache key (``session._DEFAULTS``): a second pass over
+    x20 → x02 → x38 → x01 → s08 with cleared memos Janino-compiles
+    nothing. With Spark's default cap of 100 entries this sequence
+    (over 100 distinct sources) misses the LRU cache on every lookup,
+    and with the codegen stage id in each class name an unchanged x38
+    stage that AQE numbered differently missed too."""
+    from sql_engine_spark import matrix
+
+    names = [
+        "x20_dedup_components", "x02_dedup_ngram_jaccard",
+        "x38_containment", "x01_dedup_exact", "s08_stream_ingest_dedup",
+    ]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass():
+        D.clear_shingle_index()
+        for name in names:
+            matrix.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return compiles.METRIC_COMPILATION_TIME().getCount()
+
+    first = run_pass()
+    try:
+        assert run_pass() - first == 0
+    finally:
+        D.clear_shingle_index()
 
 
 # --- similarity ------------------------------------------------------

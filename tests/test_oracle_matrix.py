@@ -23,8 +23,5 @@ def test_oracle_match(spark, sf_dir, name):
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_runs(spark, sf_dir, name):
-    df = matrix.QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+def test_every_query_has_an_oracle():
+    assert ROWS_ONLY_NAMES == []

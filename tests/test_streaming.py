@@ -227,19 +227,15 @@ def test_foreach_batch_sink_exactly_once(spark, sf_dir, tmp_path):
     # Simulate a replayed batch: rewriting batch 0's output directly
     # must leave the row count unchanged (partition overwrite, not append).
     batch0 = spark.read.parquet(out).filter("__batch_id = 0").drop("__batch_id")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        (
-            batch0.withColumn("__batch_id", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("__batch_id")
-            .parquet(out)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        batch0.withColumn("__batch_id", F.lit(0))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(out)
+    )
     assert spark.read.parquet(out).count() == n1
 
 

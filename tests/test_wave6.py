@@ -134,6 +134,55 @@ def test_stream_ingest_dedup_batch_invariant(spark, docs, tmp_path):
     assert len(parts) >= 2
 
 
+def test_stream_ingest_dedup_replayed_batch_overwrites_its_partition(spark, docs, tmp_path):
+    """A batch replayed after a lost checkpoint commit (the
+    at-least-once window of every foreachBatch sink) rewrites only its
+    own ``__batch_id`` partition: the output is unchanged, with no
+    duplicate pairs (an append would add them) and the earlier batch's
+    partition kept (a static overwrite would wipe it). Two source
+    files, pinned in batch order, each holding a doc with near-dups."""
+    import os
+
+    from sql_engine_spark.streaming.ingest import (
+        read_documents_stream,
+        stream_incremental_dedup,
+    )
+
+    new_docs = docs.filter(F.col("doc_id") % 10 == 0)
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    last_id = max(r.id_new for r in incremental_pairs_vs_corpus(new_docs, corpus).collect())
+    src = tmp_path / "new_docs"
+    src.mkdir()
+    for i, part in enumerate(
+        [new_docs.filter(F.col("doc_id") != last_id), new_docs.filter(F.col("doc_id") == last_id)]
+    ):
+        stage = tmp_path / f"stage{i}"
+        part.coalesce(1).write.parquet(str(stage))
+        (f,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        dest = src / f"{i}.parquet"
+        os.replace(stage / f, dest)
+        os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
+    out, ckpt = str(tmp_path / "pairs"), str(tmp_path / "ckpt")
+
+    def run():
+        stream = read_documents_stream(spark, str(src), max_files_per_trigger=1, glob="*.parquet")
+        got = stream_incremental_dedup(stream, corpus, out_path=out, checkpoint=ckpt)
+        return sorted(tuple(r) for r in got.collect())
+
+    first = run()
+    per_batch = {
+        r["__batch_id"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("__batch_id").count().collect()
+    }
+    assert sorted(per_batch) == [0, 1] and min(per_batch.values()) > 0
+
+    commits = tmp_path / "ckpt" / "commits"
+    for f in ("1", ".1.crc"):
+        if (commits / f).exists():
+            (commits / f).unlink()
+    assert run() == first
+
+
 def test_stream_ingest_dedup_empty_stream(spark, docs, tmp_path):
     from sql_engine_spark.streaming.ingest import (
         read_documents_stream,
