@@ -553,11 +553,13 @@ def _pair_skew_probe(spark, sf_dir: str) -> dict:
     clique total (pairs (a,b) with a<b spread id_a across all clique
     members) — but the bound is data-dependent, so measure it: x02 on
     a 5×-replicated corpus (mutually non-duplicate replicas, the
-    _scale_probe recipe), uniform vs the same corpus with a planted
-    500-doc identical clique (124,750 true pairs, triangular id_a
-    distribution — the worst planted hub this corpus admits).
-    Reported per variant: min-of-2 seconds + clique/uniform ratio.
-    NOTE the ratio also prices ~125k extra TRUE pairs the uniform
+    _scale_probe recipe), uniform vs the same corpus with every
+    ``doc_id % 50 == 7`` doc replaced by one identical text (a planted
+    clique, triangular id_a distribution — the worst planted hub this
+    corpus admits). Reported per variant: min-of-2 seconds +
+    clique/uniform ratio, plus the clique size counted from the data
+    (``hub_docs``, c) and its c·(c−1)/2 true pairs (``hub_pairs``).
+    NOTE the ratio also prices those extra TRUE pairs the uniform
     corpus lacks (candidate join, verify, dedup all grow), so it is
     an UPPER bound on the partition-skew cost, not a pure skew
     reading; the standing line is the skewed-source family's ≤2×."""
@@ -583,11 +585,12 @@ def _pair_skew_probe(spark, sf_dir: str) -> dict:
     for r in reps[1:]:
         rep = rep.unionByName(r)
     hub_text = " ".join(f"hubtok{i}" for i in range(60))
+    is_hub = F.col("doc_id") % 50 == 7
     variants = {
         "uniform": rep,
         "hub": rep.select(
             "doc_id",
-            F.when(F.col("doc_id") % 50 == 7, F.lit(hub_text))
+            F.when(is_hub, F.lit(hub_text))
             .otherwise(F.col("text"))
             .alias("text"),
         ),
@@ -609,6 +612,9 @@ def _pair_skew_probe(spark, sf_dir: str) -> dict:
                 runs.append(time.perf_counter() - t0)
             block[label] = round(min(runs), 3)
         block["ratio"] = round(block["hub"] / max(block["uniform"], 1e-9), 2)
+        c = spark.read.parquet(os.path.join(base, "hub")).filter(is_hub).count()
+        block["hub_docs"] = c
+        block["hub_pairs"] = c * (c - 1) // 2
         print(f"# pair_skew_probe: {block}", file=sys.stderr)
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -313,32 +313,73 @@ def _ceil_frac(sz: Column, threshold: float) -> Column:
 
 def _alpha(sz_a: Column, sz_b: Column, threshold: float) -> Column:
     """⌈t/(1+t)·(|A|+|B|)⌉ — the PPJoin overlap lower bound for
-    J(A,B) ≥ t — in exact integer arithmetic. The ONE shared copy for
-    every positional-prune call site (Jaccard self-join, both
-    incremental probes): the idiom includes the explicit long casts
+    J(A,B) ≥ t — in exact integer arithmetic, for the positional prune
+    of :func:`_jaccard_filter`: the idiom includes the explicit long casts
     (F.size() emits int32; under ANSI mode (sz_a+sz_b)·num overflows
     int32 at ~1343 shingles per doc — a routine web-document size —
-    and kills the probe job), and a fix here fixes all of them."""
+    and kills the probe job)."""
     num = round(threshold * 1_000_000)
     denom = 1_000_000 + num
     total = sz_a.cast("long") + sz_b.cast("long")
     return F.floor((total * num + (denom - 1)) / F.lit(denom))
 
 
-def _prefix_tokens(sh: DataFrame, threshold: float, prefix_order: str) -> DataFrame:
-    """(id, sz, p, s) rows for each doc's PREFIX shingles, positioned in
-    the chosen global total order. Any global order is exact for the
-    prefix filter (Bayardo et al.); see :func:`ngram_jaccard_pairs` for
-    the skew tradeoff between the two orders."""
-    prefix_len = (F.col("sz") - _ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    if prefix_order == "hash":
-        # shingle_hashes already emits hash-sorted arrays.
-        return sh.select("id", "sz", F.posexplode(F.slice("sh", 1, prefix_len)).alias("p", "s"))
-    if prefix_order != "df":
-        raise ValueError(f"prefix_order must be 'df' or 'hash', got {prefix_order!r}")
-    return ordered_shingle_index(sh).select(
-        "id", "sz", F.posexplode(F.slice("osh", 1, prefix_len)).alias("p", "s")
+def _tokens(idx: DataFrame, arr: str, threshold: "float | None" = None) -> DataFrame:
+    """(id, sz, p, s) rows: each doc's shingles from array column ``arr``
+    with their 0-based positions ``p`` in that array's order. With a
+    ``threshold`` only the PPJoin prefix — the first |A| − ⌈t·|A|⌉ + 1
+    shingles — is exploded (slice before posexplode, so the dropped
+    suffix never becomes rows); without one, the full array (the
+    inverted-index side of a one-sided prefix probe). Any global order
+    of ``arr`` is exact for the prefix filter (Bayardo et al.)."""
+    toks = F.col(arr)
+    if threshold is not None:
+        toks = F.slice(arr, 1, (F.col("sz") - _ceil_frac(F.col("sz"), threshold) + 1).cast("int"))
+    return idx.select("id", "sz", F.posexplode(toks).alias("p", "s"))
+
+
+def _jaccard_filter(threshold: float) -> Column:
+    """Exact PPJoin pair predicate for J ≥ t over ``a.*``/``b.*`` token
+    sides (:func:`_tokens` rows), in integer arithmetic:
+
+    - length: t·max(|A|,|B|) ≤ min(|A|,|B|), cross-multiplied.
+    - positional: J ≥ t ⟺ overlap ≥ α = ⌈t/(1+t)·(|A|+|B|)⌉, and a pair
+      first meeting at 0-based positions (p_a, p_b) — both arrays in the
+      same global order — can overlap at most min(|A|−p_a, |B|−p_b), so
+      pairs below α are pruned (a token deep in its array, such as a
+      hot shingle at the tail of a df-ordered array, meets nothing)."""
+    num = round(threshold * 1_000_000)
+    sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
+    return (F.least(sz_a, sz_b) * 1_000_000 >= F.greatest(sz_a, sz_b) * num) & (
+        F.least(sz_a - F.col("a.p"), sz_b - F.col("b.p")) >= _alpha(sz_a, sz_b, threshold)
     )
+
+
+def prefix_join(
+    probe: DataFrame, index: DataFrame, pair_filter: Column, n_sc: "int | None"
+) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs of a prefix-filtered
+    inverted-index join: :func:`_tokens` rows of ``probe`` (aliased
+    ``a``) meet those of ``index`` (aliased ``b``) on the shingle ``s``
+    where ``pair_filter`` (over ``a.*``/``b.*``) holds. Callers cluster
+    both sides on ``s`` at ``n_sc`` and put the ``shuffle_hash`` hint on
+    the side to build: both sides are exploded corpus tables, never
+    broadcastable at scale (the 125× replica OOM class), and a merge
+    pin would sort both exploded sides (measured 1.7× slower on the
+    containment join at 125×).
+
+    The raw pairs are partitioned by the verify probe key BEFORE the
+    dedup: hash(id_a) satisfies the dedup's ClusteredDistribution(id_a,
+    id_b) AND :func:`_verify_pairs`' ClusteredDistribution(id_a), so one
+    deliberate exchange replaces two (r16; prefix collisions duplicate
+    each pair only ~1.2× at sf0.1, so the raw rows crossing one
+    exchange cost less than partial-dedup plus deduped rows crossing
+    two)."""
+    a, b = probe.alias("a"), index.alias("b")
+    raw = a.join(b, (F.col("a.s") == F.col("b.s")) & pair_filter).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    )
+    return _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
 
 
 def ordered_shingle_index(sh: DataFrame) -> DataFrame:
@@ -385,42 +426,50 @@ def ordered_shingle_index(sh: DataFrame) -> DataFrame:
     return _memo_persist(_ORDERED_INDEX, ("ordered",), sh, build)
 
 
-def _verify_pairs_jaccard(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard for candidate (id_a, id_b) pairs: fetch both
-    distinct-shingle arrays, |∩| via array_intersect. Both joins are
-    strategy-pinned: EVERY side here scales with the corpus (cands is
-    the candidate pair set, a/b carry the full shingle arrays), so
-    none may ever broadcast — highly repetitive pair/array columns
-    compress far below their in-memory size, and at a 125× sf0.1
-    replica AQE's compressed-bytes estimate slipped a corpus-scaled
-    side under the 64 MB session threshold and killed the driver with
-    "Not enough memory to build and broadcast" (r13; same class on the
-    containment/incremental twins). Shuffle-hash, not sort-merge, with
-    build sides chosen so the fat array-carrying stream is never
-    sorted (join 1 builds the narrow pairs, join 2 builds the
-    per-partition-bounded array side): a merge pin sorted the
-    pairs×arrays intermediate and went 3× super-linear on the
-    containment twin's 125× point.
+def _verify_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
+    """Fetch both shingle arrays for candidate (id_a, id_b) pairs:
+    ``cands`` joined with ``(sh_a, sz_a)`` and ``(sh_b, sz_b)`` from the
+    shingle index ``sh``, ready for an exact array_intersect check. Both
+    joins are strategy-pinned: EVERY side here scales with the corpus
+    (cands is the candidate pair set, a/b carry the full shingle
+    arrays), so none may ever broadcast — highly repetitive pair/array
+    columns compress far below their in-memory size, and at a 125×
+    sf0.1 replica AQE's compressed-bytes estimate slipped a
+    corpus-scaled side under the 64 MB session threshold and killed the
+    driver with "Not enough memory to build and broadcast" (r13).
+    Shuffle-hash, not sort-merge, with build sides chosen so the fat
+    array-carrying stream is never sorted (join 1 builds the narrow
+    pairs, join 2 builds the per-partition-bounded array side): a merge
+    pin sorted the pairs×arrays intermediate and went 3× super-linear
+    on the containment verify's 125× point.
 
-    ``cands`` arrives hash-partitioned on ``id_a`` — every candidate
-    producer repartitions its raw pairs by the probe key BEFORE the
-    pair dedup (:func:`_cluster_always` rationale) — so join 1 needs
-    no pair-side exchange here (2 Exchange → 1 per verify, r16)."""
+    ``cands`` arrives hash-partitioned on ``id_a`` (:func:`prefix_join`
+    and the MinHash band join partition their raw pairs by the probe
+    key before the pair dedup),
+    so join 1 needs no pair-side exchange here (2 Exchange → 1 per
+    verify, r16)."""
     n_sc = scaled_join_partitions(sh)
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))
-    j = (
+    return (
         cands.hint("shuffle_hash")
         .join(_cluster(a, n_sc, "id_a"), "id_a")
         .join(_cluster(b, n_sc, "id_b").hint("shuffle_hash"), "id_b")
     )
+
+
+def _with_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of ``pairs``' ``(sh_a, sz_a)``/``(sh_b, sz_b)``
+    arrays as a ``jaccard`` column, keeping rows with J ≥ threshold."""
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return pairs.withColumn("jaccard", jac).filter(F.col("jaccard") >= threshold)
+
+
+def _verify_pairs_jaccard(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs with exact
+    J ≥ threshold."""
+    return _with_jaccard(_verify_pairs(cands, sh), threshold).select("id_a", "id_b", "jaccard")
 
 
 def ngram_jaccard_pairs(
@@ -495,46 +544,19 @@ def _candidate_pairs(sh: DataFrame, threshold: float, prefix_order: str) -> Data
     inverted-index self-join (exact superset of the true ≥-threshold
     pairs). Exposed separately so skew tests can count candidates per
     prefix order without running verification."""
+    if prefix_order == "hash":
+        # shingle_hashes already emits hash-sorted arrays.
+        toks = _tokens(sh, "sh", threshold)
+    elif prefix_order == "df":
+        toks = _tokens(ordered_shingle_index(sh), "osh", threshold)
+    else:
+        raise ValueError(f"prefix_order must be 'df' or 'hash', got {prefix_order!r}")
     # One repartition of the shared exploded side serves both aliases
     # (corpus-scaled count: the 250× no-spill wall).
     n_sc = scaled_join_partitions(sh)
-    ex = _cluster(_prefix_tokens(sh, threshold, prefix_order), n_sc, "s")
-    a, b = ex.alias("a"), ex.alias("b")
-    num = round(threshold * 1_000_000)
-    # PPJoin positional filter: J ≥ t ⟺ overlap ≥ α = ⌈t/(1+t)·(|A|+|B|)⌉,
-    # and a pair first meeting at 0-based prefix positions (p_a, p_b) can
-    # overlap at most min(|A|−p_a, |B|−p_b) — prune below α.
-    alpha = _alpha(F.col("a.sz"), F.col("b.sz"), threshold)
-    ubound = F.least(F.col("a.sz") - F.col("a.p"), F.col("b.sz") - F.col("b.p"))
-    # Pinned shuffle-hash on the shingle key: BOTH sides are the
-    # exploded corpus prefix table — never broadcastable at scale (the
-    # 125× replica OOM class; _verify_pairs_jaccard rationale). Hash,
-    # not merge: rows are a handful of longs (cheap per-partition
-    # build), and a merge pin would force a full sort of both exploded
-    # sides — measured 1.7× slower on the containment twin at 125×.
-    raw = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.id") < F.col("b.id"))
-            # length filter: J ≥ t requires t·max(|A|,|B|) ≤ min(|A|,|B|)
-            & (
-                F.least(F.col("a.sz"), F.col("b.sz")) * 1_000_000
-                >= F.greatest(F.col("a.sz"), F.col("b.sz")) * num
-            )
-            & (ubound >= alpha),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    # Partition the RAW pairs by the verify probe key, THEN dedup:
-    # hash(id_a) satisfies the dedup's ClusteredDistribution(id_a,
-    # id_b) AND the verify join's ClusteredDistribution(id_a), so one
-    # deliberate exchange replaces the dedup's (id_a, id_b) exchange
-    # plus the verify's id_a exchange (2 Exchange → 1, r16; prefix
-    # collisions duplicate each pair only ~1.2× at sf0.1, so the raw
-    # rows crossing this single exchange cost less than the partial-
-    # dedup rows plus deduped rows crossing two).
-    return _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
+    ex = _cluster(toks, n_sc, "s")
+    pair_filter = (F.col("a.id") < F.col("b.id")) & _jaccard_filter(threshold)
+    return prefix_join(ex, ex.hint("shuffle_hash"), pair_filter, n_sc)
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -724,7 +746,7 @@ def minhash_lsh_pairs(
         # Pinned shuffle-hash: the banded-signature self-join's sides
         # are both the full corpus's band keys — never broadcastable at
         # scale (the 125× replica OOM class); hash not merge per the
-        # _candidate_pairs rationale.
+        # prefix_join rationale.
         a.join(
             b_.hint("shuffle_hash"),
             (F.col("a.band") == F.col("b.band"))
@@ -734,7 +756,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
     # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (the _candidate_pairs rationale, r16).
+    # AND the verify join (the prefix_join rationale, r16).
     cands = _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
     return _verify_pairs_jaccard(cands, sh, threshold)
 
@@ -742,7 +764,9 @@ def minhash_lsh_pairs(
 # --- SimHash -----------------------------------------------------------
 
 _SIMHASH_BITS = 64
-_BAND_BITS = 16  # 4 bands of 16 bits: candidates agree on ≥1 band → hamming ≤ 48 guaranteed caught... bands catch hamming ≤ 3 with high prob
+# 4 bands of 16 bits: by pigeonhole, a pair with hamming < 4 (the number
+# of bands) agrees on at least one band, so recall is exact for hamming ≤ 3.
+_BAND_BITS = 16
 
 
 def simhash_signatures(
@@ -846,7 +870,7 @@ def banded_hamming_pairs(
     return (
         # Pinned shuffle-hash: both sides are the full corpus's exploded
         # band rows — never broadcastable at scale (the 125× replica
-        # OOM class); hash not merge per the _candidate_pairs rationale.
+        # OOM class); hash not merge per the prefix_join rationale.
         a.join(
             b.hint("shuffle_hash"),
             (F.col("a.b_idx") == F.col("b.b_idx"))

@@ -344,27 +344,9 @@ def containment_pairs(
     # Jaccard dedup the shingle scan is free (dedup.shingle_index memo).
     sh = D.shingle_index(df, id_col, text_col, n)
     num = round(threshold * 1_000_000)
-    cands = _containment_candidates(sh, threshold)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    # Verify joins pinned shuffle-hash, build sides chosen so the fat
-    # array-carrying stream is NEVER sorted: join 1 builds the narrow
-    # candidate pairs, join 2 builds the per-partition-bounded array
-    # side and streams the wide intermediate. A merge pin here sorted
-    # the ~46 GB pairs×arrays intermediate at the 125× point and went
-    # super-linear (180 s vs ~25 s for the Jaccard twin); broadcast
-    # stays forbidden either way (the 125× replica OOM class —
-    # dedup._verify_pairs_jaccard rationale).
-    # cands arrive hash-partitioned on id_a (the candidate producer
-    # repartitions its raw pairs by the probe key before the dedup —
-    # dedup._cluster_always rationale): no pair-side exchange here
-    # (2 Exchange → 1 per verify, r16).
-    n_sc = D.scaled_join_partitions(sh)
     return (
-        cands.hint("shuffle_hash")
-        .join(D._cluster(a, n_sc, "id_a"), "id_a")
-        .join(D._cluster(b, n_sc, "id_b").hint("shuffle_hash"), "id_b")
+        D._verify_pairs(_containment_candidates(sh, threshold), sh)
         .withColumn("__inter", inter.cast("long"))
         .filter((F.col("__inter") * 1_000_000 >= F.col("sz_a") * num) & (F.col("sz_a") > 0))
         .select(
@@ -397,58 +379,24 @@ def _containment_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     stop-phrases, mid-frequency shingles dominate) the measured
     reduction is a modest 570k → 462k distinct candidates; on a
     boilerplate-heavy crawl — where the hot-shingle quadratic lives —
-    the pruned tail is exactly the hot set. Both sides explode the
-    SAME memoized ordered-index artifact the Jaccard prefix path
-    builds, so the filter costs no extra corpus pass. Exposed
+    the pruned tail is exactly the hot set. Both sides read the SAME
+    memoized ordered-index artifact the Jaccard prefix path builds, so
+    the filter costs no extra corpus pass: the probe side explodes only
+    its prefix slice, the index side the full array. Exposed
     separately so skew tests can count candidates without running
     verification (mirrors dedup._candidate_pairs)."""
     num = round(threshold * 1_000_000)
     n_sc = D.scaled_join_partitions(sh)
-    # Both join sides are written over one df-ordered posexplode
-    # (slice(osh, 1, L) ≡ the p < L filter on posexplode(osh)), but
-    # the plan still has TWO exploded-index exchanges, not one shared
-    # one (plans/r17/x38_containment_after.txt): Catalyst pushes the
-    # probe side's p < L filter below its exchange, so the two
-    # subtrees differ and neither is a ReusedExchange. The probe side
-    # ships only prefix rows (~0.4× the exploded rows at t=0.6) but
-    # explodes the full array before filtering; the inverted side
-    # ships the full index (1.0×).
-    exploded = D._cluster(
-        D.ordered_shingle_index(sh).select(
-            "id", "sz", F.posexplode("osh").alias("p", "s")
-        ),
+    osh = D.ordered_shingle_index(sh)
+    # The (much smaller) prefix side is the hash-join build side.
+    return D.prefix_join(
+        D._cluster(D._tokens(osh, "osh", threshold), n_sc, "s").hint("shuffle_hash"),
+        D._cluster(D._tokens(osh, "osh"), n_sc, "s"),
+        (F.col("a.id") != F.col("b.id"))
+        & (F.col("b.sz") * 1_000_000 >= F.col("a.sz") * num)
+        & (F.col("b.sz") - F.col("b.p") >= D._ceil_frac(F.col("a.sz"), threshold)),
         n_sc,
-        "s",
     )
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    pref = exploded.filter(F.col("p") < prefix_len).select(
-        F.col("id").alias("id_a"), F.col("sz").alias("psz_a"), "s"
-    )
-    inv = exploded.select(
-        F.col("id").alias("id_b"),
-        F.col("sz").alias("isz_b"),
-        F.col("p").alias("pb"),
-        "s",
-    )
-    k_a = D._ceil_frac(F.col("psz_a"), threshold)
-    # Pinned shuffle-hash with the (much smaller) prefix side as build:
-    # both exploded sides are corpus-scaled — never broadcastable at
-    # scale (the 125× replica OOM class) — and a merge pin here forced
-    # a full sort of the 60M-row exploded index side, measured 1.7×
-    # slower at 125× than hash-building the prefix rows per partition.
-    raw = (
-        pref.hint("shuffle_hash").join(
-            inv,
-            (pref["s"] == inv["s"])
-            & (F.col("id_a") != F.col("id_b"))
-            & (F.col("isz_b") * 1_000_000 >= F.col("psz_a") * num)
-            & (F.col("isz_b") - F.col("pb") >= k_a),
-        )
-        .select("id_a", "id_b")
-    )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (dedup._cluster_always rationale, r16).
-    return D._cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
 
 
 # --- wave 3: mixture construction + corpus shape ---------------------
@@ -955,68 +903,22 @@ def incremental_jaccard_pairs(
 
     Output: (id_new, id_old, jaccard).
     """
-    num = round(threshold * 1_000_000)
     sh = D.shingle_index(df, id_col, text_col, n)
     n_sc = D.scaled_join_partitions(sh)
     new_pred = F.col("id") % new_mod == 0
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
     osh = D.ordered_shingle_index(sh)
-    pref = D._cluster(
-        osh.filter(new_pred)
-        .select("id", "sz", F.posexplode(F.slice("osh", 1, prefix_len)).alias("pn", "s"))
-        .select(F.col("id").alias("id_new"), F.col("sz").alias("sz_new"), "pn", "s"),
+    # The batch prefix side (10% of the corpus) is the hash-join build
+    # side; the batch is NOT a trigger-bounded micro-batch, so both
+    # sides scale with the corpus (prefix_join rationale).
+    probe = D._cluster(D._tokens(osh.filter(new_pred), "osh", threshold), n_sc, "s")
+    cands = D.prefix_join(
+        probe.hint("shuffle_hash"),
+        D._cluster(D._tokens(osh.filter(~new_pred), "osh"), n_sc, "s"),
+        D._jaccard_filter(threshold),
         n_sc,
-        "s",
     )
-    inv = D._cluster(
-        osh.filter(~new_pred)
-        .select(
-            F.col("id").alias("id_old"),
-            F.col("sz").alias("sz_old"),
-            F.posexplode("osh").alias("po", "s"),
-        ),
-        n_sc,
-        "s",
-    )
-    alpha = D._alpha(F.col("sz_new"), F.col("sz_old"), threshold)
-    raw = (
-        # Pinned shuffle-hash with the (smaller, 10%-of-corpus) batch
-        # prefix side as build: the batch here is NOT a trigger-bounded
-        # micro-batch, so both exploded sides scale with the corpus —
-        # never broadcastable (the 125× replica OOM class); hash not
-        # merge per the containment-candidates rationale.
-        pref.hint("shuffle_hash").join(
-            inv,
-            (pref["s"] == inv["s"])
-            # length filter both ways: t·|A| ≤ |B| AND t·|B| ≤ |A|
-            & (F.col("sz_old") * 1_000_000 >= F.col("sz_new") * num)
-            & (F.col("sz_new") * 1_000_000 >= F.col("sz_old") * num)
-            & (F.col("sz_new") - F.col("pn") >= alpha)
-            & (F.col("sz_old") - F.col("po") >= alpha),
-        )
-        .select("id_new", "id_old")
-    )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (dedup._cluster_always rationale, r16).
-    cands = D._cluster_always(raw, n_sc, "id_new").dropDuplicates(["id_new", "id_old"])
-    a = sh.select(F.col("id").alias("id_new"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
-    b = sh.select(F.col("id").alias("id_old"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))
-    # Pinned shuffle-hash (build: narrow pairs, then the array side —
-    # the fat stream is never sorted): both batch (10% of corpus) and
-    # corpus array sides are corpus-scaled — never broadcastable (the
-    # 125× replica OOM class; dedup._verify_pairs_jaccard rationale),
-    # clustered at the corpus-scaled count (the 250× no-spill wall).
-    j = (
-        cands.hint("shuffle_hash")
-        .join(D._cluster(a, n_sc, "id_new"), "id_new")
-        .join(D._cluster(b, n_sc, "id_old").hint("shuffle_hash"), "id_old")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_new", "id_old", "jaccard")
+    return D._verify_pairs_jaccard(cands, sh, threshold).select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_old"), "jaccard"
     )
 
 
@@ -1270,7 +1172,6 @@ def incremental_pairs_vs_corpus(
 
     Output: (id_new, id_old, jaccard ≥ threshold).
     """
-    num = round(threshold * 1_000_000)
     sh_old = D.shingle_index(corpus_df, id_col, text_col, n)
     sh_new = (
         new_df.select(
@@ -1280,35 +1181,18 @@ def incremental_pairs_vs_corpus(
         .withColumn("sz", F.size("sh").cast("long"))
         .filter(F.col("sz") > 0)
     )
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    pref = sh_new.select(
-        F.col("id").alias("id_new"),
-        F.col("sz").alias("sz_new"),
-        F.posexplode(F.slice("sh", 1, prefix_len)).alias("pn", "s"),
-    )
-    inv = sh_old.select(
-        F.col("id").alias("id_old"),
-        F.col("sz").alias("sz_old"),
-        F.posexplode("sh").alias("po", "s"),
-    )
-    alpha = D._alpha(F.col("sz_new"), F.col("sz_old"), threshold)
+    pref = D._tokens(sh_new, "sh", threshold).alias("a")
+    inv = D._tokens(sh_old, "sh").alias("b")
     cands = (
-        pref.join(
-            inv,
-            (pref["s"] == inv["s"])
-            & (F.col("sz_old") * 1_000_000 >= F.col("sz_new") * num)
-            & (F.col("sz_new") * 1_000_000 >= F.col("sz_old") * num)
-            & (F.col("sz_new") - F.col("pn") >= alpha)
-            & (F.col("sz_old") - F.col("po") >= alpha),
-        )
-        .select("id_new", "id_old")
-        .dropDuplicates(["id_new", "id_old"])
+        pref.join(inv, (F.col("a.s") == F.col("b.s")) & D._jaccard_filter(threshold))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
     a = sh_new.select(
-        F.col("id").alias("id_new"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a")
+        F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a")
     )
     b = sh_old.select(
-        F.col("id").alias("id_old"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b")
+        F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b")
     )
     # The corpus side is pinned shuffle-hash (never broadcastable — the
     # 125× replica OOM class; build = per-partition-bounded arrays, the
@@ -1317,16 +1201,12 @@ def incremental_pairs_vs_corpus(
     # partitioning, so no extra exchange. The NEW side stays unhinted
     # and unclustered on purpose: a micro-batch is trigger-bounded,
     # and broadcasting it is the intended streaming-ingest plan.
-    j = cands.join(a, "id_new").join(
-        D._cluster(b, D.scaled_join_partitions(sh_old), "id_old").hint("shuffle_hash"),
-        "id_old",
+    j = cands.join(a, "id_a").join(
+        D._cluster(b, D.scaled_join_partitions(sh_old), "id_b").hint("shuffle_hash"),
+        "id_b",
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_new", "id_old", "jaccard")
+    return D._with_jaccard(j, threshold).select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_old"), "jaccard"
     )
 
 

@@ -6,6 +6,7 @@ dimensions broadcast, top-k avoids global sort."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_engine_spark import matrix
@@ -114,12 +115,19 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
-def test_ngram_jaccard_never_cartesian(spark, sf_dir):
-    """The exact near-dup join must be a real equi-join on the shingle,
-    never an O(n²) product."""
-    df = matrix.QUERIES["x02_dedup_ngram_jaccard"](spark, sf_dir)
-    plan = _plan(df)
+@pytest.mark.parametrize(
+    "query", ["x02_dedup_ngram_jaccard", "x38_containment", "x54_incremental_dedup"]
+)
+def test_ngram_jaccard_never_cartesian(spark, sf_dir, query):
+    """Every prefix-join producer must be a real equi-join on the
+    shingle, never an O(n²) product, and no candidate or verify join
+    may broadcast (the 125× replica OOM class). The containment probe
+    explodes only its prefix slice, never the full array."""
+    plan = _plan(matrix.QUERIES[query](spark, sf_dir))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" not in plan
+    if query == "x38_containment":
+        assert "posexplode(slice(osh" in plan
 
 
 def test_salted_agg_two_phase(spark, sf_dir):
