@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import random
+import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -30,6 +31,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from sql_engine_spark.operators.text import tokens
+from sql_engine_spark.session import shuffle_partitions
 
 
 def exact_dedup(df: DataFrame, keys: list[str], tiebreak: str) -> DataFrame:
@@ -133,23 +135,17 @@ def scaled_join_partitions(df: DataFrame) -> "int | None":
     ``spark.sql.shuffle.partitions`` (e.g. ``"auto"`` on an
     AQE-managed platform) must NOT silently disable the scaling rule
     — that would reintroduce the 250× SHJ no-spill wall exactly where
-    it bites (ADVICE r14) — so the floor falls back to the cluster's
-    ``defaultParallelism`` instead of returning None."""
+    it bites (ADVICE r14) — so the floor is
+    :func:`~sql_engine_spark.session.shuffle_partitions`, which falls
+    back to the cluster's ``defaultParallelism``. Only when that is
+    unreadable too (Spark Connect) does the rule degrade to None:
+    unscaled, but working."""
     total = _input_bytes(df)
     if total is None:
         return None
-    try:
-        conf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        # The fallback gets its own guard (ADVICE r15): on a driver
-        # without a local SparkContext (Spark Connect — where conf.get
-        # can be the very call that raised) ``sparkContext`` itself
-        # throws, and the scaling rule must degrade to the pre-r15
-        # behavior — None, unscaled but working — not propagate.
-        try:
-            conf = int(df.sparkSession.sparkContext.defaultParallelism)
-        except Exception:
-            return None
+    conf = shuffle_partitions(df.sparkSession)
+    if conf is None:
+        return None
     n = total // _JOIN_PARTITION_INPUT_BYTES
     return int(n) if n > conf else None
 
@@ -186,6 +182,11 @@ _SHINGLE_INDEX: dict[tuple, DataFrame] = {}
 _PAIR_GRAPH: dict[tuple, DataFrame] = {}
 _ORDERED_INDEX: dict[tuple, DataFrame] = {}
 _SIG_MEMO: dict[tuple, DataFrame] = {}
+# One lock for all four memos, so two queries on one session build a
+# shared artifact once and never unpersist one the other is reading.
+# Re-entrant: a build may itself consult a memo (the pair graph's
+# build calls ordered_shingle_index, which calls _memo_persist).
+_MEMO_LOCK = threading.RLock()
 
 
 def _session_token(spark) -> object:
@@ -213,17 +214,18 @@ def _memo_persist(memo: dict, extra_key: tuple, df: DataFrame, build) -> DataFra
         ) + extra_key
     except Exception:
         key = None
-    if key is not None and key in memo:
-        return memo[key]
-    out = build().persist(StorageLevel.MEMORY_AND_DISK)
-    # Persisting hides the file scan from inputFiles(), so the join
-    # partition sizing (scaled_join_partitions) reads this stamp on
-    # memoized artifacts; an already-stamped input (index-of-index,
-    # e.g. ordered_shingle_index over shingle_index) passes through.
-    out._corpus_input_bytes = _input_bytes(df)
-    if key is not None:
-        memo[key] = out
-    return out
+    with _MEMO_LOCK:
+        if key is not None and key in memo:
+            return memo[key]
+        out = build().persist(StorageLevel.MEMORY_AND_DISK)
+        # Persisting hides the file scan from inputFiles(), so the join
+        # partition sizing (scaled_join_partitions) reads this stamp on
+        # memoized artifacts; an already-stamped input (index-of-index,
+        # e.g. ordered_shingle_index over shingle_index) passes through.
+        out._corpus_input_bytes = _input_bytes(df)
+        if key is not None:
+            memo[key] = out
+        return out
 
 
 def shingle_index(
@@ -256,18 +258,19 @@ def clear_shingle_index() -> None:
     """Unpersist and drop every memoized shingle index and pair graph
     (test/session hygiene; also the answer to the cache-entry-leak
     concern — the caches are explicit and collectively releasable)."""
-    for memo in (_SHINGLE_INDEX, _PAIR_GRAPH, _ORDERED_INDEX, _SIG_MEMO):
-        for cached in memo.values():
-            try:
-                # blocking: an async drop races with a re-persist of the
-                # SAME plan (the bench's clear-then-rebuild pattern) in
-                # the cache manager — measured 0.5–12.5 s swings on an
-                # otherwise-stable 0.5 s index build; blocking removal
-                # is deterministic.
-                cached.unpersist(blocking=True)
-            except Exception:
-                pass
-        memo.clear()
+    with _MEMO_LOCK:
+        for memo in (_SHINGLE_INDEX, _PAIR_GRAPH, _ORDERED_INDEX, _SIG_MEMO):
+            for cached in memo.values():
+                try:
+                    # blocking: an async drop races with a re-persist of
+                    # the SAME plan (the bench's clear-then-rebuild
+                    # pattern) in the cache manager — measured 0.5–12.5 s
+                    # swings on an otherwise-stable 0.5 s index build;
+                    # blocking removal is deterministic.
+                    cached.unpersist(blocking=True)
+                except Exception:
+                    pass
+            memo.clear()
 
 
 def shingles(text: Column | str, n: int = 3) -> Column:
@@ -973,20 +976,7 @@ def connected_components(
         return out.select(
             F.col("id").alias(id_col), F.coalesce("component", "id").alias("component")
         )
-    e = e.localCheckpoint()
-    # The iterative loop runs many tiny multi-stage jobs; size its
-    # shuffles to the session's core count for the duration (a
-    # production CC job sizes shuffle partitions to its edge volume),
-    # then restore. AQE coalesces data-wise either way — this cuts the
-    # per-round task-scheduling floor.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(max(2, spark.sparkContext.defaultParallelism))
-    )
-    try:
-        e = _ls_ss_fixpoint(e, max_iterations)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    e = _ls_ss_fixpoint(e.localCheckpoint(), max_iterations)
     labels = vertices.select(F.col(id_col).alias("id")).join(
         e.select(F.col("u").alias("id"), F.col("v").alias("component")), "id", "left"
     )

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sql_engine_spark.functions.vector import cosine_similarity, to_double_array
+from sql_engine_spark.session import shuffle_partitions
 
 ANN_PLANES = 16
 ANN_BANDS = 4
@@ -802,21 +803,6 @@ def _within_cluster_pairs(
     return assigned.groupBy("list_id").applyInPandas(mine, "id_a long, id_b long")
 
 
-def _shuffle_conf_partitions(session, default: int = 200) -> int:
-    """Parse ``spark.sql.shuffle.partitions`` defensively. Managed
-    platforms set non-numeric values ("auto" under Databricks AQE), so
-    try/int rather than isdigit(): benign '1024 ' / '2048\\n' parse,
-    non-ASCII digit codepoints don't (ADVICE r4/r5). Non-positive
-    values ("0", "-1") also fall back — repartition(n <= 0) raises, so
-    a degenerate conf must never flow through (ADVICE r6)."""
-    raw = str(session.conf.get("spark.sql.shuffle.partitions", str(default)))
-    try:
-        n = int(raw.strip())
-    except ValueError:
-        return default
-    return n if n > 0 else default
-
-
 def semantic_dedup(
     df: DataFrame,
     threshold: float = 0.4,
@@ -869,7 +855,7 @@ def semantic_dedup(
     # round-3 2.2× bench-spread syndrome. At 100 TB n_lists exceeds the
     # conf and multiple clusters share a task, which is the right
     # packing (per-cluster work is the parallelism unit either way).
-    n_parts = min(n_lists, _shuffle_conf_partitions(df.sparkSession))
+    n_parts = min(n_lists, shuffle_partitions(df.sparkSession) or n_lists)
     pairs = _within_cluster_pairs(assigned.repartition(n_parts, "list_id"), threshold)
     comp = connected_components(pairs, df, id_col=id_col)
     return comp.select(

@@ -35,6 +35,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sql_engine_spark.operators.dedup import ensure_parallelism
+
 # --- portable HDR-histogram quantile sketch (r9) ---------------------
 # Quantiles in the profile come from an integer HDR histogram (HDR
 # Histogram / DDSketch family: geometric octaves with linear
@@ -134,38 +136,6 @@ def _rank_from_w_sql(w: str, duck: bool = False) -> str:
     )
 
 
-def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Estimated scan-task count for ``df``: optimizer-stats size (the
-    column-pruned file-footer estimate — no job, no RDD conversion,
-    sub-ms once the file index is warm) over maxPartitionBytes. Used
-    only to decide whether a SMALL local input needs spreading, so the
-    cheap estimate beats the exact-but-slow rdd.getNumPartitions()
-    (which builds a Python RDD plan, ~0.5 s of driver time)."""
-    spark = df.sparkSession
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        max_pb = _parse_size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        return size // max(max_pb, 1) + 1
-    except Exception:  # pragma: no cover - private-API drift fallback
-        return df.rdd.getNumPartitions()
-
-
-_SIZE_SUFFIX = {
-    "": 1, "b": 1, "k": 1 << 10, "m": 1 << 20,
-    "g": 1 << 30, "t": 1 << 40, "p": 1 << 50,
-}
-
-
-def _parse_size_bytes(v: str) -> int:
-    """Spark byte-size conf string → bytes. Accepts every spelling
-    Spark does ('134217728b', '128m', '1g', '128MB', bare digits,
-    any case) — a human-set '128m' must not throw and silently send
-    the caller down the slow rdd fallback."""
-    s = str(v).strip().lower()
-    num = s.rstrip("kmgtpb")
-    return int(num) * _SIZE_SUFFIX[s[len(num):].rstrip("b")]
-
-
 def profile_table(
     df: DataFrame, numeric_cols: list[str], categorical_cols: list[str]
 ) -> DataFrame:
@@ -199,19 +169,9 @@ def profile_table(
         # join, no driver collect. Every arithmetic step is integer or
         # lut'd (module comments), so the whole branch replays
         # bit-exactly in the x29 DuckDB oracle (matrix/ext.py).
-        base = df.select(*dict.fromkeys(numeric_cols))
-        # The per-row md5 is the profile's compute floor; a 100 TB
-        # scan has thousands of input splits, but a small local file
-        # may have fewer than the session has cores — spread it (the
-        # guard keeps the repartition OUT of real at-scale plans).
-        # The natural split count is ESTIMATED from optimizer stats
-        # (pruned-size / maxPartitionBytes): rdd.getNumPartitions()
-        # would answer exactly but materializes a Python RDD plan,
-        # ~0.5 s of driver time per call (measured, r9).
-        if _estimated_scan_partitions(base) < (
-            par := df.sparkSession.sparkContext.defaultParallelism
-        ):
-            base = base.repartition(par)
+        # The per-row md5 is the profile's compute floor: spread a
+        # small input across the cores (a no-op at scale).
+        base = ensure_parallelism(df.select(*dict.fromkeys(numeric_cols)))
         # Columns travel as int ids through the hot path (string group
         # keys measurably slow the melted partial agg; names come
         # back via one element_at over the final handful of rows).

@@ -122,11 +122,41 @@ def rightsize_shuffle_partitions(spark: SparkSession) -> None:
     exchange (windows, sorts, streaming state — state partition counts
     freeze into checkpoints at first batch); on a real cluster the
     conf is always deliberate or AQE-managed and defaultParallelism is
-    cluster-sized, so this is a no-op/safe. Single shared copy — the
-    sentinel logic must not drift between the batch catalog and the
-    stream readers."""
+    cluster-sized, so this is a no-op/safe.
+
+    This is the ONLY place in the engine that writes
+    ``spark.sql.shuffle.partitions`` after the session is built: no
+    operator changes it for the length of a call, so a query planned
+    concurrently on the same session never sees a transient value.
+    The batch catalog and the stream readers share this one copy, so
+    the sentinel logic cannot drift between them."""
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         spark.conf.set(
             "spark.sql.shuffle.partitions",
             str(max(2, spark.sparkContext.defaultParallelism)),
         )
+
+
+def shuffle_partitions(spark: SparkSession) -> "int | None":
+    """The session's shuffle-partition count, read defensively — the
+    engine's one reader of ``spark.sql.shuffle.partitions``.
+
+    Managed platforms surface non-numeric values ("auto" under an
+    AQE-managed Databricks conf), so the value is parsed with
+    try/int rather than isdigit(): benign '1024 ' / '2048\\n' parse,
+    non-ASCII digit codepoints don't. Non-positive values ("0", "-1")
+    are rejected too — ``repartition(n <= 0)`` raises. Any value that
+    does not parse, or a ``conf.get`` that itself raises, falls back to
+    the cluster's ``defaultParallelism``. On a driver without a local
+    SparkContext (Spark Connect) that is unreadable as well, and the
+    answer is None: the caller keeps its own unscaled plan."""
+    try:
+        n = int(str(spark.conf.get("spark.sql.shuffle.partitions")).strip())
+        if n > 0:
+            return n
+    except Exception:
+        pass
+    try:
+        return int(spark.sparkContext.defaultParallelism)
+    except Exception:
+        return None

@@ -24,16 +24,3 @@ def show_stdout(df: DataFrame, n: int = 20) -> None:
     """Reference parity sink (sqlengine.py:237-241) — human-readable."""
     df.show(n, truncate=False)
 
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Line-delimited JSON — the interchange format for pipelines that
-    feed JS/Python tooling. Columnar parquet remains the scale format;
-    JSON is for small exports (no pushdown, no compression by default)."""
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC — the second columnar format Spark writes natively; same
-    pushdown/pruning properties as parquet (useful when downstream
-    consumers are Hive/Trino-first)."""
-    df.write.mode(mode).orc(path)

@@ -197,28 +197,24 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
 
     State-partition sizing: streaming state tasks are fixed at the
     FIRST micro-batch to ``spark.sql.shuffle.partitions`` (AQE never
-    coalesces streaming state), so a default-200 session pays 200
-    state-store tasks per micro-batch on a bounded verification run.
-    We pin the conf to the session's core count for the duration of
-    the run and restore it after — each call uses a fresh checkpoint,
-    so the choice is per-query, exactly how a production job would
-    size state partitions to its cluster."""
+    coalesces streaming state), so the count is the session's
+    ``spark.sql.shuffle.partitions``. ``session.get_spark`` and
+    :func:`read_events_stream` (through ``rightsize_shuffle_partitions``)
+    already set it to the core count, and a deliberate setting (such as
+    ``SPARK_GRAFT_SHUFFLE``) overrides that, as
+    ``rightsize_shuffle_partitions`` promises. The run changes no
+    session conf, so a query planned concurrently on the same session
+    is unaffected."""
     spark = stream_df.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(2, cores)))
-    try:
-        q = (
-            stream_df.writeStream.trigger(availableNow=True)
-            .outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = (
+        stream_df.writeStream.trigger(availableNow=True)
+        .outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    q.awaitTermination()
     return spark.table(name)
 
 

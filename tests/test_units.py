@@ -127,28 +127,21 @@ def test_resize_images_deterministic(spark, sf_dir):
 
 
 def test_io_round_trips_all_formats(spark, sf_dir, tmp_path):
-    """Every reader/writer pair preserves rows and schema: parquet, ORC,
-    CSV (schema-explicit), and line-delimited JSON."""
-    from sql_engine_spark.sources import io, sinks
+    """The exported writers preserve rows and schema: parquet, and CSV
+    read back with an explicit schema."""
+    from sql_engine_spark.sources import sinks
 
-    src = io.read_parquet(spark, f"{sf_dir}/nation.parquet")
+    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
     want = sorted(map(tuple, src.collect()))
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields)
 
     sinks.write_parquet(src, str(tmp_path / "p"))
-    assert sorted(map(tuple, io.read_parquet(spark, str(tmp_path / "p")).collect())) == want
-
-    sinks.write_orc(src, str(tmp_path / "o"))
-    assert sorted(map(tuple, io.read_orc(spark, str(tmp_path / "o")).collect())) == want
+    assert sorted(map(tuple, spark.read.parquet(str(tmp_path / "p")).collect())) == want
 
     sinks.write_csv(src, str(tmp_path / "c"))
-    got_csv = io.read_csv(spark, str(tmp_path / "c"), ddl)
+    got_csv = spark.read.schema(ddl).option("header", "true").csv(str(tmp_path / "c"))
     assert sorted(map(tuple, got_csv.collect())) == want
     assert got_csv.schema == src.schema
-
-    sinks.write_json(src, str(tmp_path / "j"))
-    got_json = io.read_json(spark, str(tmp_path / "j"), ddl)
-    assert sorted(map(tuple, got_json.collect())) == want
 
 
 def test_function_registry_sql_callable(spark, sf_dir):
@@ -894,34 +887,51 @@ def test_driver_sim_hard_fails_on_builder_failure(monkeypatch):
 
 
 def test_shuffle_conf_parse_is_defensive(spark):
-    """ADVICE r6: "0" / "-1" conf values must fall back to the default
-    (repartition(n <= 0) raises), alongside the r4/r5 non-numeric and
-    whitespace cases. Degenerate values are injected through a stub
-    session: local Spark validates conf.set("...partitions", "auto")
-    eagerly, but managed platforms DO surface such strings through
-    conf.get — the stub models that read path."""
-    from sql_engine_spark.operators.similarity import _shuffle_conf_partitions
+    """ADVICE r6: "0" / "-1" conf values must fall back (repartition(n
+    <= 0) raises), alongside the r4/r5 non-numeric and whitespace
+    cases. The fallback is the cluster's defaultParallelism; when that
+    is unreadable too (Spark Connect), the answer is None. Degenerate
+    values are injected through a stub session: local Spark validates
+    conf.set("...partitions", "auto") eagerly, but managed platforms
+    DO surface such strings through conf.get — the stub models that
+    read path."""
+    from sql_engine_spark.session import shuffle_partitions
+
+    class _Ctx:
+        defaultParallelism = 5
 
     class _Stub:
-        def __init__(self, raw):
+        def __init__(self, raw, ctx=_Ctx()):
             self.conf = self
+            self._raw = raw
+            self._ctx = ctx
 
         def get(self, key, default=None):
+            if isinstance(self._raw, Exception):
+                raise self._raw
             return self._raw
 
+        @property
+        def sparkContext(self):
+            if self._ctx is None:
+                raise RuntimeError("no SparkContext on a Connect driver")
+            return self._ctx
+
     for raw, want in [
-        ("auto", 200),
-        ("0", 200),
-        ("-1", 200),
+        ("auto", 5),
+        ("0", 5),
+        ("-1", 5),
         (" 1024 ", 1024),
         ("2048\n", 2048),
         ("7", 7),
+        (RuntimeError("conf.get unavailable"), 5),
     ]:
-        s = _Stub(raw)
-        s._raw = raw
-        assert _shuffle_conf_partitions(s) == want, raw
+        assert shuffle_partitions(_Stub(raw)) == want, raw
+    # neither the conf nor defaultParallelism is readable
+    assert shuffle_partitions(_Stub(RuntimeError("no conf"), ctx=None)) is None
+    assert shuffle_partitions(_Stub("auto", ctx=None)) is None
     # real-session sanity: the live conf (an int string) parses
-    assert _shuffle_conf_partitions(spark) > 0
+    assert shuffle_partitions(spark) == int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_png_stored_deflate_layout_and_multiblock_roundtrip():
