@@ -5,13 +5,14 @@ local[$SPARK_GRAFT_CPUS] and print ONE compact JSON line as the LAST
 stdout line (driver tail-capture safe); spreads, warmups, and
 ANN-recall operating points go to BENCH_DETAIL.json, never stdout.
 
-Methodology (round-2 upgrades per VERDICT.md): each query runs ONE
-discarded warmup, then $SPARK_GRAFT_BENCH_RUNS measured times
-(default 3); ``queries`` reports the MEDIAN, ``spread`` the
-[min, max], ``warmup`` the discarded first run. The measured action
-is a ``noop``-format write — a count() would let Spark prune every
-projection and under-measure wide outputs. ``recall`` tracks ANN
-recall@10 (x07 SRP-LSH, x18 IVF) vs the exact brute top-k (x06).
+Methodology: each query runs ONE discarded warmup, then
+$SPARK_GRAFT_BENCH_RUNS measured times (default 3; the BRACKETED
+queries run at least BRACKET_N); ``queries`` reports the MEDIAN,
+``spread`` the [min, max], ``warmup`` the discarded first run. The
+measured action is a ``noop``-format write — a count() would let Spark
+prune every projection and under-measure wide outputs. ``recall``
+tracks ANN recall@10 (x07 SRP-LSH, x18 IVF) vs the exact brute top-k
+(x06).
 
 Headline set: the TPC-H-style flagship plans, the heaviest Tier-X
 pipelines, the Arrow decode path, and a streaming window run — the
@@ -24,6 +25,7 @@ import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -68,41 +70,43 @@ BENCH_QUERIES = [
     "s01_stream_tumbling",
 ]
 
-# Per-query measured-run overrides (VERDICT r3 item 8): queries whose
-# driver medians drifted on untouched code get n=5 so BENCH_DETAIL's
-# spread brackets the median instead of leaving it to a 3-sample coin
-# flip. Per-query n is recorded in BENCH_DETAIL["n_runs"] so spread
-# comparisons across queries aren't read as one sample size (ADVICE r4).
-RUNS_OVERRIDE = {
-    "q1_pricing_summary": 5,  # VERDICT r8 #3: drifted to 0.736 [0.599,0.851] on untouched code (r7 0.443) — n=5 certifies drift vs regression
-    "q3_shipping_priority": 5,  # VERDICT r11 #1: the r11 driver's CERTIFIED (canary 1.02) window read q3 at median 1.22 s — 1.62× r10 and 1.6× the builder's same-HEAD certified window [0.661, 0.803] on untouched code. A single-query canary certifies the window, not each query's moment; q3 was the only flagship of its cost class without a standing n=5 bracket.
-    "q4_order_priority": 5,  # r13 window D: 1.278 [1.146, 1.802] inside a CERTIFIED (canary 1.16) window vs 0.645 solo minutes later — same I/O burst as q5 below; n=5 makes the slot flag-eligible
-    "q5_local_supplier_volume": 5,  # r13 window D: the largest certified-window drift on record — 6.283 [4.816, 7.218] (5.7× its 1.1–1.8 family) while the CPU-bound canary sat at its 0.164–0.190 floor; solo re-measure minutes later read 1.203 [1.171, 1.477]. An I/O-side burst the JVM canary is blind to hits the shuffle-heaviest 6-table join hardest; at n=3 the slot was ineligible for slot_contended() and shipped unflagged. n=5 closes that eligibility gap.
-    "q18_large_orders": 5,  # VERDICT r7 #4: most spread-prone flagship ([0.897,1.309] at n=3) — n=5 settles noise vs regression
-    "q21_waiting_supplier": 5,  # joined the set r11 — n=5 for a solid first standing bracket (the x18 precedent)
-    "x02_dedup_ngram_jaccard": 5,  # r13 join-strategy pins moved its family (1.5–1.9 → ~2.8–3.6); a standing bracket makes post-pin drift vs regression decidable
-    "x04_dedup_minhash_lsh": 5,  # r13 pins moved its family (1.5–1.6 → ~2.2–2.8) — standing bracket, same rationale as x02
-    "x06_sim_topk_brute": 5,  # VERDICT r9 #3: 1.70× n=3 spread in the driver run — n=5
-    "x12_text_fingerprint": 5,  # VERDICT r10 #4: canary-1.5 casualty (driver 1.24× on untouched code) — n=5 standing bracket
-    "x14_sessionize_batch": 5,  # VERDICT r10 #4: canary-1.5 casualty (driver 1.34× on untouched code) — n=5 standing bracket
-    "x18_sim_ivf": 5,  # VERDICT r9 #1: first standing bracket for the (now Arrow) IVF probe — n=5
-    "x29_sketch_profile": 5,
-    "x32_multimodal_decode": 5,  # VERDICT r7 #2: first longitudinal record of the Arrow decode path — n=5 for a solid first bracket
-    "x33_contamination": 5,
-    "x34_tfidf_topterms": 5,  # VERDICT r10 #4: canary-1.5 casualty (driver 1.33× on untouched code) — n=5 standing bracket
-    "x35_sequence_packing": 5,  # VERDICT r10 #4: canary-1.5 casualty (driver 1.42× on untouched code) — n=5 standing bracket
-    "x38_containment": 5,
-    "x43_bigram_rarity": 5,  # VERDICT r9 #3: 1.42× n=3 spread in the driver run — n=5
-    "x51_span_dups": 5,  # VERDICT r12 #2: largest unexplained r12 driver drift (1.008 s vs its 0.58–0.76 cross-round family, 1.67×) cleared only by judge-side certified evidence — standing bracket so adjudication lives in the record
-    "x54_incremental_dedup": 5,  # r13 pins moved its family (1.8–2.1 → window F 1.956 / window G 3.093 under host steal) — standing bracket decides the new level
-    "x56_chunk_dedup": 5,  # VERDICT r5 #5: 0.46→0.80 s driver drift on untouched code — n=5 decides noise vs real
-    "x58_weighted_sample": 5,  # VERDICT r9 #3: 1.77× n=3 spread in the driver run — n=5
-    "x59_semantic_dedup": 5,
-    "s01_stream_tumbling": 5,  # VERDICT r12 #2: bounced 1.0–1.7 s across r7–r12 with no bracket — micro-batch startup jitter needs n=5 to tell noise from regression
-}
+# Queries with a standing n=BRACKET_N bracket: their medians drifted on
+# untouched code, every TARGETS query is one, and a slot only
+# self-flags at n≥5 (slot_contended), so a 3-sample spread would leave
+# drift vs regression to a coin flip. Per-query n is recorded in
+# BENCH_DETAIL["n_runs"] so spreads are not read as one sample size.
+# Why each query joined: BASELINE.md.
+BRACKET_N = 5
+BRACKETED = frozenset({
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q4_order_priority",
+    "q5_local_supplier_volume",
+    "q18_large_orders",
+    "q21_waiting_supplier",
+    "x02_dedup_ngram_jaccard",
+    "x04_dedup_minhash_lsh",
+    "x06_sim_topk_brute",
+    "x12_text_fingerprint",
+    "x14_sessionize_batch",
+    "x18_sim_ivf",
+    "x29_sketch_profile",
+    "x32_multimodal_decode",
+    "x33_contamination",
+    "x34_tfidf_topterms",
+    "x35_sequence_packing",
+    "x38_containment",
+    "x43_bigram_rarity",
+    "x51_span_dups",
+    "x54_incremental_dedup",
+    "x56_chunk_dedup",
+    "x58_weighted_sample",
+    "x59_semantic_dedup",
+    "s01_stream_tumbling",
+})
 
 # Standing per-query ceilings (seconds, sf0.1): evaluated against the
-# MEDIAN of a CERTIFIED window at the slot's RUNS_OVERRIDE n. The
+# MEDIAN of a CERTIFIED window at the slot's bracketed n. The
 # adjudication rule every ceiling shares (SCALE.md): a certified median
 # above its ceiling with the slot's own intra-spread ≤ 1.35× is a real
 # regression; above 1.35× the slot self-flags and the solo recheck
@@ -126,24 +130,21 @@ TARGETS = {
 }
 
 
-# Contention canary (VERDICT r5 #1): the official BENCH number has
-# moved for non-code reasons (box contention inflating untouched
-# JVM-only plans 15–85%). A fixed JVM-only query — e08's DISTINCT
-# plan, unchanged since r1, zero Python — is timed at the START,
-# MIDPOINT, and END of the measured loop; max/min of the samples is
-# the run's contention spread, recorded in BENCH_DETAIL *and* on the
-# contract line ("canary_spread"). A flagged first pass triggers ONE
-# full re-measure; the cleaner-canary pass ships (both stay in detail).
+# Contention canary: box contention can inflate untouched JVM-only
+# plans 15–85%, so a fixed JVM-only query — e08's DISTINCT plan, zero
+# Python — is timed at the START, MIDPOINT, and END of the measured
+# loop; max/min of the samples is the run's contention spread,
+# recorded in BENCH_DETAIL *and* on the contract line
+# ("canary_spread"). A flagged first pass triggers ONE full
+# re-measure; the better-ranked pass ships (both stay in detail).
 CANARY_QUERY = "e08_distinct"
-# 1.3 → 1.2 in r10 (VERDICT r9 #3): BENCH_r09 shipped at spread 1.27 —
-# under the old rerun line yet uniformly ~1.2× inflated across
+# 1.2, not 1.3: a window at 1.27 was uniformly ~1.2× inflated across
 # untouched JVM-only queries, i.e. visibly contended. Runs in the
-# 1.2–1.3 band now buy the one re-measure instead of shipping.
+# 1.2–1.3 band buy the one re-measure instead of shipping.
 CANARY_CLEAN = 1.2
 
-# Steal-sensitive twin gate (VERDICT r14 #3: "promote the py canary
-# into the certification gate once it has a cross-round floor"). The
-# cross-round floor, recorded in SCALE.md "py-canary floor": min
+# Steal-sensitive twin gate. The cross-round floor, recorded in
+# SCALE.md "py-canary floor": min
 # samples 0.209 / 0.227 / 0.238 / 0.248 / 0.249 / 0.256 / 0.275
 # across the r14 driver window, r14 window B, and five r15 windows —
 # honest samples live in a 0.21–0.31 s absolute band (the r14
@@ -172,28 +173,26 @@ SLOT_SPREAD_LINE = 1.35
 
 def window_rank(spread: float, py_spread: float) -> tuple:
     """Rank one measured window for the re-measure pick — LOWER is
-    better. Gate outcome first (ADVICE r15): the old lexicographic
-    (spread, py_spread) compare could discard a window that passes
-    BOTH canary gates because its e08 spread was marginally higher
-    than a first window that FAILED the py gate (e.g. first 1.10/1.60
-    vs re-measure 1.12/1.25 kept the dirty first window — a false
-    uncertified verdict with a clean window in hand, defeating the
-    re-measure's whole purpose). Rank = (fails-any-gate, normalized
-    worst ratio max(spread/CANARY_CLEAN, py/PY_CANARY_CLEAN)): a
-    certifiable window beats any uncertifiable one, and within a
-    class the window closer to clean on its WORST gate wins."""
+    better. Gate outcome first: a lexicographic (spread, py_spread)
+    compare could discard a re-measure that passes BOTH canary gates
+    because its e08 spread is marginally higher than a first window
+    that FAILED the py gate (first 1.10/1.60 vs re-measure 1.12/1.25),
+    shipping a false uncertified verdict with a clean window in hand.
+    Rank = (fails-any-gate, normalized worst ratio
+    max(spread/CANARY_CLEAN, py/PY_CANARY_CLEAN)): a certifiable window
+    beats any uncertifiable one, and within a class the window closer
+    to clean on its WORST gate wins."""
     passes = spread <= CANARY_CLEAN and py_spread <= PY_CANARY_CLEAN
     return (not passes, max(spread / CANARY_CLEAN, py_spread / PY_CANARY_CLEAN))
 
 
 def targets_block(timings: dict, spread: dict) -> dict:
-    """The decidable-from-the-record target evaluation (VERDICT r13
-    #3): every standing ceiling with its measured median, slot spread,
-    and over/under verdict. ``over`` is None — an EXPLICIT unknown —
-    when the query was not measured this window: a bare False would
-    read as a pass to anyone applying the 1.35× rule from the record
-    (ADVICE r14). Only meaningful on a certified window (emit stamps
-    that verdict)."""
+    """The decidable-from-the-record target evaluation: every standing
+    ceiling with its measured median, slot spread, and over/under
+    verdict. ``over`` is None — an EXPLICIT unknown — when the query
+    was not measured this window: a bare False would read as a pass to
+    anyone applying the 1.35× rule from the record. Only meaningful on
+    a certified window (emit stamps that verdict)."""
     return {
         q: {
             "ceiling": TARGETS[q],
@@ -220,10 +219,8 @@ def slot_contended(spread: dict, n_by_query: dict) -> dict:
 
 
 def solo_recheck(flagged, run_fn, n: int = 5) -> dict:
-    """Resolution arm of the slot-contention flag (VERDICT r12 #1:
-    ``slot_contended()`` detects but does not resolve — every r12
-    incident needed a manual solo pass). Each flagged query is
-    re-measured SOLO after the main loop (nothing else has run for
+    """Resolution arm of the slot-contention flag: each flagged query
+    is re-measured SOLO after the main loop (nothing else has run for
     minutes; the contending co-tenant burst has passed) with n runs,
     and the solo bracket ships in BENCH_DETAIL["slot_recheck"] so
     adjudication is in the record, not a post-hoc session.
@@ -249,53 +246,29 @@ def solo_recheck(flagged, run_fn, n: int = 5) -> dict:
     return out
 
 
-def recheck_with_context(flagged, run_fn, canary_fn, n: int = 5) -> tuple:
-    """solo_recheck plus one min-of-2 canary sample taken right after
-    the rechecks (r13: window B's q1/x34 rechecks read resolved=False
-    with in-family medians because a sustained host burst SPANNED the
-    recheck — without canary context that record was ambiguous between
-    'recheck itself contended' and 'genuinely high-variance plan').
-    The sample ships as BENCH_DETAIL["slot_recheck_canary"]; a
-    resolved=False whose recheck canary sits well above the clean
-    floor adjudicates as a contended recheck, to be re-read in the
-    next clean window. None when nothing was flagged."""
+def recheck_with_context(flagged, run_fn, canary_fn, py_canary_fn, n: int = 5) -> tuple:
+    """solo_recheck plus one min-of-2 sample of each canary taken right
+    after the rechecks: a host burst that SPANS the recheck leaves
+    resolved=False with in-family medians, ambiguous between 'recheck
+    itself contended' and 'genuinely high-variance plan' without
+    context. The samples ship as BENCH_DETAIL["slot_recheck_canary"]
+    and ["slot_recheck_py_canary"]; a resolved=False whose e08 context
+    sits well above the clean floor adjudicates as a contended recheck,
+    and one whose e08 context is clean but whose py context is inflated
+    as non-JVM-path steal — either is re-read in the next clean window.
+    Returns (recheck, canary, py_canary); both samples are None when
+    nothing was flagged."""
     rec = solo_recheck(flagged, run_fn, n)
-    canary = round(min(canary_fn() for _ in range(2)), 3) if rec else None
-    return rec, canary
+    if not rec:
+        return rec, None, None
+    return rec, _min_of_2(canary_fn), _min_of_2(py_canary_fn)
 
 
-def _py_canary_once(spark) -> float:
-    """Steal-sensitive canary probe (VERDICT r13 #1c): one tiny
-    mapInPandas stage over 32 trivial partitions. The JVM-only e08
-    canary is a hot codegen loop — structurally blind to the cost
-    classes behind every unexplained certified-window reading on
-    record (q5's I/O burst r13-D; the window-C x-family inflation;
-    s01's 2.9 s r13 driver reading that re-read 1.375 in-bracket on
-    the same HEAD): Python worker spin-up, per-task scheduling of
-    many tiny tasks, and fork/exec page-cache pressure. This probe
-    pays exactly those costs and ~nothing else, so a window where
-    e08 sits at its floor while this spread blows out is adjudicated
-    as host steal on the non-JVM path, not regression. Coverage
-    caveat (ADVICE r14): ``spark.python.worker.reuse`` is on in the
-    session, so only the FIRST probe of a session pays worker
-    spin-up/fork-exec; later samples (and every min-of-2) measure
-    tiny-task scheduling plus the Arrow round-trip — still the
-    steal-sensitive path the JVM canary is blind to, but spin-up
-    itself is amortized away after sample one. All raw samples ship
-    in canary.py_samples so the un-amortized first reading stays
-    visible. Recorded as context in BENCH_DETAIL
-    (canary.py_samples/py_spread and beside each solo recheck)."""
-    t0 = time.perf_counter()
-    spark.range(0, 256, 1, 32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
-def _noop(df) -> None:
-    """Materialize every output column via a noop-format write — the
-    shared measured action for probes."""
-    df.write.format("noop").mode("overwrite").save()
+def _min_of_2(sample) -> float:
+    """Min of two ``sample()`` seconds, rounded: the detected signature
+    is SUSTAINED inflation, so one GC pause must not decide a canary or
+    probe reading."""
+    return round(min(sample() for _ in range(2)), 3)
 
 
 def _run_once(fn, spark, sf_dir: str) -> float:
@@ -313,59 +286,103 @@ def _run_once(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
+def _py_canary_once(spark) -> float:
+    """Steal-sensitive canary probe: one tiny mapInPandas stage over 32
+    trivial partitions. The JVM-only e08 canary is a hot codegen loop,
+    structurally blind to Python worker spin-up, per-task scheduling
+    of many tiny tasks, and fork/exec page-cache pressure — the cost
+    classes behind an I/O-side burst or s01-class jitter. This probe
+    pays exactly those costs and ~nothing else, so a window where e08
+    sits at its floor while this spread blows out is adjudicated as
+    host steal on the non-JVM path, not regression. Coverage caveat:
+    ``spark.python.worker.reuse`` is on in the session, so only the
+    FIRST probe of a session pays worker spin-up/fork-exec; later
+    samples (and every min-of-2) measure tiny-task scheduling plus the
+    Arrow round-trip. All raw samples ship in canary.py_samples so the
+    un-amortized first reading stays visible."""
+    return _run_once(
+        lambda s, _: s.range(0, 256, 1, 32).mapInPandas(lambda it: it, "id long"),
+        spark,
+        "",
+    )
+
+
+def _probe_s(op, df) -> float:
+    """Probe timing: min-of-2 seconds of ``op(df)`` through _run_once
+    (memos cleared, noop write)."""
+    return _min_of_2(lambda: _run_once(lambda *_: op(df), None, ""))
+
+
+def _stage(df, tmp: str, label: str):
+    """Write ``df`` as parquet under ``tmp`` and read it back, so a
+    probe times the operator over a file scan, not the build of its
+    input."""
+    path = os.path.join(tmp, label)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def _replica(docs, n: int):
+    """``n``× mutually non-duplicate replica of ``docs`` (doc_id, text)
+    from tools.replica_scale.replicate_table, in ``n`` partitions: one
+    file per replica's worth of rows once staged, as a corpus grown by
+    appending shards has. The file count decides whether
+    dedup.ensure_parallelism adds a repartition, so it is part of what
+    the growth probes measure."""
+    from tools.replica_scale import replicate_table
+
+    return replicate_table(docs, n, ["doc_id"], ["text"]).repartition(n)
+
+
+def _recall(corpus, qv: list, hammings: tuple, probes: tuple) -> dict:
+    """Recall@10 vs the exact brute top-10 on ``corpus`` for SRP at
+    each probe Hamming radius (with its scan fraction) and IVF at each
+    n_probe of 16 lists (with its probe fraction). Scan fractions count
+    rows passing the SEARCHER'S OWN band filter (srp_probe_condition —
+    a hand-rolled copy would drift)."""
+    from sql_engine_spark.operators import similarity as S
+
+    n_total = corpus.count()
+    truth = {r.vec_id for r in S.cosine_topk(corpus, qv, k=10, exclude_id=0).collect()}
+
+    def rec(df) -> float:
+        got = {r.vec_id for r in df.collect()}
+        return round(len(got & truth) / max(1, len(truth)), 3)
+
+    banded = S.with_srp_bands(corpus, len(qv))
+    out = {}
+    for h in hammings:
+        out[f"srp_h{h}"] = {
+            "recall_at_10": rec(S.ann_topk(corpus, qv, k=10, exclude_id=0, probe_hamming=h)),
+            "scan_frac": round(banded.filter(S.srp_probe_condition(qv, h)).count() / n_total, 3),
+        }
+    for p in probes:
+        out[f"ivf_p{p}"] = {
+            "recall_at_10": rec(S.ivf_topk(corpus, qv, k=10, exclude_id=0, n_probe=p)),
+            "probe_frac": round(p / 16, 3),
+        }
+    return out
+
+
 def _ann_recall(spark, sf_dir: str) -> dict:
     """Recall@10 of the ANN searchers vs exact brute force, at several
     operating points, each with its scan fraction — the whole tradeoff,
     not one number. This corpus is isotropic (true top-10 sits at cos
     ≈0.3–0.4, TESTDATA.md), so high recall necessarily costs a high
-    scan fraction; on a corpus with real near-neighbor structure the
-    same banding reaches it at a small fraction (see
-    tests/test_dedup_similarity.py for the planted-dup case)."""
+    scan fraction and banding recall is structurally capped.
+    ``planted`` is the same measurement on a corpus WITH true
+    near-neighbor structure — the actual near-dup-mining regime: 10
+    planted neighbors of the query at exact cosine 0.97 (orthogonal
+    decomposition, seeded) unioned into the corpus, where the same
+    banding must reach ≥0.9 recall at a small scan fraction."""
+    import numpy as np
 
     from sql_engine_spark.catalog import load_table
     from sql_engine_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_total = emb.count()
     qv = S.get_vector(emb, 0)
-    brute = {r.vec_id for r in S.cosine_topk(emb, qv, k=10, exclude_id=0).collect()}
-
-    def rec(df) -> float:
-        got = {r.vec_id for r in df.collect()}
-        return round(len(got & brute) / max(1, len(brute)), 3)
-
-    # SRP scan fractions: count rows passing the SEARCHER'S OWN band
-    # filter (srp_probe_condition — a hand-rolled copy would drift).
-    banded = S.with_srp_bands(emb, len(qv))
-    out = {}
-    for h in (0, 1, 2):
-        frac = round(
-            banded.filter(S.srp_probe_condition(qv, h)).count() / n_total, 3
-        )
-        out[f"srp_h{h}"] = {
-            "recall_at_10": rec(S.ann_topk(emb, qv, k=10, exclude_id=0, probe_hamming=h)),
-            "scan_frac": frac,
-        }
-    for p in (4, 12):
-        out[f"ivf_p{p}"] = {
-            "recall_at_10": rec(S.ivf_topk(emb, qv, k=10, exclude_id=0, n_probe=p)),
-            "probe_frac": round(p / 16, 3),
-        }
-    out["planted"] = _planted_recall(spark, emb, qv)
-    return out
-
-
-def _planted_recall(spark, emb, qv: list) -> dict:
-    """Recall on a corpus WITH true near-neighbor structure: 10 planted
-    neighbors of the query at exact cosine 0.97 (orthogonal
-    decomposition, seeded) unioned into the corpus. On the isotropic
-    base corpus the true top-10 sit at cos≈0.3 and banding recall is
-    structurally capped (BASELINE.md note); with planted dups — the
-    actual near-dup-mining regime — the same banding must reach ≥0.9
-    recall at a small scan fraction."""
-    import numpy as np
-
-    from sql_engine_spark.operators import similarity as S
+    out = _recall(emb, qv, hammings=(0, 1, 2), probes=(4, 12))
 
     q = np.asarray(qv, dtype=np.float64)
     q = q / np.linalg.norm(q)
@@ -377,127 +394,62 @@ def _planted_recall(spark, emb, qv: list) -> dict:
         u = u / np.linalg.norm(u)
         v = 0.97 * q + np.sqrt(1.0 - 0.97**2) * u
         rows.append((-(i + 1), [float(x) for x in v]))
-    planted_df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    union = emb.select("vec_id", "embedding").unionByName(planted_df)
-    n_total = union.count()
-    truth = {r.vec_id for r in S.cosine_topk(union, qv, k=10, exclude_id=0).collect()}
-
-    banded = S.with_srp_bands(union, len(qv))
-    out = {}
-    for h in (0, 1):
-        got = {
-            r.vec_id
-            for r in S.ann_topk(union, qv, k=10, exclude_id=0, probe_hamming=h).collect()
-        }
-        out[f"srp_h{h}"] = {
-            "recall_at_10": round(len(got & truth) / max(1, len(truth)), 3),
-            "scan_frac": round(
-                banded.filter(S.srp_probe_condition(qv, h)).count() / n_total, 3
-            ),
-        }
-    got_ivf = {r.vec_id for r in S.ivf_topk(union, qv, k=10, exclude_id=0, n_probe=4).collect()}
-    out["ivf_p4"] = {
-        "recall_at_10": round(len(got_ivf & truth) / max(1, len(truth)), 3),
-        "probe_frac": 0.25,
-    }
+    planted = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    union = emb.select("vec_id", "embedding").unionByName(planted)
+    out["planted"] = _recall(union, qv, hammings=(0, 1), probes=(4,))
     return out
 
 
-def _scale_probe(spark, sf_dir: str) -> dict:
-    """Dedup-family growth curve (VERDICT r2 item 8): the corpus tops
-    out at sf0.1, so synthesize 1× and 5× replications locally and
-    time the four dedup pipelines on each. Every token of replica k>0
-    gets a ``k`` suffix, so replicas are mutually NON-duplicate: dup
-    DENSITY stays constant while volume grows 5× — the regime where a
+def _scale_probe(spark, sf_dir: str, tmp: str) -> dict:
+    """Dedup-family growth curve: the corpus tops out at sf0.1, so
+    synthesize 1× and 5× replicas (tools.replica_scale.replicate_table:
+    every token of replica k>0 is suffixed, so replicas are mutually
+    NON-duplicate) and time the dedup pipelines on each. Dup DENSITY
+    stays constant while volume grows 5× — the regime where a
     banded/prefix-filtered path must grow near-linearly and a
     candidate-quadratic one blows up. Reported time is min-of-2 (noise
     floor); ``growth`` is the x5/x1 ratio per op."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from sql_engine_spark.catalog import load_table
     from sql_engine_spark.operators import dedup as D
     from sql_engine_spark.operators import pipeline as P
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="sql_engine_scale_probe_")
-
-    def replicate(n: int, path: str) -> None:
-        reps = [
-            docs.select(
-                (F.col("doc_id") + F.lit(k * 100_000_000)).alias("doc_id"),
-                (
-                    F.regexp_replace("text", r"(\S+)", f"$1{k}") if k else F.col("text")
-                ).alias("text"),
-            )
-            for k in range(n)
-        ]
-        out = reps[0]
-        for r in reps[1:]:
-            out = out.unionByName(r)
-        out.write.mode("overwrite").parquet(path)
-
-    noop = _noop
     ops = {
-        "x02_jaccard": lambda df: noop(D.ngram_jaccard_pairs(df)),
-        "x04_minhash": lambda df: noop(D.minhash_lsh_pairs(df)),
-        "x38_containment": lambda df: noop(P.containment_pairs(df, threshold=0.6)),
+        "x02_jaccard": D.ngram_jaccard_pairs,
+        "x04_minhash": D.minhash_lsh_pairs,
+        "x38_containment": lambda df: P.containment_pairs(df, threshold=0.6),
         # includes pair generation — the full dedup→canonicalize pipeline
-        "x20_components": lambda df: noop(
-            D.connected_components(D.ngram_jaccard_pairs(df), df)
-        ),
+        "x20_components": lambda df: D.connected_components(D.ngram_jaccard_pairs(df), df),
         # corpus-rewriting dedup: keep-first min-struct agg + per-doc rebuild
-        "x56_chunk_dedup": lambda df: noop(P.chunk_dedup(df)),
-        # incremental ingest dedup (VERDICT r9 #2): the new batch
-        # (doc_id%10==0) probes the corpus index one-sided; under this
-        # protocol batch and corpus both grow k×, so a healthy probe
-        # grows ~linearly (~k×) — growth tracking batch×corpus
-        # (≈k²×) would falsify the one-sided claim.
-        "x54_incremental_dedup": lambda df: noop(
-            P.incremental_jaccard_pairs(df, threshold=0.8, new_mod=10)
+        "x56_chunk_dedup": P.chunk_dedup,
+        # incremental ingest dedup: the new batch (doc_id%10==0) probes
+        # the corpus index one-sided; batch and corpus both grow k×, so
+        # a healthy probe grows ~linearly (~k×) — growth tracking
+        # batch×corpus (≈k²×) would falsify the one-sided claim.
+        "x54_incremental_dedup": lambda df: P.incremental_jaccard_pairs(
+            df, threshold=0.8, new_mod=10
         ),
     }
-
     probe: dict = {}
-    try:
-        for scale, n in (("x1", 1), ("x5", 5)):
-            path = os.path.join(base, scale)
-            replicate(n, path)
-            df = spark.read.parquet(path)
-            block = {}
-            for name, op in ops.items():
-                runs = []
-                for _ in range(2):
-                    from sql_engine_spark.operators.dedup import clear_shingle_index
-
-                    clear_shingle_index()
-                    t0 = time.perf_counter()
-                    op(df)
-                    runs.append(time.perf_counter() - t0)
-                block[name] = round(min(runs), 3)
-                print(f"# scale_probe {scale} {name}: {block[name]}s", file=sys.stderr)
-            probe[scale] = block
-        probe["growth_x5_over_x1"] = {
-            name: round(probe["x5"][name] / max(probe["x1"][name], 1e-9), 2) for name in ops
-        }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    for n in (1, 5):
+        df = _stage(_replica(docs, n), tmp, f"x{n}")
+        probe[f"x{n}"] = {name: _probe_s(op, df) for name, op in ops.items()}
+        print(f"# scale_probe x{n}: {probe[f'x{n}']}", file=sys.stderr)
+    probe["growth_x5_over_x1"] = {
+        name: round(probe["x5"][name] / max(probe["x1"][name], 1e-9), 2) for name in ops
+    }
     return probe
 
 
-def _skew_probe(spark, sf_dir: str) -> dict:
-    """Skewed-source probe (VERDICT r4 #7): the per-source window
-    family (x46 cap, x47 token budget, x52 stratified quality, x58
-    weighted sample) timed on a 20×-replicated corpus under two source
-    assignments — uniform (64 even sources) vs 90%-one-source — the
-    regime where a naive per-source window sort becomes one straggler
-    task. Reported per op: min-of-2 seconds for each variant plus the
-    skewed/uniform ratio (target ≤2× after the r5 de-skew rewrites)."""
-    import shutil
-    import tempfile
-
+def _skew_probe(spark, sf_dir: str, tmp: str) -> dict:
+    """Skewed-source probe: the per-source window family (x46 cap, x47
+    token budget, x52 stratified quality, x58 weighted sample) timed on
+    a 20×-replicated corpus under two source assignments — uniform (64
+    even sources) vs 90%-one-source — the regime where a naive
+    per-source window sort becomes one straggler task. The replicas are
+    verbatim clones with interleaved ids (doc_id·20 + k), which the
+    source assignment reads. Reported per op: min-of-2 seconds for each
+    variant plus the skewed/uniform ratio (target ≤2×)."""
     from pyspark.sql import functions as F
 
     from sql_engine_spark.catalog import load_table
@@ -511,134 +463,86 @@ def _skew_probe(spark, sf_dir: str) -> dict:
         "uniform": "concat('s', pmod(doc_id, 64))",
         "skewed": "CASE WHEN pmod(doc_id, 10) < 9 THEN 'hot' ELSE concat('s', pmod(doc_id, 64)) END",
     }
-    noop = _noop
-    ops = {
-        "x46_source_cap": lambda df: noop(P.cap_per_source(df, 500)),
-        "x47_token_budget": lambda df: noop(P.token_budget_subset(df, 50_000)),
-        "x52_quality_stratified": lambda df: noop(P.quality_stratified(df, keep_frac=0.5)),
-        "x58_weighted_sample": lambda df: noop(P.weighted_priority_sample(df, k=100)),
+    frames = {
+        label: _stage(rep.withColumn("source", F.expr(src)), tmp, label)
+        for label, src in variants.items()
     }
-    base = tempfile.mkdtemp(prefix="sql_engine_skew_probe_")
+    ops = {
+        "x46_source_cap": lambda df: P.cap_per_source(df, 500),
+        "x47_token_budget": lambda df: P.token_budget_subset(df, 50_000),
+        "x52_quality_stratified": lambda df: P.quality_stratified(df, keep_frac=0.5),
+        "x58_weighted_sample": lambda df: P.weighted_priority_sample(df, k=100),
+    }
     probe: dict = {}
-    try:
-        frames = {}
-        for label, src in variants.items():
-            path = os.path.join(base, label)
-            rep.withColumn("source", F.expr(src)).write.mode("overwrite").parquet(path)
-            frames[label] = spark.read.parquet(path)
-        for name, op in ops.items():
-            block = {}
-            for label, df in frames.items():
-                runs = []
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    op(df)
-                    runs.append(time.perf_counter() - t0)
-                block[label] = round(min(runs), 3)
-            block["ratio"] = round(block["skewed"] / max(block["uniform"], 1e-9), 2)
-            print(f"# skew_probe {name}: {block}", file=sys.stderr)
-            probe[name] = block
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    for name, op in ops.items():
+        block = {label: _probe_s(op, df) for label, df in frames.items()}
+        block["ratio"] = round(block["skewed"] / max(block["uniform"], 1e-9), 2)
+        print(f"# skew_probe {name}: {block}", file=sys.stderr)
+        probe[name] = block
     return probe
 
 
-def _pair_skew_probe(spark, sf_dir: str) -> dict:
-    """Pair-key (probe-key) skew probe (VERDICT r16 #4): since r16
-    every dedup-family candidate producer ships its RAW candidate
-    pairs across ONE hash(id_a) exchange (dedup._cluster_always), so
-    a "hub" document with a large near-dup set concentrates its pairs
-    on one partition. The hazard is bounded by construction — key
-    id_a=h carries at most one pair per partner, never the quadratic
-    clique total (pairs (a,b) with a<b spread id_a across all clique
-    members) — but the bound is data-dependent, so measure it: x02 on
-    a 5×-replicated corpus (mutually non-duplicate replicas, the
-    _scale_probe recipe), uniform vs the same corpus with every
-    ``doc_id % 50 == 7`` doc replaced by one identical text (a planted
-    clique, triangular id_a distribution — the worst planted hub this
-    corpus admits). Reported per variant: min-of-2 seconds +
+def _pair_skew_probe(spark, sf_dir: str, tmp: str) -> dict:
+    """Pair-key (probe-key) skew probe: every dedup-family candidate
+    producer ships its RAW candidate pairs across ONE hash(id_a)
+    exchange (dedup._cluster_always), so a "hub" document with a large
+    near-dup set concentrates its pairs on one partition. The hazard is
+    bounded by construction — key id_a=h carries at most one pair per
+    partner, never the quadratic clique total (pairs (a,b) with a<b
+    spread id_a across all clique members) — but the bound is
+    data-dependent, so measure it: x02 on the _scale_probe 5× replica,
+    uniform vs the same corpus with every ``doc_id % 50 == 7`` doc
+    replaced by one identical text (a planted clique, triangular id_a
+    distribution — the worst planted hub this corpus admits; the
+    replica id offset is a multiple of 50, so every replica plants the
+    same share). Reported per variant: min-of-2 seconds +
     clique/uniform ratio, plus the clique size counted from the data
     (``hub_docs``, c) and its c·(c−1)/2 true pairs (``hub_pairs``).
     NOTE the ratio also prices those extra TRUE pairs the uniform
     corpus lacks (candidate join, verify, dedup all grow), so it is
     an UPPER bound on the partition-skew cost, not a pure skew
     reading; the standing line is the skewed-source family's ≤2×."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from sql_engine_spark.catalog import load_table
     from sql_engine_spark.operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    reps = [
-        docs.select(
-            (F.col("doc_id") + F.lit(k * 100_000_000)).alias("doc_id"),
-            (
-                F.regexp_replace("text", r"(\S+)", f"$1{k}") if k else F.col("text")
-            ).alias("text"),
-        )
-        for k in range(5)
-    ]
-    rep = reps[0]
-    for r in reps[1:]:
-        rep = rep.unionByName(r)
+    rep = _replica(docs, 5)
     hub_text = " ".join(f"hubtok{i}" for i in range(60))
     is_hub = F.col("doc_id") % 50 == 7
-    variants = {
-        "uniform": rep,
-        "hub": rep.select(
-            "doc_id",
-            F.when(is_hub, F.lit(hub_text))
-            .otherwise(F.col("text"))
-            .alias("text"),
+    frames = {
+        "uniform": _stage(rep, tmp, "pair_uniform"),
+        "hub": _stage(
+            rep.select("doc_id", F.when(is_hub, F.lit(hub_text)).otherwise(F.col("text")).alias("text")),
+            tmp,
+            "pair_hub",
         ),
     }
-    base = tempfile.mkdtemp(prefix="sql_engine_pair_skew_")
-    block: dict = {}
-    try:
-        for label, df in variants.items():
-            path = os.path.join(base, label)
-            df.write.mode("overwrite").parquet(path)
-            frame = spark.read.parquet(path)
-            runs = []
-            for _ in range(2):
-                from sql_engine_spark.operators.dedup import clear_shingle_index
-
-                clear_shingle_index()
-                t0 = time.perf_counter()
-                _noop(D.ngram_jaccard_pairs(frame))
-                runs.append(time.perf_counter() - t0)
-            block[label] = round(min(runs), 3)
-        block["ratio"] = round(block["hub"] / max(block["uniform"], 1e-9), 2)
-        c = spark.read.parquet(os.path.join(base, "hub")).filter(is_hub).count()
-        block["hub_docs"] = c
-        block["hub_pairs"] = c * (c - 1) // 2
-        print(f"# pair_skew_probe: {block}", file=sys.stderr)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    block = {label: _probe_s(D.ngram_jaccard_pairs, df) for label, df in frames.items()}
+    block["ratio"] = round(block["hub"] / max(block["uniform"], 1e-9), 2)
+    c = frames["hub"].filter(is_hub).count()
+    block["hub_docs"] = c
+    block["hub_pairs"] = c * (c - 1) // 2
+    print(f"# pair_skew_probe: {block}", file=sys.stderr)
     return block
 
 
 def _measure(spark, sf_dir: str, n_runs: int):
-    """One full measured pass over BENCH_QUERIES, with the contention
-    canary sampled at start / midpoint / end. Returns (timings, spread,
-    warmup, n_by_query, canary)."""
+    """One full measured pass over BENCH_QUERIES, with both canaries
+    sampled (min-of-2 each) at start / midpoint / end. Returns
+    (timings, spread, warmup, n_by_query, canary)."""
     from sql_engine_spark import matrix
 
     canary_fn = matrix.QUERIES[CANARY_QUERY]
+    samples: list[float] = []
+    py_samples: list[float] = []
 
-    def canary_sample() -> float:
-        # min-of-2: the detected signature is SUSTAINED inflation, not
-        # a single GC blip — one 50 ms pause must not flag a clean run.
-        return round(min(_run_once(canary_fn, spark, sf_dir) for _ in range(2)), 3)
+    def sample_canaries() -> None:
+        samples.append(_min_of_2(lambda: _run_once(canary_fn, spark, sf_dir)))
+        py_samples.append(_min_of_2(lambda: _py_canary_once(spark)))
 
-    def py_canary_sample() -> float:
-        return round(min(_py_canary_once(spark) for _ in range(2)), 3)
-
-    samples = [canary_sample()]
-    py_samples = [py_canary_sample()]
+    sample_canaries()
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     warmup: dict[str, float] = {}
@@ -646,11 +550,10 @@ def _measure(spark, sf_dir: str, n_runs: int):
     mid = len(BENCH_QUERIES) // 2
     for i, name in enumerate(BENCH_QUERIES):
         if i == mid:
-            samples.append(canary_sample())
-            py_samples.append(py_canary_sample())
+            sample_canaries()
         fn = matrix.QUERIES[name]
         warmup[name] = round(_run_once(fn, spark, sf_dir), 3)
-        n_q = max(n_runs, RUNS_OVERRIDE.get(name, 0))
+        n_q = max(n_runs, BRACKET_N if name in BRACKETED else 0)
         n_by_query[name] = n_q
         runs = [_run_once(fn, spark, sf_dir) for _ in range(n_q)]
         timings[name] = round(statistics.median(runs), 3)
@@ -660,8 +563,7 @@ def _measure(spark, sf_dir: str, n_runs: int):
             f"{spread[name]} (warmup {warmup[name]:.3f}s)",
             file=sys.stderr,
         )
-    samples.append(canary_sample())
-    py_samples.append(py_canary_sample())
+    sample_canaries()
     canary = {
         "query": CANARY_QUERY,
         "samples": samples,
@@ -694,8 +596,8 @@ def main() -> None:
     timings, spread, warmup, n_by_query, canary = _measure(spark, sf_dir, n_runs)
     canaries = [canary]
     # Either gate over the line buys the one re-measure: a clean-e08 /
-    # dirty-py first pass is non-JVM-path steal (the s01-r13 class)
-    # and is just as uncertifiable as a dirty-e08 pass.
+    # dirty-py first pass is non-JVM-path steal and is just as
+    # uncertifiable as a dirty-e08 pass.
     if canary["spread"] > CANARY_CLEAN or canary["py_spread"] > PY_CANARY_CLEAN:
         print(
             f"# canary spread {canary['spread']} (clean ≤ {CANARY_CLEAN}) / "
@@ -705,34 +607,29 @@ def main() -> None:
         )
         t2 = _measure(spark, sf_dir, n_runs)
         canaries.append(t2[4])
-        # Gate-outcome-first pick (ADVICE r15): a re-measure that
-        # passes both gates ships even if its e08 spread is nominally
-        # higher than the dirty first window's.
+        # Gate-outcome-first pick: a re-measure that passes both gates
+        # ships even if its e08 spread is nominally higher than the
+        # dirty first window's.
         if window_rank(t2[4]["spread"], t2[4]["py_spread"]) < window_rank(
             canary["spread"], canary["py_spread"]
         ):
             timings, spread, warmup, n_by_query, canary = t2
 
-    # Slot-contention resolution (VERDICT r12 #1): any query whose own
-    # n≥5 bracket self-flagged gets an immediate solo re-measure — the
-    # main loop is over, so the slot's co-tenant burst (GC, page cache
-    # churn from a neighboring query) is gone; the solo bracket is the
-    # adjudication.
+    # Slot-contention resolution: any query whose own n≥5 bracket
+    # self-flagged gets an immediate solo re-measure — the main loop is
+    # over, so the slot's co-tenant burst (GC, page cache churn from a
+    # neighboring query) is gone; the solo bracket is the adjudication.
     flags = slot_contended(spread, n_by_query)
-    recheck, recheck_canary, recheck_py = {}, None, None
+    recheck, recheck_canary, recheck_py = recheck_with_context(
+        flags,
+        lambda name: _run_once(matrix.QUERIES[name], spark, sf_dir),
+        lambda: _run_once(matrix.QUERIES[CANARY_QUERY], spark, sf_dir),
+        lambda: _py_canary_once(spark),
+    )
     if flags:
-        print(f"# slot_contended {flags} — solo re-measuring", file=sys.stderr)
-        recheck, recheck_canary = recheck_with_context(
-            flags,
-            lambda name: _run_once(matrix.QUERIES[name], spark, sf_dir),
-            lambda: _run_once(matrix.QUERIES[CANARY_QUERY], spark, sf_dir),
-        )
-        # Steal-sensitive twin of the recheck canary: a resolved=False
-        # whose e08 context is clean but whose py context is inflated
-        # adjudicates as non-JVM-path steal (the s01-r13 class).
-        recheck_py = round(min(_py_canary_once(spark) for _ in range(2)), 3)
         print(
-            f"# slot_recheck (canary {recheck_canary}, py {recheck_py}): {recheck}",
+            f"# slot_contended {flags} — solo recheck (canary {recheck_canary}, "
+            f"py {recheck_py}): {recheck}",
             file=sys.stderr,
         )
 
@@ -741,14 +638,12 @@ def main() -> None:
     print(f"# recall@10: {recall}", file=sys.stderr)
 
     # Dedup growth curve at 5× data (skippable for quick local runs).
-    scale_probe = (
-        _scale_probe(spark, sf_dir)
-        if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
-        else {}
-    )
-    if scale_probe:
-        scale_probe["skewed_source"] = _skew_probe(spark, sf_dir)
-        scale_probe["pair_hub"] = _pair_skew_probe(spark, sf_dir)
+    scale_probe: dict = {}
+    if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0":
+        with tempfile.TemporaryDirectory(prefix="sql_engine_probe_", ignore_cleanup_errors=True) as tmp:
+            scale_probe = _scale_probe(spark, sf_dir, tmp)
+            scale_probe["skewed_source"] = _skew_probe(spark, sf_dir, tmp)
+            scale_probe["pair_hub"] = _pair_skew_probe(spark, sf_dir, tmp)
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
     try:
@@ -765,61 +660,37 @@ def main() -> None:
         "canary": canary,
         "canary_all_passes": canaries,
         "canary_rerun": len(canaries) > 1,
-        # "certified" (VERDICT r10 #3) is stamped by emit() on BOTH the
-        # contract line and this detail dict from ONE expression, so
-        # the two records cannot drift (ADVICE r11).
+        # "certified" is stamped by emit() on BOTH the contract line
+        # and this detail dict from ONE expression, so the two records
+        # cannot drift.
         "slot_contended": flags,
         "slot_recheck": recheck,
         "slot_recheck_canary": recheck_canary,
         "slot_recheck_py_canary": recheck_py,
-        # Decidable-from-the-record target evaluation (VERDICT r13 #3):
-        # every standing ceiling with the measured median, its slot
+        # Every standing ceiling with the measured median, its slot
         # spread, and the flag state — a reader applies the 1.35× rule
-        # without cross-referencing BASELINE.md. Only meaningful on a
-        # certified window (emit stamps that verdict).
+        # without cross-referencing BASELINE.md.
         "targets": targets_block(timings, spread),
         "recall": recall,
         "scale_probe": scale_probe,
     }
-    emit(
-        timings,
-        sf_val,
-        detail,
-        canary_spread=canary["spread"],
-        py_spread=canary["py_spread"],
-    )
+    emit(timings, sf_val, detail, canary["spread"], canary["py_spread"])
 
 
-def emit(
-    timings: dict,
-    sf_val,
-    detail: dict,
-    canary_spread: float | None = None,
-    py_spread: float | None = None,
-) -> str:
+def emit(timings: dict, sf_val, detail: dict, canary_spread: float, py_spread: float) -> str:
     """Write the detail sidecar and print the compact driver-contract
     JSON as the LAST stdout line. Returns the line (for tests).
-    Detail goes to BENCH_DETAIL.json + stderr, NOT the stdout line
-    (BENCH_r02 was lost when the one JSON line outgrew the driver's
-    tail capture); the contract line carries only metric/value/unit/
-    queries/sf + "canary_spread" and its verdict "certified"
-    (VERDICT r5 #1 + r10 #3 — per-query targets are not evaluated on
-    an uncertified run)."""
+    Detail goes to BENCH_DETAIL.json + stderr, NOT the stdout line: a
+    line that outgrows the driver's tail capture is lost. The contract
+    line carries only metric/value/unit/queries/sf, both canary
+    spreads, and their verdict "certified" — per-query targets are not
+    evaluated on an uncertified run."""
     # The certified verdict is computed HERE, once, and stamped on both
-    # records (ADVICE r11: two independent evaluations of the threshold
-    # could drift apart when the clean line moves, as it did in r10).
-    # Since r15 BOTH canaries gate (VERDICT r14 #3): e08 for the JVM
-    # codegen path, the mapInPandas twin for the tiny-task/Python-worker
-    # path e08 is structurally blind to. py_spread=None (old callers,
-    # unit fixtures) gates on e08 alone.
-    certified = (
-        None
-        if canary_spread is None
-        else canary_spread <= CANARY_CLEAN
-        and (py_spread is None or py_spread <= PY_CANARY_CLEAN)
-    )
-    if certified is not None:
-        detail = {**detail, "certified": certified}
+    # records, so the two cannot drift apart when a clean line moves.
+    # BOTH canaries gate: e08 for the JVM codegen path, the mapInPandas
+    # twin for the tiny-task/Python-worker path e08 is blind to.
+    certified = canary_spread <= CANARY_CLEAN and py_spread <= PY_CANARY_CLEAN
+    detail = {**detail, "certified": certified}
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
@@ -827,22 +698,19 @@ def emit(
         json.dump(detail, f, indent=1, sort_keys=True)
     print(f"# detail -> {detail_path}", file=sys.stderr)
 
-    payload = {
+    line = json.dumps({
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-    }
-    if canary_spread is not None:
-        payload["canary_spread"] = canary_spread
-        if py_spread is not None:
-            payload["py_canary_spread"] = py_spread
-        # One bool a reader can trust without knowing the clean line's
-        # current value (it moved 1.3→1.2 in r10): False = contended
-        # window, do NOT read per-query deltas as regressions.
-        payload["certified"] = certified
-    line = json.dumps(payload)
+        "canary_spread": canary_spread,
+        "py_canary_spread": py_spread,
+        # One bool a reader can trust without knowing the clean lines'
+        # current values: False = contended window, do NOT read
+        # per-query deltas as regressions.
+        "certified": certified,
+    })
     print(line, flush=True)
     return line
 

@@ -189,26 +189,19 @@ _SIG_MEMO: dict[tuple, DataFrame] = {}
 _MEMO_LOCK = threading.RLock()
 
 
-def _session_token(spark) -> object:
-    """Stable memo key for a session. ``id(sparkSession)`` can be
-    REUSED by a new session after the old one is garbage-collected,
-    which would hand back persisted DataFrames bound to a dead session;
-    the JVM session UUID is unique per session lifetime."""
-    try:
-        return spark._jsparkSession.sessionUUID()
-    except Exception:
-        return id(spark)
-
-
 def _memo_persist(memo: dict, extra_key: tuple, df: DataFrame, build) -> DataFrame:
     """Memoized ``build()`` result, persisted MEMORY_AND_DISK, keyed by
-    (session, input plan semantic hash, schema, *extra_key). The schema
-    joins the key so a 32-bit semanticHash collision between different
-    corpora cannot silently alias them. Plans without a semantic hash
-    build uncached (still persisted-free, correct)."""
+    (JVM session UUID, input plan semantic hash, schema, *extra_key).
+    The UUID is unique per session lifetime; ``id(sparkSession)`` is
+    not a key, because a new session can reuse it after the old one is
+    garbage-collected and be handed DataFrames bound to a dead session.
+    The schema joins the key so a 32-bit semanticHash collision between
+    different corpora cannot silently alias them. A session without a
+    readable UUID, or a plan without a semantic hash, builds uncached
+    (still persisted, correct)."""
     try:
         key = (
-            _session_token(df.sparkSession),
+            df.sparkSession._jsparkSession.sessionUUID(),
             df.semanticHash(),
             df.schema.simpleString(),
         ) + extra_key

@@ -9,17 +9,17 @@ Batch-invariance: each new document is probed INDEPENDENTLY against
 the static corpus, so the unioned per-batch outputs equal the one-shot
 batch computation regardless of how the stream was chopped into
 micro-batches (pytest-pinned against ``incremental_jaccard_pairs``).
-The per-batch writer reuses the exactly-once ``__batch_id`` dynamic
-partition overwrite of ``stream_to_parquet_exactly_once``, so a
+The per-batch writer is the exactly-once ``__batch_id`` dynamic
+partition overwrite of ``windows._write_batch_partition``, so a
 replayed batch overwrites itself instead of duplicating pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sql_engine_spark.session import rightsize_shuffle_partitions
+from sql_engine_spark.streaming.windows import _write_batch_partition
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -72,18 +72,7 @@ def stream_incremental_dedup(
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = incremental_pairs_vs_corpus(batch_df, corpus_df, n=n, threshold=threshold)
-        # Dynamic overwrite as a WRITE option (it takes precedence over
-        # the session conf): a static overwrite would wipe every earlier
-        # batch's partition, and a session-conf toggle would leak into
-        # any plan running on the session meanwhile (same pattern as
-        # windows.stream_to_parquet_exactly_once).
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
-        )
+        _write_batch_partition(pairs, batch_id, out_path)
 
     q = (
         new_docs_stream.writeStream.trigger(availableNow=True)

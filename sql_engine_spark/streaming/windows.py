@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -263,36 +264,41 @@ def interval_join(
     ).select("click_id", "view_id", "user_id", "click_ts", "view_ts")
 
 
+def _write_batch_partition(batch_df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one micro-batch into its own ``__batch_id`` partition of
+    the parquet dataset at ``path`` with dynamic partition overwrite,
+    so a replayed batch (failure between sink commit and checkpoint
+    commit — the at-least-once window every foreachBatch sink has)
+    OVERWRITES its own partition instead of appending duplicates. The
+    overwrite mode is a per-write option: a static overwrite would wipe
+    every earlier batch's partition, and a session-conf toggle would
+    leak into every other plan on the session (and would not reach the
+    session clone foreachBatch hands the batch to)."""
+    (
+        batch_df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(path)
+    )
+
+
 def stream_to_parquet_exactly_once(
     stream_df: DataFrame, path: str, checkpoint: str
 ) -> None:
     """Exactly-once parquet sink via ``foreachBatch``: each micro-batch
-    writes into its own ``__batch_id`` partition with dynamic partition
-    overwrite, so a replayed batch (failure between sink commit and
-    checkpoint commit — the at-least-once window every foreachBatch
-    sink has) OVERWRITES its own partition instead of appending
-    duplicates. The overwrite mode is a per-write option, so the
-    session conf, which every other plan on the session reads, is never
-    touched. Idempotence + checkpointed offsets = exactly-once
-    output, the contract a 100 TB/day ingest pipeline needs from a
-    plain-parquet lake (no Delta/transactional table required).
+    lands in its own idempotent ``__batch_id`` partition
+    (:func:`_write_batch_partition`). Idempotence + checkpointed
+    offsets = exactly-once output, the contract a 100 TB/day ingest
+    pipeline needs from a plain-parquet lake (no Delta/transactional
+    table required).
 
     Runs bounded (AvailableNow) here; unbounded production use is the
     same call without awaitTermination."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
-
     q = (
         stream_df.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
+        .foreachBatch(partial(_write_batch_partition, path=path))
         .start()
     )
     q.awaitTermination()
@@ -399,21 +405,11 @@ def stream_late_data_accounting(
         )
     )
     out_path = _os.path.join(work_dir, "out")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
-        )
-
     q = (
         agg.writeStream.trigger(availableNow=True)
         .outputMode("update")
         .option("checkpointLocation", _os.path.join(work_dir, "ckpt"))
-        .foreachBatch(write_batch)
+        .foreachBatch(partial(_write_batch_partition, path=out_path))
         .start()
     )
     q.awaitTermination()

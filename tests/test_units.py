@@ -144,46 +144,6 @@ def test_io_round_trips_all_formats(spark, sf_dir, tmp_path):
     assert got_csv.schema == src.schema
 
 
-def test_function_registry_sql_callable(spark, sf_dir):
-    """register_all makes the extension functions callable from SQL, and
-    the UDF results agree with their codegen expression twins."""
-    from sql_engine_spark.catalog import load_table
-    from sql_engine_spark.functions.registry import register_all
-    from sql_engine_spark.functions.vector import cosine_similarity, to_double_array
-
-    names = register_all(spark)
-    assert names == ["cosine_sim", "dot_product", "ngram_jaccard"]
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb.createOrReplaceTempView("emb_reg_test")
-    got = spark.sql(
-        """
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               cosine_sim(a.embedding, b.embedding) AS c,
-               dot_product(a.embedding, b.embedding) AS d
-        FROM emb_reg_test a JOIN emb_reg_test b ON a.vec_id + 1 = b.vec_id
-        WHERE a.vec_id < 20
-        """
-    ).collect()
-    assert len(got) == 20
-    import pyspark.sql.functions as F
-
-    a = emb.select(F.col("vec_id").alias("id_a"), to_double_array("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("id_b"), to_double_array("embedding").alias("eb"))
-    expr = (
-        a.join(b, F.col("id_a") + 1 == F.col("id_b"))
-        .filter(F.col("id_a") < 20)
-        .select("id_a", cosine_similarity(F.col("ea"), F.col("eb")).alias("c"))
-    )
-    want = {r.id_a: r.c for r in expr.collect()}
-    for r in got:
-        assert abs(r.c - want[r.id_a]) < 1e-9
-
-    txt = spark.sql("SELECT ngram_jaccard('a b c d', 'a b c e') AS j").first()
-    # shingles: {abc,bcd} vs {abc,bce} → 1/3
-    assert abs(txt.j - 1 / 3) < 1e-12
-
-
 # --- pure-Python media codec ----------------------------------------
 
 
@@ -326,12 +286,13 @@ def test_bench_contract_line_is_compact(tmp_path, capsys, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail_file))
     timings = {name: 1.234 for name in bench.BENCH_QUERIES}
     detail = {"spread": {n: [1.0, 2.0] for n in timings}, "recall": {"x": 1}}
-    line = bench.emit(timings, 0.1, detail, canary_spread=1.08)
+    line = bench.emit(timings, 0.1, detail, canary_spread=1.08, py_spread=1.24)
     parsed = json.loads(line)
     assert set(parsed) == {
-        "metric", "value", "unit", "queries", "sf", "canary_spread", "certified",
+        "metric", "value", "unit", "queries", "sf", "canary_spread",
+        "py_canary_spread", "certified",
     }
-    assert parsed["canary_spread"] == 1.08
+    assert parsed["canary_spread"] == 1.08 and parsed["py_canary_spread"] == 1.24
     # VERDICT r10 #3: the contract line itself says whether per-query
     # targets may be evaluated on this run (canary within the clean
     # line) — a contended window can never again be silently shipped.
@@ -352,17 +313,12 @@ def test_bench_contract_line_is_compact(tmp_path, capsys, monkeypatch):
     assert sidecar["certified"] is parsed["certified"] is True
     # An over-the-line canary flips the verdict (VERDICT r10 #3) — in
     # BOTH records.
-    dirty = json.loads(bench.emit(timings, 0.1, detail, canary_spread=1.5))
+    dirty = json.loads(bench.emit(timings, 0.1, detail, canary_spread=1.5, py_spread=1.24))
     assert dirty["certified"] is False
     assert json.loads(detail_file.read_text())["certified"] is False
     # Since r15 the steal-sensitive py canary co-gates (VERDICT r14
     # #3): a clean-e08 window with a blown py spread is the s01-r13
-    # class (non-JVM-path steal) and must NOT certify; a clean pair
-    # certifies and the line carries both spreads.
-    both = json.loads(
-        bench.emit(timings, 0.1, detail, canary_spread=1.08, py_spread=1.24)
-    )
-    assert both["certified"] is True and both["py_canary_spread"] == 1.24
+    # class (non-JVM-path steal) and must NOT certify.
     py_dirty = json.loads(
         bench.emit(timings, 0.1, detail, canary_spread=1.08, py_spread=1.6)
     )
@@ -452,8 +408,8 @@ def test_replica_scale_mutates_text_so_replicas_are_not_dups(spark):
     shared across replicas and a banded/prefix-filtered path sees k×
     volume at the same density. Verbatim clones would instead multiply
     every doc's dup count by factor — the wrong regime
-    (bench._scale_probe's replicate() pins the same semantics with
-    per-frame literals; this is the exploded-column twin). The ``_r``
+    (bench.py's scale and pair-hub probes build their replicas with
+    replicate_table, so this pins their semantics too). The ``_r``
     separator (ADVICE r12) keeps a digit-suffixed BASE token from
     colliding with a mutated one: under the old bare-digit suffix,
     base 'alpha1' == replica 1's 'alpha'→'alpha1'."""
@@ -573,7 +529,7 @@ def test_bench_standing_targets_are_evaluable():
 
     for q, ceiling in bench.TARGETS.items():
         assert q in bench.BENCH_QUERIES, q
-        assert bench.RUNS_OVERRIDE.get(q, 0) >= 5, f"{q}: targets need n>=5"
+        assert q in bench.BRACKETED and bench.BRACKET_N >= 5, f"{q}: targets need n>=5"
         assert ceiling > 0
     for q in (
         "x02_dedup_ngram_jaccard",
@@ -631,10 +587,10 @@ def test_recheck_with_context_samples_canary_after_rechecks():
     """r13: window B's q1/x34 solo rechecks read resolved=False with
     in-family medians because the host burst SPANNED the recheck —
     ambiguous without canary context. recheck_with_context runs the
-    rechecks, then ONE min-of-2 canary sample, and ships both; the
-    canary must run AFTER the last recheck (it contextualizes the
-    recheck period, not the main loop) and not at all when nothing
-    was flagged."""
+    rechecks, then ONE min-of-2 sample of each canary (e08, then py),
+    and ships all three; the canaries must run AFTER the last recheck
+    (they contextualize the recheck period, not the main loop) and not
+    at all when nothing was flagged."""
     import bench
 
     order = []
@@ -647,11 +603,20 @@ def test_recheck_with_context_samples_canary_after_rechecks():
         order.append("canary")
         return 0.18
 
-    rec, canary = bench.recheck_with_context({"q1": 1.58}, run_fn, canary_fn, n=3)
-    assert rec["q1"]["resolved"] is True and canary == 0.18
-    assert order == ["q1"] * 3 + ["canary"] * 2  # canary strictly after
+    def py_canary_fn():
+        order.append("py")
+        return 0.25
+
+    rec, canary, py = bench.recheck_with_context(
+        {"q1": 1.58}, run_fn, canary_fn, py_canary_fn, n=3
+    )
+    assert rec["q1"]["resolved"] is True and canary == 0.18 and py == 0.25
+    # canaries strictly after the rechecks
+    assert order == ["q1"] * 3 + ["canary"] * 2 + ["py"] * 2
     # No flags → no recheck, no canary runs consumed.
-    assert bench.recheck_with_context({}, run_fn, lambda: 1 / 0) == ({}, None)
+    assert bench.recheck_with_context({}, run_fn, lambda: 1 / 0, lambda: 1 / 0) == (
+        {}, None, None,
+    )
 
 
 def test_run_curve_absorbs_query_jit_before_first_point(spark, tmp_path, monkeypatch):
@@ -1020,3 +985,56 @@ def test_scaled_join_partitions_degrades_without_spark_context():
         sparkSession = _NoCtxSession()
 
     assert D.scaled_join_partitions(_Df()) is None
+
+
+def test_memo_builds_uncached_without_session_uuid():
+    """The dedup memos are keyed by the JVM session UUID. A session
+    whose UUID cannot be read must not fall back to ``id(session)``,
+    which a new session can reuse after the old one is collected: the
+    artifact builds on every call and the memo stays empty."""
+    from types import SimpleNamespace
+
+    from sql_engine_spark.operators import dedup as D
+
+    class Built:
+        def persist(self, level):
+            return self
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(),  # no _jsparkSession
+        semanticHash=lambda: 42,
+        schema=SimpleNamespace(simpleString=lambda: "struct<doc_id:bigint>"),
+        inputFiles=lambda: [],
+    )
+    memo: dict = {}
+    builds = []
+
+    def build():
+        builds.append(1)
+        return Built()
+
+    first = D._memo_persist(memo, ("k",), df, build)
+    second = D._memo_persist(memo, ("k",), df, build)
+    assert len(builds) == 2 and first is not second
+    assert memo == {}
+
+
+def test_bench_ann_recall_keys_fracs_and_determinism(spark, sf_dir):
+    """bench._ann_recall emits one block per operating point on the
+    base corpus plus the planted-neighbor corpus, each from the same
+    recall routine: fixed key set, IVF probe fraction p/16, every value
+    a fraction, and a second call returns the same record."""
+    import bench
+
+    rec = bench._ann_recall(spark, sf_dir)
+    assert set(rec) == {"srp_h0", "srp_h1", "srp_h2", "ivf_p4", "ivf_p12", "planted"}
+    assert set(rec["planted"]) == {"srp_h0", "srp_h1", "ivf_p4"}
+    for block in (rec, rec["planted"]):
+        for name, point in block.items():
+            if name.startswith("ivf_p"):
+                assert point["probe_frac"] == int(name[len("ivf_p"):]) / 16
+            if name == "planted":
+                continue
+            assert set(point) in ({"recall_at_10", "scan_frac"}, {"recall_at_10", "probe_frac"})
+            assert all(0.0 <= v <= 1.0 for v in point.values()), (name, point)
+    assert bench._ann_recall(spark, sf_dir) == rec

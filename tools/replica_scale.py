@@ -1,7 +1,7 @@
-"""Replica-scale harness (VERDICT r11 #3): the versioned, tested tool
-behind the q18/q21/x-family scale curves, replacing the ad-hoc scripts
-whose id-offset arithmetic overflowed int32 twice (r11's ×500 attempt;
-same ANSI class as the r4 engine bug). The protocol BASELINE.md's
+"""Replica-scale harness: the versioned, tested tool behind the
+q18/q21/x-family scale curves, and the replica builder bench.py's scale
+probes use. Replica id arithmetic is done in long: int32 ``k *
+ID_OFFSET`` overflows under ANSI at ×500. The protocol BASELINE.md's
 curves used: fact rows cloned ``factor`` times with ``id + k *
 ID_OFFSET`` replica keys (both operands cast to long FIRST — the
 tested fix), dims un-replicated so fact→dim fanout stays constant
@@ -19,19 +19,20 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from bench import CANARY_QUERY  # noqa: E402 — one canary, shared with bench.py (ADVICE r12: a hardcoded twin would silently diverge if bench rotates it)
+# One canary and one timed region, shared with bench.py: a hardcoded
+# twin would silently diverge if bench rotates either.
+from bench import CANARY_QUERY, _min_of_2, _run_once  # noqa: E402
 
 # Replica id spacing: 10M clears every driver-corpus id at sf0.1 —
 # and replicate_table VERIFIES it (one cheap max() agg) rather than
 # trusting the comment: --sf-dir accepts any corpus, and at e.g. sf10
 # (l_orderkey up to 60M) silent key collisions would corrupt join
-# fanout and the measured curve with no error (ADVICE r12).
+# fanout and the measured curve with no error.
 ID_OFFSET = 10_000_000
 
 # Replica-key columns per table: only replica-LOCAL keys (fact↔fact
@@ -47,10 +48,10 @@ FACT_ID_COLS: dict[str, list[str]] = {
 
 # Text columns mutated per replica (every token suffixed with _r{k}):
 # dedup-family curves need mutually NON-duplicate replicas so dup
-# DENSITY stays constant while volume grows (bench._scale_probe's
-# semantics) — verbatim clones would multiply every doc's dup count
-# by factor and measure the wrong regime. Embeddings stay verbatim:
-# top-k scan/rerank cost is content-independent.
+# DENSITY stays constant while volume grows (bench.py's scale and
+# pair-hub probes build their replicas here) — verbatim clones would
+# multiply every doc's dup count by factor and measure the wrong regime.
+# Embeddings stay verbatim: top-k scan/rerank cost is content-independent.
 MUTATE_COLS: dict[str, list[str]] = {"documents": ["text"]}
 
 # Per-query protocol: which tables replicate (the rest are symlinked).
@@ -58,8 +59,8 @@ PROTOCOLS: dict[str, tuple[str, ...]] = {
     "q18_large_orders": ("orders", "lineitem"),
     "q21_waiting_supplier": ("orders", "lineitem"),
     "x02_dedup_ngram_jaccard": ("documents",),
-    "x04_dedup_minhash_lsh": ("documents",),  # VERDICT r12 #4
-    "x20_dedup_components": ("documents",),  # VERDICT r12 #4 (pair gen + CC)
+    "x04_dedup_minhash_lsh": ("documents",),
+    "x20_dedup_components": ("documents",),  # pair gen + CC
     "x38_containment": ("documents",),
     "x54_incremental_dedup": ("documents",),
     "x18_sim_ivf": ("embeddings",),
@@ -142,17 +143,6 @@ def build_replica_dir(
     return out_dir
 
 
-def _time_once(fn, spark, rep_dir: str) -> float:
-    # Same memo hygiene as bench.py: measure the operator, not a cache
-    # hit from its own warmup.
-    from sql_engine_spark.operators.dedup import clear_shingle_index
-
-    clear_shingle_index()
-    t0 = time.perf_counter()
-    fn(spark, rep_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def run_curve(
     spark,
     query: str,
@@ -170,17 +160,16 @@ def run_curve(
     canary = matrix.QUERIES[CANARY_QUERY]
 
     def canary_sample() -> float:
-        return round(min(_time_once(canary, spark, sf_dir) for _ in range(2)), 3)
+        return _min_of_2(lambda: _run_once(canary, spark, sf_dir))
 
-    _time_once(canary, spark, sf_dir)  # absorb fresh-session JIT untimed
-    # Absorb the QUERY's own codegen/JIT too (driver_sim's r12 absorber
-    # lesson, re-learned here in r13: a canary-only absorber left an
-    # x04 sweep's first point reading 4.0 s min while the 5× point read
-    # 2.6 s — non-monotonic, i.e. the x1 point was measuring first-call
-    # classloading, not the plan). One untimed run on the BASE dir
-    # warms the plan without touching any replica point's cache state;
-    # its duration ships in the record for audit.
-    curve_absorber = round(_time_once(fn, spark, sf_dir), 3)
+    _run_once(canary, spark, sf_dir)  # absorb fresh-session JIT untimed
+    # Absorb the QUERY's own codegen/JIT too: with a canary-only
+    # absorber an x04 sweep's first point read 4.0 s min while the 5×
+    # point read 2.6 s — non-monotonic, i.e. the x1 point was measuring
+    # first-call classloading, not the plan. One untimed run on the BASE
+    # dir warms the plan without touching any replica point's cache
+    # state; its duration ships in the record for audit.
+    curve_absorber = round(_run_once(fn, spark, sf_dir), 3)
     base = tempfile.mkdtemp(prefix="replica_scale_")
     curve: dict = {"query": query, "sf_dir": sf_dir, "runs": runs, "points": {}}
     curve["absorber"] = curve_absorber
@@ -190,8 +179,8 @@ def run_curve(
             rep_dir = build_replica_dir(
                 spark, sf_dir, factor, os.path.join(base, f"x{factor}"), facts
             )
-            warmup = round(_time_once(fn, spark, rep_dir), 3)
-            samples = [round(_time_once(fn, spark, rep_dir), 3) for _ in range(runs)]
+            warmup = round(_run_once(fn, spark, rep_dir), 3)
+            samples = [round(_run_once(fn, spark, rep_dir), 3) for _ in range(runs)]
             curve["points"][f"x{factor}"] = {
                 "min": min(samples), "runs": samples, "warmup": warmup,
             }
