@@ -351,18 +351,39 @@ def _jaccard_filter(threshold: float) -> Column:
     )
 
 
-def prefix_join(
-    probe: DataFrame, index: DataFrame, pair_filter: Column, n_sc: "int | None"
+def token_join(
+    probe: DataFrame, index: DataFrame, on: "tuple[str, ...]", pair_filter: Column, *out: Column
 ) -> DataFrame:
-    """Distinct (id_a, id_b) candidate pairs of a prefix-filtered
-    inverted-index join: :func:`_tokens` rows of ``probe`` (aliased
-    ``a``) meet those of ``index`` (aliased ``b``) on the shingle ``s``
-    where ``pair_filter`` (over ``a.*``/``b.*``) holds. Callers cluster
-    both sides on ``s`` at ``n_sc`` and put the ``shuffle_hash`` hint on
-    the side to build: both sides are exploded corpus tables, never
-    broadcastable at scale (the 125× replica OOM class), and a merge
-    pin would sort both exploded sides (measured 1.7× slower on the
-    containment join at 125×).
+    """Raw ``(id_a, id_b, *out)`` rows of an inverted-index join, the
+    one candidate join of every near-dup pair producer: ``probe`` rows
+    (aliased ``a``) meet ``index`` rows (aliased ``b``) where every
+    token column in ``on`` is equal and ``pair_filter`` (over
+    ``a.*``/``b.*``) holds. A token is a shingle (PPJoin, span pairs)
+    or a (band, band key) pair (MinHash, SimHash, aHash, SRP). Pair
+    dedup is left to the caller. Callers that pin the join cluster
+    both sides on ``on`` at the scaled count and put the
+    ``shuffle_hash`` hint on the side to build: both sides are exploded
+    corpus tables, never broadcastable at scale (the 125× replica OOM
+    class), and a merge pin would sort both exploded sides (measured
+    1.7× slower on the containment join at 125×)."""
+    a, b = probe.alias("a"), index.alias("b")
+    keys = F.col(f"a.{on[0]}") == F.col(f"b.{on[0]}")
+    for k in on[1:]:
+        keys = keys & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return a.join(b, keys & pair_filter).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *out
+    )
+
+
+def candidate_join(
+    probe: DataFrame,
+    index: DataFrame,
+    on: "tuple[str, ...]",
+    pair_filter: Column,
+    n_sc: "int | None",
+) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs of :func:`token_join`, for
+    the producers that feed :func:`_verify_pairs`.
 
     The raw pairs are partitioned by the verify probe key BEFORE the
     dedup: hash(id_a) satisfies the dedup's ClusteredDistribution(id_a,
@@ -370,11 +391,13 @@ def prefix_join(
     deliberate exchange replaces two (r16; prefix collisions duplicate
     each pair only ~1.2× at sf0.1, so the raw rows crossing one
     exchange cost less than partial-dedup plus deduped rows crossing
-    two)."""
-    a, b = probe.alias("a"), index.alias("b")
-    raw = a.join(b, (F.col("a.s") == F.col("b.s")) & pair_filter).select(
-        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-    )
+    two). Producers with no verify join (banded hamming, span pairs,
+    SRP) dedup their own pairs: with no exchange to share, the id_a
+    pre-partition only ships every band-colliding duplicate raw
+    (x63 at sf0.1: 166,682 → 439,080 shuffle records). The streaming
+    probe ``pipeline.incremental_pairs_vs_corpus`` also dedups its
+    own, unclustered: its micro-batch side is meant to broadcast."""
+    raw = token_join(probe, index, on, pair_filter)
     return _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
 
 
@@ -439,9 +462,9 @@ def _verify_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
     pin sorted the pairs×arrays intermediate and went 3× super-linear
     on the containment verify's 125× point.
 
-    ``cands`` arrives hash-partitioned on ``id_a`` (:func:`prefix_join`
-    and the MinHash band join partition their raw pairs by the probe
-    key before the pair dedup),
+    ``cands`` arrives hash-partitioned on ``id_a`` (every producer that
+    feeds this verify goes through :func:`candidate_join`, which
+    partitions its raw pairs by the probe key before the pair dedup),
     so join 1 needs no pair-side exchange here (2 Exchange → 1 per
     verify, r16)."""
     n_sc = scaled_join_partitions(sh)
@@ -552,7 +575,7 @@ def _candidate_pairs(sh: DataFrame, threshold: float, prefix_order: str) -> Data
     n_sc = scaled_join_partitions(sh)
     ex = _cluster(toks, n_sc, "s")
     pair_filter = (F.col("a.id") < F.col("b.id")) & _jaccard_filter(threshold)
-    return prefix_join(ex, ex.hint("shuffle_hash"), pair_filter, n_sc)
+    return candidate_join(ex, ex.hint("shuffle_hash"), ("s",), pair_filter, n_sc)
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -737,23 +760,10 @@ def minhash_lsh_pairs(
         "band",
         "key",
     )
-    a, b_ = ex.alias("a"), ex.alias("b")
-    raw = (
-        # Pinned shuffle-hash: the banded-signature self-join's sides
-        # are both the full corpus's band keys — never broadcastable at
-        # scale (the 125× replica OOM class); hash not merge per the
-        # prefix_join rationale.
-        a.join(
-            b_.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    # Pinned shuffle-hash (token_join rationale).
+    cands = candidate_join(
+        ex, ex.hint("shuffle_hash"), ("band", "key"), F.col("a.id") < F.col("b.id"), n_sc
     )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (the prefix_join rationale, r16).
-    cands = _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
     return _verify_pairs_jaccard(cands, sh, threshold)
 
 
@@ -822,16 +832,13 @@ def simhash_pairs(
 
 
 def banded_hamming_pairs(
-    sig: DataFrame,
-    max_hamming: int,
-    n_bands: int = _SIMHASH_BITS // _BAND_BITS,
-    source: "DataFrame | None" = None,
+    sig: DataFrame, max_hamming: int, source: "DataFrame | None" = None
 ) -> DataFrame:
     """Banded-LSH pair mining over any 64-bit signature emitted as
-    ``(id, band0..band{n-1})`` 16-bit ints (SimHash, image average
-    hash, ...): candidates share ≥1 band, then the exact hamming
-    distance (bit_count of the XORed bands) filters. By pigeonhole,
-    recall is EXACT for hamming < n_bands; beyond that it degrades
+    ``(id, band0..band3)`` 16-bit ints (SimHash, image average hash,
+    ...): candidates share ≥1 band, then the exact hamming distance
+    (bit_count of the XORed bands) filters. By pigeonhole, recall is
+    EXACT for hamming < 4 (the band count); beyond that it degrades
     gracefully like any banding. Output: (id_a, id_b, hamming),
     id_a < id_b.
 
@@ -842,41 +849,32 @@ def banded_hamming_pairs(
     callers must either pass the file-backed ``source`` frame or
     stamp ``sig._corpus_input_bytes`` — the memoized
     :func:`simhash_pairs` path does the latter via ``_memo_persist``
-    (ADVICE r14)."""
+    (ADVICE r14).
+
+    The pairs dedup after the hamming filter with a plain
+    ``dropDuplicates`` (map-side partial, then one exchange on the pair
+    key): there is no verify join to share an id_a exchange with
+    (:func:`candidate_join`)."""
     # Long format (id, band_idx, band_value, full signature): ONE
-    # self-join on (band_idx, band_value) replaces n_bands separate
-    # joins, and the signature pipeline is computed once per side.
+    # self-join on (band_idx, band_value) replaces one join per band,
+    # and the signature pipeline is computed once per side.
+    bands = [F.col(f"band{i}") for i in range(_SIMHASH_BITS // _BAND_BITS)]
     ex = _cluster(
-        sig.select(
-            "id",
-            *[F.col(f"band{i}") for i in range(n_bands)],
-            F.posexplode(
-                F.array(*[F.col(f"band{i}") for i in range(n_bands)])
-            ).alias("b_idx", "b_val"),
-        ),
+        sig.select("id", *bands, F.posexplode(F.array(*bands)).alias("b_idx", "b_val")),
         scaled_join_partitions(source if source is not None else sig),
         "b_idx",
         "b_val",
     )
-    a, b = ex.alias("a"), ex.alias("b")
     ham = None
-    for i in range(n_bands):
+    for i in range(len(bands)):
         term = F.bit_count(F.col(f"a.band{i}").bitwiseXOR(F.col(f"b.band{i}")))
         ham = term if ham is None else ham + term
-    return (
-        # Pinned shuffle-hash: both sides are the full corpus's exploded
-        # band rows — never broadcastable at scale (the 125× replica
-        # OOM class); hash not merge per the prefix_join rationale.
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.b_idx") == F.col("b.b_idx"))
-            & (F.col("a.b_val") == F.col("b.b_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+    # Pinned shuffle-hash (token_join rationale).
+    pairs = token_join(
+        ex, ex.hint("shuffle_hash"), ("b_idx", "b_val"), F.col("a.id") < F.col("b.id"),
+        ham.alias("hamming"),
     )
+    return pairs.filter(F.col("hamming") <= max_hamming).dropDuplicates(["id_a", "id_b"])
 
 
 def connected_components(

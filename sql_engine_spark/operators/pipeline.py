@@ -389,9 +389,10 @@ def _containment_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     n_sc = D.scaled_join_partitions(sh)
     osh = D.ordered_shingle_index(sh)
     # The (much smaller) prefix side is the hash-join build side.
-    return D.prefix_join(
+    return D.candidate_join(
         D._cluster(D._tokens(osh, "osh", threshold), n_sc, "s").hint("shuffle_hash"),
         D._cluster(D._tokens(osh, "osh"), n_sc, "s"),
+        ("s",),
         (F.col("a.id") != F.col("b.id"))
         & (F.col("b.sz") * 1_000_000 >= F.col("a.sz") * num)
         & (F.col("b.sz") - F.col("b.p") >= D._ceil_frac(F.col("a.sz"), threshold)),
@@ -783,13 +784,9 @@ def span_dup_pairs(
 
     Output: (id_a, id_b, n_shared_spans), id_a < id_b.
     """
-    sh = D.shingle_index(df, id_col, text_col, n=window)
-    inv = sh.select(F.col("id"), F.explode("sh").alias("g"))
-    a = inv.select(F.col("id").alias("id_a"), "g")
-    b = inv.select(F.col("id").alias("id_b"), "g")
+    inv = D.shingle_index(df, id_col, text_col, n=window).select("id", F.explode("sh").alias("s"))
     return (
-        a.join(b, ["g"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        D.token_join(inv, inv, ("s",), F.col("a.id") < F.col("b.id"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_spans"))
     )
@@ -909,11 +906,12 @@ def incremental_jaccard_pairs(
     osh = D.ordered_shingle_index(sh)
     # The batch prefix side (10% of the corpus) is the hash-join build
     # side; the batch is NOT a trigger-bounded micro-batch, so both
-    # sides scale with the corpus (prefix_join rationale).
+    # sides scale with the corpus (token_join rationale).
     probe = D._cluster(D._tokens(osh.filter(new_pred), "osh", threshold), n_sc, "s")
-    cands = D.prefix_join(
+    cands = D.candidate_join(
         probe.hint("shuffle_hash"),
         D._cluster(D._tokens(osh.filter(~new_pred), "osh"), n_sc, "s"),
+        ("s",),
         D._jaccard_filter(threshold),
         n_sc,
     )
@@ -927,7 +925,6 @@ def crossmodal_dup_agreement(
     emb: DataFrame,
     j_threshold: float = 0.8,
     c_threshold: float = 0.4,
-    use_buckets: bool = False,
 ) -> DataFrame:
     """Cross-modal near-duplicate AGREEMENT audit: full-outer join the
     lexical near-dup pairs (n-gram Jaccard ≥ ``j_threshold``) with the
@@ -938,11 +935,9 @@ def crossmodal_dup_agreement(
     trusted (on this synthetic corpus the embeddings are independent
     of the text, and the audit SHOWS it: both ≈ 0).
 
-    Consumes the memoized lexical pair graph; the semantic side
-    defaults to the exact all-pairs scorer for oracle checkability
-    (``use_buckets=True`` is the banded 100 TB path, identical output
-    minus banding recall). The outer join runs over two TINY pair
-    sets, never the corpora.
+    Consumes the memoized lexical pair graph; the semantic side is
+    the exact all-pairs scorer, for oracle checkability. The outer
+    join runs over two TINY pair sets, never the corpora.
 
     Output: (id_a, id_b, jaccard?, cosine_sim?, agreement).
     """
@@ -951,7 +946,7 @@ def crossmodal_dup_agreement(
     lex = D.ngram_jaccard_pairs(docs, threshold=j_threshold).select(
         F.col("id_a").alias("la"), F.col("id_b").alias("lb"), "jaccard"
     )
-    sem = embedding_dup_pairs(emb, threshold=c_threshold, use_buckets=use_buckets).select(
+    sem = embedding_dup_pairs(emb, threshold=c_threshold, use_buckets=False).select(
         F.col("id_a").alias("sa"), F.col("id_b").alias("sb"), "cosine_sim"
     )
     j = lex.join(
@@ -1181,13 +1176,12 @@ def incremental_pairs_vs_corpus(
         .withColumn("sz", F.size("sh").cast("long"))
         .filter(F.col("sz") > 0)
     )
-    pref = D._tokens(sh_new, "sh", threshold).alias("a")
-    inv = D._tokens(sh_old, "sh").alias("b")
-    cands = (
-        pref.join(inv, (F.col("a.s") == F.col("b.s")) & D._jaccard_filter(threshold))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = D.token_join(
+        D._tokens(sh_new, "sh", threshold),
+        D._tokens(sh_old, "sh"),
+        ("s",),
+        D._jaccard_filter(threshold),
+    ).dropDuplicates(["id_a", "id_b"])
     a = sh_new.select(
         F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a")
     )

@@ -490,9 +490,11 @@ def embedding_dup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold).
 
-    ``use_buckets=True``: banded SRP join — one equi-join per band on a
-    small int key, unioned and deduped, then exact cosine filter.
-    Sub-quadratic with ~0.99 recall at cos≥0.95 — the 100 TB path.
+    ``use_buckets=True``: banded SRP join — each vector's bands explode
+    to (band, key) tokens and ONE equi-join on them (the shared
+    ``dedup.token_join``) meets every pair that agrees on any band;
+    the pairs are deduped, then exact cosine filter. Sub-quadratic
+    with ~0.99 recall at cos≥0.95 — the 100 TB path.
     ``use_buckets=False``: exact all-pairs scoring (oracle-checkable
     baseline; O(n²), small inputs only)."""
     # Norms are per-VECTOR, not per-pair: compute |v|² once on each side
@@ -501,6 +503,7 @@ def embedding_dup_pairs(
     # tripling the dominant cost). Same fold order as the oracle's
     # per-vector ``nrm`` CTE, so values stay bit-identical.
     from sql_engine_spark.functions.vector import dot as _dot
+    from sql_engine_spark.operators.dedup import token_join
 
     vd = to_double_array(vec_col)
     nrm = _dot(vd, vd)
@@ -508,21 +511,19 @@ def embedding_dup_pairs(
         base = with_srp_bands(
             df.select(id_col, vec_col, nrm.alias("nrm")), dim, vec_col, n_planes, n_bands, seed
         )
-        a = base.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("nrm").alias("na"),
-            *[F.col(f"band{b}").alias(f"ab{b}") for b in range(n_bands)],
+        bands = F.array(*[F.col(f"band{b}") for b in range(n_bands)])
+        ex = base.select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "nrm",
+            F.posexplode(bands).alias("band", "key"),
         )
-        b_ = base.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("nrm").alias("nb"),
-            *[F.col(f"band{b}").alias(f"bb{b}") for b in range(n_bands)],
-        )
-        joined = None
-        for band in range(n_bands):
-            j = a.join(
-                b_, (F.col(f"ab{band}") == F.col(f"bb{band}")) & (F.col("id_a") < F.col("id_b"))
-            ).select("id_a", "id_b", "va", "vb", "na", "nb")
-            joined = j if joined is None else joined.unionByName(j)
-        joined = joined.dropDuplicates(["id_a", "id_b"])
+        # The cosine is computed after the pair dedup, not inside the
+        # join: there it fuses into the scan stage, a single task on a
+        # one-file embeddings table.
+        joined = token_join(
+            ex, ex, ("band", "key"), F.col("a.id") < F.col("b.id"),
+            F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
+            F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb"),
+        ).dropDuplicates(["id_a", "id_b"])
     else:
         a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), nrm.alias("na"))
         b_ = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), nrm.alias("nb"))

@@ -182,10 +182,12 @@ def test_window_frames_share_one_window_operator(spark, sf_dir):
 
 def test_pair_dedup_shares_probe_key_exchange(spark, sf_dir):
     """The r16 probe-key contract, pinned (ADVICE r16): every
-    dedup-family candidate producer repartitions its RAW pairs on the
-    probe key (dedup._cluster_always), so the pair dedup and the
-    verify join plan WITHOUT an ENSURE_REQUIREMENTS exchange on the
-    full pair key. A hashpartitioning(id_a, id_b) exchange reappearing
+    candidate producer that feeds the verify join goes through
+    dedup.candidate_join, which repartitions its RAW pairs on the probe
+    key (dedup._cluster_always), so the pair dedup and the verify join
+    plan WITHOUT an ENSURE_REQUIREMENTS exchange on the full pair key.
+    Producers with no verify join keep a plain map-side dedup instead
+    (test_banded_hamming_keeps_map_side_pair_dedup). A hashpartitioning(id_a, id_b) exchange reappearing
     in any of these plans means a caller stopped pre-partitioning and
     Spark silently re-inserted the shuffle this family removed —
     perf-only, invisible to correctness tests, caught here."""
@@ -353,6 +355,43 @@ def test_span_dups_is_equi_join(spark, sf_dir):
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "partial_count" in plan
+
+
+def test_banded_hamming_keeps_map_side_pair_dedup(spark, sf_dir):
+    """x05 and x63 have no verify join, so their pair dedup keeps its
+    map-side partial below one exchange on the full pair key, and the
+    raw pairs are never pre-partitioned on id_a: their pairs collide
+    on several bands, and shipping them raw on id_a measured 2.6× the
+    shuffle records on x63 at sf0.1 (166,682 → 439,080)."""
+    for q in ("x05_dedup_simhash", "x63_image_dup_pairs"):
+        lines = _plan(matrix.QUERIES[q](spark, sf_dir)).splitlines()
+        pair_ex = [
+            i
+            for i, ln in enumerate(lines)
+            if "Exchange hashpartitioning(id_a#" in ln and "id_b#" in ln
+        ]
+        partial = [i for i, ln in enumerate(lines) if "partial_first(hamming" in ln]
+        assert pair_ex and partial and pair_ex[0] < partial[0], (q, lines)
+        assert not [ln for ln in lines if "REPARTITION_BY_COL" in ln and "(id_a#" in ln], q
+
+
+def test_srp_dup_pairs_is_one_token_join(spark, sf_dir):
+    """The banded SRP path explodes its bands to (band, key) tokens and
+    self-joins once (dedup.token_join): one join, no per-band union."""
+    import re
+
+    from sql_engine_spark.operators.similarity import embedding_dup_pairs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    plan = _plan(embedding_dup_pairs(emb, 0.4, use_buckets=True))
+    assert "Union" not in plan
+    joins = re.findall(
+        r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|BroadcastNestedLoopJoin"
+        r"|CartesianProduct)\b",
+        plan,
+    )
+    assert len(joins) == 1, plan
 
 
 def test_stopword_stats_broadcasts_stop_list(spark, sf_dir):
@@ -607,15 +646,17 @@ def test_dedup_scale_broadcast_guards(spark, sf_dir):
     BroadcastHashJoin here long before any replica sweep runs
     (executed-plan audit of all five at sf0.1 under the 64 MB adaptive
     threshold: zero BHJ — SCALE.md 'AQE broadcast-cap retirement')."""
-    # x04/x05 joined the loop in r14 (ADVICE r13): minhash_lsh_pairs and
-    # banded_hamming_pairs carry the same pins, and a dropped hint there
-    # would regress to broadcast/sort-merge with no other test noticing.
+    # x04/x05 joined the loop in r14 (ADVICE r13), x63 later: the
+    # minhash_lsh_pairs and banded_hamming_pairs joins carry the same
+    # pins, and a dropped hint there would regress to
+    # broadcast/sort-merge with no other test noticing.
     for q in (
         "x02_dedup_ngram_jaccard",
         "x04_dedup_minhash_lsh",
         "x05_dedup_simhash",
         "x38_containment",
         "x54_incremental_dedup",
+        "x63_image_dup_pairs",
     ):
         plan = _plan(matrix.QUERIES[q](spark, sf_dir))
         assert "BroadcastHashJoin" not in plan, q
