@@ -63,30 +63,34 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     only genuinely small inputs — where the repartition shuffle is a
     few MB, i.e. free — pay one. At real scale inputs span many
     files/row-groups and this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:  # non-file-backed plans: assume already parallel
         return df
-    few_files = len(files) < target
-    if few_files:
-        # Size gate, local files only: a single LARGE splittable file
-        # needs no repartition. Remote URIs (hdfs://, s3a://) or
-        # unstatable paths keep the count-based decision — failing the
-        # size probe must not silently DISABLE the repartition.
-        try:
-            total = 0
-            for uri in files:
-                path = uri[len("file:"):] if uri.startswith("file:") else uri
-                total += os.path.getsize(path)
-            # ≥64 MiB/core of input → plenty of row groups to split.
-            few_files = total < target * 64 * 1024 * 1024
-        except Exception:
-            pass
-    if few_files:
-        return df.repartition(target)
-    return df
+    if len(files) >= target:
+        return df
+    # Size gate, local files only: a single LARGE splittable file needs
+    # no repartition (≥64 MiB/core of input → plenty of row groups to
+    # split). Remote URIs (hdfs://, s3a://) or unstatable paths keep
+    # the count-based decision — failing the size probe must not
+    # silently DISABLE the repartition.
+    total = _file_bytes(files)
+    if total is not None and total >= target * 64 * 1024 * 1024:
+        return df
+    return df.repartition(target)
+
+
+def _file_bytes(files: "list[str]") -> "int | None":
+    """Summed size of ``inputFiles()`` URIs, or None when one of them
+    is remote (hdfs://, s3a://) or unstatable."""
+    try:
+        return sum(
+            os.path.getsize(uri[len("file:"):] if uri.startswith("file:") else uri)
+            for uri in files
+        )
+    except (OSError, ValueError):
+        return None
 
 
 # --- corpus-scaled shuffle partitioning for the pinned hash joins ---
@@ -118,14 +122,10 @@ def _input_bytes(df: DataFrame) -> "int | None":
         return cached
     try:
         files = df.inputFiles()
-        if not files:
-            return None  # cached/derived plan, not "0 bytes of input"
-        return sum(
-            os.path.getsize(uri[len("file:"):] if uri.startswith("file:") else uri)
-            for uri in files
-        )
     except Exception:
         return None
+    # No files: a cached/derived plan, not "0 bytes of input".
+    return _file_bytes(files) if files else None
 
 
 def scaled_join_partitions(df: DataFrame) -> "int | None":
@@ -170,21 +170,20 @@ def _cluster_always(df: DataFrame, n: "int | None", *cols: str) -> DataFrame:
     return df.repartition(n, *cols) if n else df.repartition(*cols)
 
 
-# Persisted shingle-index memo, keyed by (session, input-plan semantic
-# hash, id_col, text_col, n). At 100 TB the shingle index is the
-# artifact you materialize ONCE and feed to every near-dup operator
-# (Jaccard join, containment, the CC pair source); in a long-lived
-# session this memo is exactly that reuse — the second operator over
-# the same corpus skips the shingle scan entirely. Bounded by distinct
-# (corpus, n) combinations per session; `clear_shingle_index()`
-# unpersists everything.
-_SHINGLE_INDEX: dict[tuple, DataFrame] = {}
-_PAIR_GRAPH: dict[tuple, DataFrame] = {}
-_ORDERED_INDEX: dict[tuple, DataFrame] = {}
-_SIG_MEMO: dict[tuple, DataFrame] = {}
-# One lock for all four memos, so two queries on one session build a
-# shared artifact once and never unpersist one the other is reading.
-# Re-entrant: a build may itself consult a memo (the pair graph's
+# The corpus-artifact memo: every persisted per-corpus artifact —
+# shingle indexes ("xxh", "portable"), the df-ordered index
+# ("ordered"), the verified pair graph ("pairs") and SimHash
+# signatures ("simhash") — keyed by (session, input-plan semantic hash,
+# schema, kind tag, *params). At 100 TB these are the artifacts you
+# materialize ONCE and feed to every near-dup operator (Jaccard join,
+# containment, the CC pair source); in a long-lived session the second
+# operator over the same corpus skips the shingle scan entirely.
+# Bounded by distinct (corpus, kind, params) combinations per session;
+# `clear_shingle_index()` unpersists everything.
+_MEMO: dict[tuple, DataFrame] = {}
+# One lock for the memo, so two queries on one session build a shared
+# artifact once and never unpersist one the other is reading.
+# Re-entrant: a build may itself consult the memo (the pair graph's
 # build calls ordered_shingle_index, which calls _memo_persist).
 _MEMO_LOCK = threading.RLock()
 
@@ -221,6 +220,19 @@ def _memo_persist(memo: dict, extra_key: tuple, df: DataFrame, build) -> DataFra
         return out
 
 
+def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int, hashes) -> DataFrame:
+    """``(id, sh, sz)`` rows of ``df``: the sorted shingle-hash array
+    ``hashes(text_col, n)`` and its size — the one shape of every
+    shingle index. sz is LONG at the source: F.size() emits int32, and
+    every prefix/length/positional filter downstream multiplies sz by
+    ~10⁶ — int32 arithmetic under ANSI mode throws ARITHMETIC_OVERFLOW
+    at ~2148 shingles (a routine web document), killing the job
+    instead of returning pairs."""
+    return df.select(F.col(id_col).alias("id"), hashes(text_col, n).alias("sh")).withColumn(
+        "sz", F.size("sh").cast("long")
+    )
+
+
 def shingle_index(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -231,52 +243,45 @@ def shingle_index(
     semantic hash so repeated calls (same session, same corpus) return
     the SAME persisted DataFrame."""
     return _memo_persist(
-        _SHINGLE_INDEX,
-        (id_col, text_col, n),
+        _MEMO,
+        ("xxh", id_col, text_col, n),
         df,
-        lambda: (
-            ensure_parallelism(df)
-            # sz is LONG at the source: F.size() emits int32, and every
-            # prefix/length/positional filter downstream multiplies sz
-            # by ~10⁶ — int32 arithmetic under ANSI mode throws
-            # ARITHMETIC_OVERFLOW at ~2148 shingles (a routine web
-            # document), killing the job instead of returning pairs.
-            .select(F.col(id_col).alias("id"), shingle_hashes(text_col, n).alias("sh"))
-            .withColumn("sz", F.size("sh").cast("long"))
-        ),
+        lambda: _shingle_rows(ensure_parallelism(df), id_col, text_col, n, shingle_hashes),
     )
 
 
 def clear_shingle_index() -> None:
-    """Unpersist and drop every memoized shingle index and pair graph
-    (test/session hygiene; also the answer to the cache-entry-leak
-    concern — the caches are explicit and collectively releasable)."""
+    """Unpersist and drop every memoized corpus artifact (test/session
+    hygiene; also the answer to the cache-entry-leak concern — the
+    cache is explicit and releasable as a whole)."""
     with _MEMO_LOCK:
-        for memo in (_SHINGLE_INDEX, _PAIR_GRAPH, _ORDERED_INDEX, _SIG_MEMO):
-            for cached in memo.values():
-                try:
-                    # blocking: an async drop races with a re-persist of
-                    # the SAME plan (the bench's clear-then-rebuild
-                    # pattern) in the cache manager — measured 0.5–12.5 s
-                    # swings on an otherwise-stable 0.5 s index build;
-                    # blocking removal is deterministic.
-                    cached.unpersist(blocking=True)
-                except Exception:
-                    pass
-            memo.clear()
+        for cached in _MEMO.values():
+            try:
+                # blocking: an async drop races with a re-persist of the
+                # SAME plan (the bench's clear-then-rebuild pattern) in
+                # the cache manager — measured 0.5–12.5 s swings on an
+                # otherwise-stable 0.5 s index build; blocking removal
+                # is deterministic.
+                cached.unpersist(blocking=True)
+            except Exception:
+                pass
+        _MEMO.clear()
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a single-space-tokenized text.
-    Pure array expression (no UDF): slice the token array at every
-    offset and join with spaces."""
+def _ngram_hashes(text: Column | str, n: int, hash_fn) -> Column:
+    """Distinct word n-gram shingles of a single-space-tokenized text,
+    each hashed to a long by ``hash_fn``, sorted. Pure array expression
+    (no UDF): slice the token array at every offset and join with
+    spaces."""
     w = tokens(text)
     sz = F.size(w)
     grams = F.transform(
         F.sequence(F.lit(0), sz - n),
-        lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
+        lambda i: hash_fn(F.concat_ws(" ", F.slice(w, i + 1, n))),
     )
-    return F.when(sz >= n, F.array_distinct(grams)).otherwise(F.array().cast("array<string>"))
+    return F.when(sz >= n, F.sort_array(F.array_distinct(grams))).otherwise(
+        F.array().cast("array<bigint>")
+    )
 
 
 def shingle_hashes(text: Column | str, n: int = 3) -> Column:
@@ -285,15 +290,7 @@ def shingle_hashes(text: Column | str, n: int = 3) -> Column:
     collisions (~n²/2⁶⁵ — negligible at any corpus size), while every
     downstream shuffle, join key, and intersection becomes fixed-width
     integer work instead of string work."""
-    w = tokens(text)
-    sz = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(0), sz - n),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(w, i + 1, n))),
-    )
-    return F.when(sz >= n, F.sort_array(F.array_distinct(grams))).otherwise(
-        F.array().cast("array<bigint>")
-    )
+    return _ngram_hashes(text, n, F.xxhash64)
 
 
 def _ceil_frac(sz: Column, threshold: float) -> Column:
@@ -442,7 +439,7 @@ def ordered_shingle_index(sh: DataFrame) -> DataFrame:
             .select("id", "sz", F.transform("os", lambda x: x["s"]).alias("osh"))
         )
 
-    return _memo_persist(_ORDERED_INDEX, ("ordered",), sh, build)
+    return _memo_persist(_MEMO, ("ordered",), sh, build)
 
 
 def _verify_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
@@ -549,8 +546,8 @@ def ngram_jaccard_pairs(
     # its size is O(near-dup pairs) — tiny next to the corpus. Keyed
     # like the shingle index plus (threshold, prefix_order).
     return _memo_persist(
-        _PAIR_GRAPH,
-        (id_col, text_col, n, round(threshold * 1_000_000), prefix_order),
+        _MEMO,
+        ("pairs", id_col, text_col, n, round(threshold * 1_000_000), prefix_order),
         df,
         lambda: _verify_pairs_jaccard(
             _candidate_pairs(sh, threshold, prefix_order), sh, threshold
@@ -629,16 +626,8 @@ def portable_shingle_hashes(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles hashed to sorted 60-bit ints both
     engines can compute (md5-prefix, see family note above). Collision
     odds ~n²/2⁶¹ — negligible at any corpus size."""
-    w = tokens(text)
-    sz = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(0), sz - n),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice(w, i + 1, n))), 1, 15), 16, 10
-        ).cast("long"),
-    )
-    return F.when(sz >= n, F.sort_array(F.array_distinct(grams))).otherwise(
-        F.array().cast("array<bigint>")
+    return _ngram_hashes(
+        text, n, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
     )
 
 
@@ -649,13 +638,11 @@ def portable_shingle_index(
     artifact MinHash and SimHash share (one corpus scan feeds both
     signature families), memoized alongside :func:`shingle_index`."""
     return _memo_persist(
-        _SHINGLE_INDEX,
+        _MEMO,
         ("portable", id_col, text_col, n),
         df,
-        lambda: (
-            ensure_parallelism(df)
-            .select(F.col(id_col).alias("id"), portable_shingle_hashes(text_col, n).alias("sh"))
-            .withColumn("sz", F.size("sh").cast("long"))
+        lambda: _shingle_rows(
+            ensure_parallelism(df), id_col, text_col, n, portable_shingle_hashes
         ),
     )
 
@@ -823,7 +810,7 @@ def simhash_pairs(
     Output: (id_a, id_b, hamming), id_a < id_b.
     """
     sig = _memo_persist(
-        _SIG_MEMO,
+        _MEMO,
         ("simhash", id_col, text_col, n),
         df,
         lambda: simhash_signatures(df, id_col, text_col, n),
@@ -831,9 +818,7 @@ def simhash_pairs(
     return banded_hamming_pairs(sig, max_hamming)
 
 
-def banded_hamming_pairs(
-    sig: DataFrame, max_hamming: int, source: "DataFrame | None" = None
-) -> DataFrame:
+def banded_hamming_pairs(sig: DataFrame, max_hamming: int) -> DataFrame:
     """Banded-LSH pair mining over any 64-bit signature emitted as
     ``(id, band0..band3)`` 16-bit ints (SimHash, image average hash,
     ...): candidates share ≥1 band, then the exact hamming distance
@@ -843,13 +828,13 @@ def banded_hamming_pairs(
     id_a < id_b.
 
     The self-join clusters at the corpus-scaled partition count sized
-    from ``source`` when given, else from ``sig`` itself. A PERSISTED
-    or otherwise derived ``sig`` hides its file scan from
-    ``inputFiles()`` (the x04 re-stamp incident, r14), so direct
-    callers must either pass the file-backed ``source`` frame or
-    stamp ``sig._corpus_input_bytes`` — the memoized
-    :func:`simhash_pairs` path does the latter via ``_memo_persist``
-    (ADVICE r14).
+    from ``sig`` itself. A PERSISTED ``sig`` hides its file scan from
+    ``inputFiles()`` (the x04 re-stamp incident, r14) and carries the
+    ``_corpus_input_bytes`` stamp instead — the memoized
+    :func:`simhash_pairs` path gets it from ``_memo_persist``
+    (ADVICE r14). An unpersisted signature frame, such as
+    ``multimodal.image_avg_hash``'s mapInPandas output, still reports
+    its source files.
 
     The pairs dedup after the hamming filter with a plain
     ``dropDuplicates`` (map-side partial, then one exchange on the pair
@@ -861,7 +846,7 @@ def banded_hamming_pairs(
     bands = [F.col(f"band{i}") for i in range(_SIMHASH_BITS // _BAND_BITS)]
     ex = _cluster(
         sig.select("id", *bands, F.posexplode(F.array(*bands)).alias("b_idx", "b_val")),
-        scaled_join_partitions(source if source is not None else sig),
+        scaled_join_partitions(sig),
         "b_idx",
         "b_val",
     )

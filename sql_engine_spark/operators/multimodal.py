@@ -931,7 +931,4 @@ def image_dup_pairs(
     sigs = image_avg_hash(df, grid, strict=strict)
     if not strict:
         sigs = sigs.filter(F.col("error").isNull()).drop("error")
-    # source=df: the mapInPandas signature frame sizes its banded
-    # self-join from the file-backed payload corpus (ADVICE r14 —
-    # a derived sig frame must not silently lose the byte scaling).
-    return banded_hamming_pairs(sigs, max_hamming, source=df)
+    return banded_hamming_pairs(sigs, max_hamming)

@@ -784,9 +784,13 @@ def span_dup_pairs(
 
     Output: (id_a, id_b, n_shared_spans), id_a < id_b.
     """
-    inv = D.shingle_index(df, id_col, text_col, n=window).select("id", F.explode("sh").alias("s"))
+    sh = D.shingle_index(df, id_col, text_col, n=window)
+    inv = D._cluster(
+        sh.select("id", F.explode("sh").alias("s")), D.scaled_join_partitions(sh), "s"
+    )
+    # Pinned shuffle-hash (dedup.token_join rationale).
     return (
-        D.token_join(inv, inv, ("s",), F.col("a.id") < F.col("b.id"))
+        D.token_join(inv, inv.hint("shuffle_hash"), ("s",), F.col("a.id") < F.col("b.id"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared_spans"))
     )
@@ -1168,13 +1172,10 @@ def incremental_pairs_vs_corpus(
     Output: (id_new, id_old, jaccard ≥ threshold).
     """
     sh_old = D.shingle_index(corpus_df, id_col, text_col, n)
-    sh_new = (
-        new_df.select(
-            F.col(id_col).alias("id"), D.shingle_hashes(text_col, n).alias("sh")
-        )
-        # long for the same ANSI-overflow reason as shingle_index
-        .withColumn("sz", F.size("sh").cast("long"))
-        .filter(F.col("sz") > 0)
+    # The batch side is shingled fresh, with no repartition and no
+    # persist: a micro-batch is trigger-bounded.
+    sh_new = D._shingle_rows(new_df, id_col, text_col, n, D.shingle_hashes).filter(
+        F.col("sz") > 0
     )
     cands = D.token_join(
         D._tokens(sh_new, "sh", threshold),

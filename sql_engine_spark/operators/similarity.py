@@ -503,7 +503,7 @@ def embedding_dup_pairs(
     # tripling the dominant cost). Same fold order as the oracle's
     # per-vector ``nrm`` CTE, so values stay bit-identical.
     from sql_engine_spark.functions.vector import dot as _dot
-    from sql_engine_spark.operators.dedup import token_join
+    from sql_engine_spark.operators.dedup import _cluster, scaled_join_partitions, token_join
 
     vd = to_double_array(vec_col)
     nrm = _dot(vd, vd)
@@ -512,15 +512,21 @@ def embedding_dup_pairs(
             df.select(id_col, vec_col, nrm.alias("nrm")), dim, vec_col, n_planes, n_bands, seed
         )
         bands = F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-        ex = base.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "nrm",
-            F.posexplode(bands).alias("band", "key"),
+        ex = _cluster(
+            base.select(
+                F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "nrm",
+                F.posexplode(bands).alias("band", "key"),
+            ),
+            scaled_join_partitions(df),
+            "band",
+            "key",
         )
-        # The cosine is computed after the pair dedup, not inside the
-        # join: there it fuses into the scan stage, a single task on a
-        # one-file embeddings table.
+        # Pinned shuffle-hash (dedup.token_join rationale). The cosine
+        # is computed after the pair dedup, not inside the join: there
+        # it fuses into the scan stage, a single task on a one-file
+        # embeddings table.
         joined = token_join(
-            ex, ex, ("band", "key"), F.col("a.id") < F.col("b.id"),
+            ex, ex.hint("shuffle_hash"), ("band", "key"), F.col("a.id") < F.col("b.id"),
             F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
             F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb"),
         ).dropDuplicates(["id_a", "id_b"])

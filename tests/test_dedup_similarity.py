@@ -396,6 +396,24 @@ def test_shingle_index_memoized_and_clearable(spark, sf_dir):
     D.clear_shingle_index()
     assert D.shingle_index(docs) is not a  # cleared → rebuilt
     D.clear_shingle_index()
+    # Every artifact kind of one corpus lives in the one memo, under
+    # its own kind tag (the key's 4th field, after session UUID, plan
+    # hash and schema), as a distinct persisted object.
+    xxh = D.shingle_index(docs)
+    arts = {
+        "xxh": xxh,
+        "portable": D.portable_shingle_index(docs),
+        "ordered": D.ordered_shingle_index(xxh),
+    }
+    D.simhash_pairs(docs)
+    assert len(D._MEMO) == 4
+    by_kind = {key[3]: v for key, v in D._MEMO.items()}
+    assert set(by_kind) == {"xxh", "portable", "ordered", "simhash"}
+    assert all(by_kind[k] is v for k, v in arts.items())
+    assert len({id(v) for v in by_kind.values()}) == 4
+    assert all(v.is_cached for v in by_kind.values())
+    D.clear_shingle_index()
+    assert D._MEMO == {}
 
 
 def test_portable_hash_matches_duckdb_fold(spark):

@@ -378,7 +378,9 @@ def test_banded_hamming_keeps_map_side_pair_dedup(spark, sf_dir):
 
 def test_srp_dup_pairs_is_one_token_join(spark, sf_dir):
     """The banded SRP path explodes its bands to (band, key) tokens and
-    self-joins once (dedup.token_join): one join, no per-band union."""
+    self-joins once (dedup.token_join): one join, no per-band union.
+    Both sides are exploded corpus tables, so the join is pinned
+    shuffle-hash, never a broadcast (the 125× replica OOM class)."""
     import re
 
     from sql_engine_spark.operators.similarity import embedding_dup_pairs
@@ -391,7 +393,7 @@ def test_srp_dup_pairs_is_one_token_join(spark, sf_dir):
         r"|CartesianProduct)\b",
         plan,
     )
-    assert len(joins) == 1, plan
+    assert joins == ["ShuffledHashJoin"], plan
 
 
 def test_stopword_stats_broadcasts_stop_list(spark, sf_dir):
@@ -646,10 +648,10 @@ def test_dedup_scale_broadcast_guards(spark, sf_dir):
     BroadcastHashJoin here long before any replica sweep runs
     (executed-plan audit of all five at sf0.1 under the 64 MB adaptive
     threshold: zero BHJ — SCALE.md 'AQE broadcast-cap retirement')."""
-    # x04/x05 joined the loop in r14 (ADVICE r13), x63 later: the
-    # minhash_lsh_pairs and banded_hamming_pairs joins carry the same
-    # pins, and a dropped hint there would regress to
-    # broadcast/sort-merge with no other test noticing.
+    # x04/x05 joined the loop in r14 (ADVICE r13), x63 and x51 later:
+    # the minhash_lsh_pairs, banded_hamming_pairs and span_dup_pairs
+    # joins carry the same pins, and a dropped hint there would regress
+    # to broadcast/sort-merge with no other test noticing.
     for q in (
         "x02_dedup_ngram_jaccard",
         "x04_dedup_minhash_lsh",
@@ -657,6 +659,7 @@ def test_dedup_scale_broadcast_guards(spark, sf_dir):
         "x38_containment",
         "x54_incremental_dedup",
         "x63_image_dup_pairs",
+        "x51_span_dups",
     ):
         plan = _plan(matrix.QUERIES[q](spark, sf_dir))
         assert "BroadcastHashJoin" not in plan, q

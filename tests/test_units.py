@@ -987,6 +987,22 @@ def test_scaled_join_partitions_degrades_without_spark_context():
     assert D.scaled_join_partitions(_Df()) is None
 
 
+def test_image_signatures_keep_source_input_bytes(spark, sf_dir):
+    """x63's banded hamming join sizes its partitions from the aHash
+    signature frame itself: the mapInPandas stages must not hide the
+    parquet scan from ``inputFiles()``, or the corpus-scaled partition
+    count silently falls back to the session conf."""
+    from sql_engine_spark.catalog import load_table
+    from sql_engine_spark.operators import dedup as D
+    from sql_engine_spark.operators.multimodal import encode_text_as_png, image_avg_hash
+
+    docs = load_table(spark, sf_dir, "documents")
+    payload = encode_text_as_png(docs)
+    src = D._input_bytes(payload)
+    assert src is not None and src == D._input_bytes(docs)
+    assert D._input_bytes(image_avg_hash(payload)) == src
+
+
 def test_memo_builds_uncached_without_session_uuid():
     """The dedup memos are keyed by the JVM session UUID. A session
     whose UUID cannot be read must not fall back to ``id(session)``,
