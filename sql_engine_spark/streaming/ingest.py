@@ -81,18 +81,21 @@ def stream_incremental_dedup(
         .start()
     )
     q.awaitTermination()
-    # Only the legitimately-empty case (no batch ever wrote a file —
-    # the path is missing or holds no readable parquet) falls back to
-    # an empty frame. The check goes through Spark's own reader, so it
-    # is filesystem-agnostic (hdfs://, s3a://, local alike); any OTHER
+    # The sink is read back with its declared schema, so no job runs to
+    # infer one; an existing directory with no batch files reads as
+    # empty. Only a missing path (no batch ever wrote) falls back to an
+    # empty frame. The check goes through Spark's own reader, so it is
+    # filesystem-agnostic (hdfs://, s3a://, local alike); any OTHER
     # failure (corrupt part, permissions) must SURFACE, not silently
     # report "no duplicates".
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(out_path).select("id_new", "id_old", "jaccard")
+        return spark.read.schema(_PAIRS_SCHEMA).parquet(out_path).select(
+            "id_new", "id_old", "jaccard"
+        )
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: None)() or ""
-        if "PATH_NOT_FOUND" in cls or "UNABLE_TO_INFER_SCHEMA" in cls:
+        if "PATH_NOT_FOUND" in cls:
             return spark.createDataFrame([], _PAIRS_SCHEMA)
         raise

@@ -405,6 +405,7 @@ def stream_late_data_accounting(
         )
     )
     out_path = _os.path.join(work_dir, "out")
+    out_schema = "bucket string, n_events long"
     q = (
         agg.writeStream.trigger(availableNow=True)
         .outputMode("update")
@@ -421,11 +422,9 @@ def stream_late_data_accounting(
         for op in d.get("stateOperators", []):
             dropped += op.get("numRowsDroppedByWatermark", 0)
     final = (
-        spark.read.parquet(out_path)
+        spark.read.schema(out_schema).parquet(out_path)
         .groupBy("bucket")
         .agg(F.max_by("n_events", "__batch_id").alias("n_events"))
     )
-    sentinel = spark.createDataFrame(
-        [("LATE_DROPPED", dropped)], "bucket string, n_events long"
-    )
+    sentinel = spark.createDataFrame([("LATE_DROPPED", dropped)], out_schema)
     return final.unionByName(sentinel)
