@@ -5,13 +5,22 @@ Replaces the reference's global in-memory catalog (``definedb`` parsing
 and ``populatedb`` slurping whole CSVs into row lists, sqlengine.py:104-117).
 Spark's catalog + analyzer take over name resolution; DataFrames stay
 lazy/columnar instead of materialized Python lists.
+
+Each table's schema is inferred once per session: ``load_table``
+memoizes Spark's inferred schema per (session UUID, path), keyed on a
+stamp of the path's files and the parquet inference confs, and reads
+later calls with that schema instead of running one inference job per
+call. The memo holds schemas only, never DataFrames, so every call
+still returns a relation with fresh expression ids.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from sql_engine_spark.session import rightsize_shuffle_partitions
 
@@ -32,6 +41,63 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# The confs that change the schema Spark infers from parquet footers.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# (session UUID, path) -> ((file stamp, inference confs), inferred
+# schema); one entry per (session, path), a new stamp replaces it. This
+# is session metadata, not a per-query build artifact:
+# dedup.clear_shingle_index does not clear it.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> "tuple[tuple, tuple] | None":
+    """((session UUID, path), (file stamp, inference confs)) for a local
+    path, or None when there is no memo to use: a non-local scheme
+    (``hdfs://``, ``s3a://``), a missing path, or a session without a
+    readable UUID. The stamp is the sorted (path, size, mtime_ns, inode)
+    of every file under ``path``, so a rewritten table misses."""
+    if "://" in path or not os.path.exists(path):
+        return None
+    try:
+        uuid = spark._jsparkSession.sessionUUID()
+    except Exception:
+        return None
+    if os.path.isdir(path):
+        files = [os.path.join(d, f) for d, _, names in os.walk(path) for f in names]
+    else:
+        files = [path]
+    stamp = []
+    for f in sorted(files):
+        st = os.stat(f)
+        stamp.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (uuid, path), (tuple(stamp), confs)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred at most
+    once per session and file stamp (the module docstring)."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    entry, version = key
+    with _SCHEMAS_LOCK:
+        memo = _SCHEMAS.get(entry)
+    if memo is not None and memo[0] == version:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[entry] = (version, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one table.
 
@@ -40,6 +106,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``) —
     the opposite of the reference, which loads every column of every row
     before any filtering (sqlengine.py:104-117).
+
+    The first call for a local path in a session infers the schema
+    (one Spark job); later calls reuse it and start no job until the
+    result runs, unless the path's files or the parquet inference confs
+    changed since (the module docstring). Every call returns a new
+    relation, so two results of one table self-join.
     """
     if name == "events":
         # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's
@@ -54,7 +126,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # only-for-callers-sessions rationale as nanosAsLong.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     rightsize_shuffle_partitions(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return _normalize_nanos_ts(df)
 
 
