@@ -9,8 +9,10 @@ Sources resolve in this order:
   directory (the reference's own table format).
 - ``--sf-dir DIR``: parquet corpus mode — registers the TESTDATA tables.
 
-Output goes to stdout (E17 print sink); ``--output PATH`` writes CSV
-instead (E18 CSV sink, distributed writer).
+Output goes to stdout through ``df.show`` (E17 print sink, the reference's
+``printOutput``, sqlengine.py:237-241); ``--output PATH`` writes a CSV
+directory with a header through ``df.write`` instead (E18 CSV sink, the
+legacy draft's ``dumpIntoOpFile``, modselect.py:200-203).
 """
 
 from __future__ import annotations
@@ -44,14 +46,10 @@ def main(argv: list[str] | None = None) -> int:
 
     df = run_sql(spark, ns.query)
     if ns.output:
-        from sql_engine_spark.sources.sinks import write_csv
-
-        write_csv(df, ns.output)
+        df.write.mode("overwrite").option("header", "true").csv(ns.output)
         print(f"wrote {ns.output}")
     else:
-        from sql_engine_spark.sources.sinks import show_stdout
-
-        show_stdout(df, n=ns.limit)
+        df.show(ns.limit, truncate=False)
     return 0
 
 

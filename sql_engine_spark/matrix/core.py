@@ -1,7 +1,16 @@
 """Tier E + Tier G matrix entries (SURVEY.md §2.1, §2.2) plus the
 TPC-H-style flagship queries. Each entry cites the reference operator
-it re-expresses; the Spark side is deliberately written through the
-engine's operator library so the library itself is what's tested.
+it re-expresses and calls the DataFrame API for it directly, so Catalyst
+plans what the reference hard-wired as scan → cartesian product →
+filter → project (reference sqlengine.py:384-410):
+
+- filters and projections push into the parquet scan;
+- a WHERE equality over a cross join becomes an equi-join
+  (sqlengine.py:120-135,161-195);
+- DISTINCT is a hash aggregate with map-side partials, not an O(n²)
+  list-membership scan (sqlengine.py:375-377);
+- aggregates run after the filter; the reference aggregates the
+  unfiltered join, a verified bug (sqlengine.py:280-281).
 """
 
 from __future__ import annotations
@@ -13,7 +22,6 @@ from pyspark.sql.window import Window
 from sql_engine_spark.catalog import load_table
 from sql_engine_spark.functions.money import cents, cents_sum_as_double, from_cents
 from sql_engine_spark.matrix import query, sql_avg_dollars, sql_cents, sql_sum_dollars
-from sql_engine_spark.operators import relational as R
 
 # ---------------------------------------------------------------------
 # Tier E — the operators the reference actually executes (§2.1)
@@ -27,13 +35,13 @@ from sql_engine_spark.operators import relational as R
 def e01_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 scan + E12 projection (reference sqlengine.py:104-117,322-380).
     Column pruning reaches the parquet footer (ReadSchema shows 3 cols)."""
-    return R.project(load_table(spark, sf_dir, "orders"), "o_orderkey", "o_custkey", "o_orderpriority")
+    return load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderpriority")
 
 
 @query("e02_star", oracle="SELECT * FROM region")
 def e02_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E13 star expansion (sqlengine.py:260-265,405-407)."""
-    return R.project(load_table(spark, sf_dir, "region"), "*")
+    return load_table(spark, sf_dir, "region").select("*")
 
 
 @query(
@@ -50,13 +58,13 @@ def e03_filter_comparisons(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sqlengine.py:138-158) in one conjunctive filter; pushed to the scan."""
     li = load_table(spark, sf_dir, "lineitem")
     pred = (
-        R.compare(F.col("l_quantity"), ">=", 30)
-        & R.compare(F.col("l_discount"), "<=", 0.02)
-        & R.compare(F.col("l_linenumber"), "!=", 3)
-        & R.compare(F.col("l_tax"), ">", 0.0)
-        & R.compare(F.col("l_quantity"), "<", 49)
+        (F.col("l_quantity") >= 30)
+        & (F.col("l_discount") <= 0.02)
+        & (F.col("l_linenumber") != 3)
+        & (F.col("l_tax") > 0.0)
+        & (F.col("l_quantity") < 49)
     )
-    return R.project(R.filter_rows(li, pred), "l_orderkey", "l_linenumber", "l_quantity", "l_discount")
+    return li.filter(pred).select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
 
 
 @query(
@@ -74,7 +82,7 @@ def e04_filter_andor_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = ((F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 200000.0)) | (
         (F.col("o_orderstatus") == "O") & (F.col("o_totalprice") < 50000.0)
     )
-    return R.project(R.filter_rows(o, pred), "o_orderkey", "o_orderstatus", "o_totalprice")
+    return o.filter(pred).select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
 @query(
@@ -85,11 +93,7 @@ def e05_negative_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Negative literals crash the reference (`.isdigit()` literal test,
     sqlengine.py:171); here they are ordinary literals (FIXTURES.md §A)."""
     c = load_table(spark, sf_dir, "customer")
-    return R.project(
-        R.filter_rows(c, (F.col("c_acctbal") > -100) & (F.col("c_acctbal") < 500)),
-        "c_custkey",
-        "c_acctbal",
-    )
+    return c.filter((F.col("c_acctbal") > -100) & (F.col("c_acctbal") < 500)).select("c_custkey", "c_acctbal")
 
 
 @query("e06_cross_join", oracle="SELECT r_name, n_name FROM region CROSS JOIN nation")
@@ -97,11 +101,8 @@ def e06_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3/E4 cartesian product (cartProd/joinTables, sqlengine.py:120-135)
     — legitimate only for tiny dimensions; Spark broadcasts the small side
     (BroadcastNestedLoopJoin), never materializing row lists."""
-    return R.project(
-        R.cross_join(load_table(spark, sf_dir, "region"), load_table(spark, sf_dir, "nation")),
-        "r_name",
-        "n_name",
-    )
+    r = load_table(spark, sf_dir, "region")
+    return r.crossJoin(load_table(spark, sf_dir, "nation")).select("r_name", "n_name")
 
 
 @query(
@@ -119,18 +120,17 @@ def e07_implicit_equi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (see tests/test_plans.py)."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    joined = R.filter_rows(
-        R.cross_join(o, c),
-        (F.col("o_custkey") == F.col("c_custkey")) & (F.col("o_totalprice") > 400000.0),
+    joined = o.crossJoin(c).filter(
+        (F.col("o_custkey") == F.col("c_custkey")) & (F.col("o_totalprice") > 400000.0)
     )
-    return R.project(joined, "o_orderkey", "c_name")
+    return joined.select("o_orderkey", "c_name")
 
 
 @query("e08_distinct", oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem")
 def e08_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E14 DISTINCT: hash aggregate (map-side partials) vs the
     reference's O(n²) list-membership scan (sqlengine.py:375-377)."""
-    return R.distinct(R.project(load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_linestatus"))
+    return load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
 @query(
@@ -147,8 +147,7 @@ def e09_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E15 MAX/MIN/SUM/AVG, multi-aggregate (sqlengine.py:274-294,
     driver :392-399). SUM/AVG via exact cents (see functions/money.py)."""
     li = load_table(spark, sf_dir, "lineitem")
-    return R.aggregate(
-        li,
+    return li.agg(
         F.max("l_quantity").alias("max_qty"),
         F.min("l_extendedprice").alias("min_price"),
         cents_sum_as_double("l_extendedprice").alias("sum_price"),
@@ -170,9 +169,8 @@ def e10_agg_after_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sqlengine.py:280-281; SURVEY.md §2.1). Ours aggregate the filtered
     rows, as SQL requires."""
     li = load_table(spark, sf_dir, "lineitem")
-    filtered = R.filter_rows(li, F.col("l_shipdate") >= F.to_timestamp(F.lit("1999-01-01")))
-    return R.aggregate(
-        filtered,
+    filtered = li.filter(F.col("l_shipdate") >= F.to_timestamp(F.lit("1999-01-01")))
+    return filtered.agg(
         cents_sum_as_double("l_quantity").alias("sum_qty"),
         F.count(F.lit(1)).alias("n_rows"),
     )
@@ -195,10 +193,10 @@ def g01_order_by_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference). Lowers to TakeOrderedAndProject (per-partition top-k),
     not a global sort. Unique tiebreak keys make the result set stable."""
     li = load_table(spark, sf_dir, "lineitem")
-    return R.order_limit(
-        R.project(li, "l_orderkey", "l_linenumber", "l_extendedprice"),
-        [F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(), F.col("l_linenumber").asc()],
-        limit=100,
+    return (
+        li.select("l_orderkey", "l_linenumber", "l_extendedprice")
+        .orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(), F.col("l_linenumber").asc())
+        .limit(100)
     )
 
 
@@ -209,9 +207,7 @@ def g01_order_by_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g02_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT/OFFSET (parser.py:113)."""
     o = load_table(spark, sf_dir, "orders")
-    return R.order_limit(
-        R.project(o, "o_orderkey", "o_totalprice"), [F.col("o_orderkey").asc()], limit=50, offset=100
-    )
+    return o.select("o_orderkey", "o_totalprice").orderBy(F.col("o_orderkey").asc()).offset(100).limit(50)
 
 
 @query(
@@ -226,11 +222,9 @@ def g03_group_by_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING (parser.py:105-109). Partial aggregation
     map-side, one shuffle on the group key."""
     c = load_table(spark, sf_dir, "customer")
-    agg = R.aggregate(
-        c,
+    agg = c.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_customers"),
         cents_sum_as_double("c_acctbal").alias("sum_acctbal"),
-        group_by=["c_nationkey"],
     )
     return agg.filter(F.col("sum_acctbal") > 0)
 
@@ -261,7 +255,7 @@ def g04_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g05_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return R.distinct(c.unionByName(s))
+    return c.unionByName(s).distinct()
 
 
 @query(
@@ -302,13 +296,11 @@ def g08_join_explicit_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    j = R.equi_join(o, c, F.col("o_custkey") == F.col("c_custkey"))
-    j = R.equi_join(j, n, F.col("c_nationkey") == F.col("n_nationkey"), broadcast_right=True)
-    return R.aggregate(
-        j,
+    j = o.join(c, F.col("o_custkey") == F.col("c_custkey"), "inner")
+    j = j.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"), "inner")
+    return j.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_orders"),
         cents_sum_as_double("o_totalprice").alias("total_price"),
-        group_by=["n_name"],
     )
 
 
@@ -323,12 +315,8 @@ def g09_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER JOIN (parser.py:90-102); NULL padding for unmatched."""
     n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
-    return R.project(
-        R.equi_join(n, s, F.col("n_nationkey") == F.col("s_nationkey"), how="left"),
-        "n_nationkey",
-        "n_name",
-        "s_suppkey",
-        "s_name",
+    return n.join(s, F.col("n_nationkey") == F.col("s_nationkey"), "left").select(
+        "n_nationkey", "n_name", "s_suppkey", "s_name"
     )
 
 
@@ -361,11 +349,9 @@ def g11_between_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BETWEEN + IN list (parser.py:81-82)."""
     li = load_table(spark, sf_dir, "lineitem")
     f = li.filter(F.col("l_quantity").between(10, 20) & F.col("l_returnflag").isin("A", "R"))
-    return R.aggregate(
-        f,
+    return f.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         cents_sum_as_double("l_extendedprice").alias("sum_price"),
-        group_by=["l_returnflag"],
     )
 
 
@@ -380,9 +366,7 @@ def g12_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (subquery) (parser.py:81) → left-semi join."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    return R.project(
-        o.join(c, F.col("o_custkey") == F.col("c_custkey"), "left_semi"), "o_orderkey", "o_custkey"
-    )
+    return o.join(c, F.col("o_custkey") == F.col("c_custkey"), "left_semi").select("o_orderkey", "o_custkey")
 
 
 @query(
@@ -396,9 +380,7 @@ def g13_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS correlated subquery (parser.py:62) → left-anti join."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
-    return R.project(
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti"), "c_custkey", "c_name"
-    )
+    return c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti").select("c_custkey", "c_name")
 
 
 @query(
@@ -411,11 +393,8 @@ def g13_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g14_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE pattern match (parser.py:80)."""
     p = load_table(spark, sf_dir, "part")
-    return R.project(
-        p.filter(F.col("p_name").like("%widget%") | F.col("p_type").like("PRO%")),
-        "p_partkey",
-        "p_name",
-        "p_type",
+    return p.filter(F.col("p_name").like("%widget%") | F.col("p_type").like("PRO%")).select(
+        "p_partkey", "p_name", "p_type"
     )
 
 
@@ -728,9 +707,7 @@ def g23_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive twin of g13's anti join)."""
     s = load_table(spark, sf_dir, "supplier")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45)
-    return R.project(
-        s.join(li, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi"), "s_suppkey", "s_name"
-    )
+    return s.join(li, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi").select("s_suppkey", "s_name")
 
 
 @query(
@@ -772,9 +749,7 @@ def g25_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REGEXP pattern match (parser.py:80) → rlike. The pattern sticks
     to syntax Java regex and RE2 agree on."""
     p = load_table(spark, sf_dir, "part")
-    return R.project(
-        p.filter(F.col("p_name").rlike("^[a-z]+ (widget|gadget) [0-9]+$")), "p_partkey", "p_name"
-    )
+    return p.filter(F.col("p_name").rlike("^[a-z]+ (widget|gadget) [0-9]+$")).select("p_partkey", "p_name")
 
 
 @query(

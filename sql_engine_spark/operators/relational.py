@@ -1,123 +1,20 @@
-"""Tier E relational operators, Spark-first (SURVEY.md §2.1).
+"""Relational operators Spark has no single call for (SURVEY.md §2.1).
 
-Each function here is the Spark-native counterpart of one operator the
-reference executes, with the reference's algorithm cited for parity
-checking. The mapping is intentionally thin: the whole point of the
-Spark build is that these lower to Catalyst plans that are strictly
-better than the reference's hard-wired
-scan → cartesian-product → filter → project pipeline
-(reference sqlengine.py:384-410):
+- :func:`salted_aggregate`: skew-safe two-phase grouped sum and count.
+- :func:`stratified_sample_exact`: deterministic exact-fraction
+  stratified sample.
 
-- filters/projections push into the parquet scan,
-- WHERE equality over a cross join becomes a real equi-join
-  (BroadcastHashJoin / SortMergeJoin) instead of a materialized
-  product + row filter (sqlengine.py:120-135,161-195),
-- DISTINCT is a hash aggregate with map-side partials instead of an
-  O(n²) list-membership scan (sqlengine.py:375-377),
-- aggregates run AFTER the filter — the reference aggregates the
-  unfiltered join, a verified bug (sqlengine.py:280-281) we do not
-  reproduce (SURVEY.md §2.1 notes).
+The reference's own operators (scan, product, filter, project,
+DISTINCT, aggregates, reference sqlengine.py:384-410) are plain
+DataFrame or Spark SQL calls; the matrix entries in ``matrix/core.py``
+make them directly.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# E6: the comparison operators the reference's checkCondition supports
-# (==, >=, <=, >, <, != — sqlengine.py:138-158). '=' is normalized to
-# '==' by the reference (sqlengine.py:178-179); both accepted here.
-_COMPARATORS = {
-    "==": Column.__eq__,
-    "=": Column.__eq__,
-    "!=": Column.__ne__,
-    "<>": Column.__ne__,
-    ">": Column.__gt__,
-    "<": Column.__lt__,
-    ">=": Column.__ge__,
-    "<=": Column.__le__,
-}
-
-
-def compare(left: Column | str, op: str, right) -> Column:
-    """E6/E7 comparison predicate (sqlengine.py:138-158,161-195).
-
-    Unlike the reference, the right side may be any literal — the
-    reference crashed on negative literals because its literal test was
-    ``str.isdigit()`` (sqlengine.py:171).
-    """
-    lhs = F.col(left) if isinstance(left, str) else left
-    rhs = F.col(right) if isinstance(right, str) else F.lit(right)
-    try:
-        return _COMPARATORS[op](lhs, rhs)
-    except KeyError:
-        raise ValueError(f"unsupported comparator {op!r}") from None
-
-
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """E9/E10 WHERE: arbitrarily nested AND/OR trees are plain Column
-    boolean algebra (`&`/`|`/`~`), replacing the reference's bitmap walk
-    (unwrapWhere/evalSets/filterRows, sqlengine.py:201-257). Catalyst
-    pushes the predicate below joins and into scans."""
-    return df.filter(predicate)
-
-
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """E12/E13 projection; ``project(df, "*")`` is star expansion
-    (sqlengine.py:322-380,260-265)."""
-    return df.select(*cols)
-
-
-def cross_join(*dfs: DataFrame) -> DataFrame:
-    """E3/E4 n-way cartesian product as a left fold, same shape as the
-    reference's ``joinTables`` fold (sqlengine.py:128-135) — but lazy,
-    and Catalyst converts σ∘× into an equi-join when a WHERE equality
-    exists (E11), so the product is rarely materialized."""
-    return reduce(DataFrame.crossJoin, dfs)
-
-
-def equi_join(
-    left: DataFrame, right: DataFrame, on: Column, how: str = "inner", broadcast_right: bool = False
-) -> DataFrame:
-    """E11 implicit equi-join (WHERE t1.c = t2.c over a product,
-    sqlengine.py:170-173,184-189) expressed directly. At scale: pass
-    ``broadcast_right=True`` for dimension tables to force a
-    BroadcastHashJoin (no shuffle of the fact side)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
-
-
-def distinct(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """E14 DISTINCT → hash aggregate with map-side combine; the
-    reference is an O(n²) first-occurrence scan (sqlengine.py:375-377).
-    """
-    return df.dropDuplicates(subset) if subset else df.distinct()
-
-
-def aggregate(df: DataFrame, *aggs: Column, group_by: list[str] | None = None) -> DataFrame:
-    """E15 MAX/MIN/SUM/AVG (+ GROUP BY, which the reference only parsed
-    — parser.py:105-109). Aggregates run on the *filtered* input,
-    correcting the verified reference bug (sqlengine.py:280-281)."""
-    if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
-    return df.agg(*aggs)
-
-
-def order_limit(
-    df: DataFrame, order: list[Column], limit: int | None = None, offset: int | None = None
-) -> DataFrame:
-    """Tier G ORDER BY / LIMIT / OFFSET (parser.py:88,111-113 — parsed,
-    never executed by the reference). ``orderBy().limit(k)`` lowers to
-    TakeOrderedAndProject: per-partition top-k then a single merge, no
-    global sort shuffle."""
-    out = df.orderBy(*order)
-    if offset is not None:
-        out = out.offset(offset)
-    if limit is not None:
-        out = out.limit(limit)
-    return out
+from pyspark.sql.window import Window
 
 
 def salted_aggregate(
@@ -141,8 +38,6 @@ def salted_aggregate(
     ``salt_col`` must be deterministic (e.g. pmod(xxhash64(row id), n))
     so retried tasks reproduce identical partials.
     """
-    from pyspark.sql import functions as F
-
     partial = (
         df.withColumn("__salt", F.pmod(salt_col, F.lit(n_salts)))
         .groupBy(*keys, "__salt")
@@ -175,9 +70,6 @@ def stratified_sample_exact(
     above the true product (0.1·45 → 4.500000000000001) and ceil one
     row too many, diverging from a DECIMAL-exact oracle.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     num = round(fraction * 1_000_000)
     w = Window.partitionBy(*strata)
     ranked = df.withColumn("__rn", F.row_number().over(w.orderBy(order_by))).withColumn(

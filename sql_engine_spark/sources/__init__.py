@@ -1,4 +1,3 @@
 from sql_engine_spark.sources.csv_catalog import load_reference_catalog, read_catalog_csv
-from sql_engine_spark.sources.sinks import write_csv, write_parquet
 
-__all__ = ["load_reference_catalog", "read_catalog_csv", "write_csv", "write_parquet"]
+__all__ = ["load_reference_catalog", "read_catalog_csv"]

@@ -34,24 +34,35 @@ def parse_metadata(metadata_path: str) -> dict[str, list[str]]:
     Same grammar the reference's ``definedb`` consumes
     (sqlengine.py:72-90): first line after ``<begin_table>`` is the table
     name, following lines until ``<end_table>`` are attribute names.
+    A framing token is never a name or a column: a missing name, a table
+    not closed before the next ``<begin_table>`` or the end of the file,
+    and a duplicate table name each raise ``ValueError`` naming the line.
     """
-    catalog: dict[str, list[str]] = {}
+
+    def fail(lineno: int, msg: str):
+        raise ValueError(f"{metadata_path}:{lineno}: {msg}")
+
     with open(metadata_path, encoding="utf-8") as fh:
-        lines = [ln.strip() for ln in fh if ln.strip()]
-    i = 0
-    while i < len(lines):
-        if lines[i] != BEGIN:
-            raise ValueError(f"{metadata_path}: expected {BEGIN!r} at line {i + 1}, got {lines[i]!r}")
-        name = lines[i + 1]
-        j = i + 2
-        cols: list[str] = []
-        while j < len(lines) and lines[j] != END:
-            cols.append(lines[j])
-            j += 1
-        if j >= len(lines):
-            raise ValueError(f"{metadata_path}: unterminated table {name!r}")
+        lines = iter([(n, ln.strip()) for n, ln in enumerate(fh, 1) if ln.strip()])
+    catalog: dict[str, list[str]] = {}
+    for n, tok in lines:
+        if tok != BEGIN:
+            fail(n, f"expected {BEGIN!r}, got {tok!r}")
+        n, name = next(lines, (n, None))
+        if name is None or name in (BEGIN, END):
+            fail(n, f"expected a table name after {BEGIN!r}, got {name or 'end of file'!r}")
+        if name in catalog:
+            fail(n, f"duplicate table {name!r}")
+        name_line, cols = n, []
+        for n, tok in lines:
+            if tok == END:
+                break
+            if tok == BEGIN:
+                fail(n, f"table {name!r} (line {name_line}) has no {END!r} before this {BEGIN!r}")
+            cols.append(tok)
+        else:
+            fail(name_line, f"unterminated table {name!r}: no {END!r}")
         catalog[name] = cols
-        i = j + 1
     return catalog
 
 

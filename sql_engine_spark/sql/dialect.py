@@ -4,10 +4,10 @@ The reference's grammar (reference parser.py:60-113, adapted from the
 SQLite SELECT grammar) accepts a few spellings Spark's ANTLR parser
 rejects. Rather than fork a parser, a tiny pre-rewrite normalizes the
 query text; Spark's own parser/analyzer does everything else
-(SURVEY.md §3.4). Handled:
+(SURVEY.md §3.4), including ``==`` (the reference's spelling,
+sqlengine.py:178-179) and trailing ``;``. Handled:
 
-- ``==`` → ``=``           (accepted by the reference, sqlengine.py:178-179)
-- trailing ``;`` stripped
+- ``MATCH`` rejected with :class:`UnsupportedSqlFeature` (parser.py:80)
 - ``X GLOB 'pat'``  → ``X RLIKE '^glob-as-regex$'``  (parser.py:80)
 - bind markers ``@name``/``$name`` → ``:name`` and ``?NNN`` →
   ``:__pNNN`` (reference parser.py:54-57 accepts all five SQLite
@@ -49,8 +49,8 @@ def _split_on_strings(q: str) -> list[tuple[bool, str]]:
     text: ``'...'`` string literals, ``"..."`` strings (SQLite treats
     double quotes as strings-or-identifiers; either way opaque), and
     backtick-quoted identifiers — an identifier containing ``@``,
-    ``$``, ``?`` or ``==`` must never be rewritten into a bind marker
-    or operator. Doubled-quote escapes ('' "" ``````) are handled."""
+    ``$`` or ``?`` must never be rewritten into a bind marker, nor
+    ``GLOB`` into ``RLIKE``. Doubled-quote escapes ('' "" ``````) are handled."""
     parts: list[tuple[bool, str]] = []
     buf: list[str] = []
     i, quote = 0, ""
@@ -111,7 +111,6 @@ class UnsupportedSqlFeature(Exception):
 
 
 def normalize_query(q: str) -> str:
-    q = q.strip().rstrip(";").strip()
     segs = _split_on_strings(q)
     # MATCH: the reference grammar accepts it (parser.py:80) but, like
     # SQLite without an FTS index, nothing can execute it. Fail with a
@@ -122,8 +121,6 @@ def normalize_query(q: str) -> str:
             "(the reference grammar parses it but cannot execute it either, "
             "matching SQLite without FTS); use LIKE / GLOB / REGEXP instead"
         )
-    # == → =  outside strings
-    segs = [(s, t) if s else (s, t.replace("==", "=")) for s, t in segs]
     # col GLOB 'pat' → col RLIKE 'regex' : GLOB keyword lives outside the
     # string; the following literal segment holds the pattern.
     out: list[str] = []

@@ -9,8 +9,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from sql_engine_spark.operators import relational as R
-
 ROWS = st.lists(
     st.tuples(
         st.integers(min_value=-1000, max_value=1000),
@@ -32,7 +30,7 @@ def test_filter_project_matches_python(spark, rows, t):
     df = spark.createDataFrame(rows or [(0, 0, 0)], "A long, B long, C long")
     if not rows:
         df = df.limit(0)
-    got = sorted((r.A, r.B) for r in R.project(R.filter_rows(df, F.col("A") > t), "A", "B").collect())
+    got = sorted((r.A, r.B) for r in df.filter(F.col("A") > t).select("A", "B").collect())
     want = sorted((a, b) for a, b, _ in rows if a > t)
     assert got == want
 
@@ -43,7 +41,7 @@ def test_distinct_matches_python(spark, rows):
     df = spark.createDataFrame(rows or [(0, 0, 0)], "A long, B long, C long")
     if not rows:
         df = df.limit(0)
-    got = sorted((r.A, r.B) for r in R.distinct(R.project(df, "A", "B")).collect())
+    got = sorted((r.A, r.B) for r in df.select("A", "B").distinct().collect())
     want = sorted({(a, b) for a, b, _ in rows})
     assert got == want
 
@@ -56,8 +54,7 @@ def test_aggregates_respect_where(spark, rows, t):
     df = spark.createDataFrame(rows or [(0, 0, 0)], "A long, B long, C long")
     if not rows:
         df = df.limit(0)
-    out = R.aggregate(
-        R.filter_rows(df, F.col("A") > t),
+    out = df.filter(F.col("A") > t).agg(
         F.max("B").alias("mx"),
         F.min("B").alias("mn"),
         F.sum("B").alias("s"),

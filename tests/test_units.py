@@ -3,15 +3,13 @@ shape helpers."""
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from sql_engine_spark.matrix import sql_cents, sql_sum_dollars
 from sql_engine_spark.sources.csv_catalog import parse_metadata
 from sql_engine_spark.sql.dialect import glob_to_regex, normalize_query
-
-
-def test_normalize_double_equals():
-    assert normalize_query("select * from t where a == 1;") == "select * from t where a = 1"
 
 
 def test_normalize_preserves_string_literals():
@@ -38,10 +36,26 @@ def test_parse_metadata(tmp_path):
     assert parse_metadata(str(p)) == {"t1": ["A", "B"], "t2": ["X"]}
 
 
-def test_parse_metadata_unterminated(tmp_path):
+@pytest.mark.parametrize(
+    "text, line",
+    [
+        pytest.param("<begin_table>\nt1\nA\n", 2, id="no_end_at_eof"),
+        pytest.param("<begin_table>\n", 1, id="lone_begin"),
+        pytest.param("<begin_table>\n<end_table>\n<begin_table>\nt2\nX\n<end_table>\n", 2, id="empty_table"),
+        pytest.param(
+            "<begin_table>\nt1\nA\n<begin_table>\nt2\nX\n<end_table>\n", 4, id="no_end_before_begin"
+        ),
+        pytest.param(
+            "<begin_table>\nt1\nA\n<end_table>\n\n<begin_table>\nt1\nB\n<end_table>\n", 7, id="duplicate_name"
+        ),
+    ],
+)
+def test_parse_metadata_unterminated(tmp_path, text, line):
+    """Malformed framing is a ValueError naming its line (blank lines
+    count); a framing token never becomes a table name or a column."""
     p = tmp_path / "metadata.txt"
-    p.write_text("<begin_table>\nt1\nA\n")
-    with pytest.raises(ValueError):
+    p.write_text(text)
+    with pytest.raises(ValueError, match=rf"metadata\.txt:{line}: "):
         parse_metadata(str(p))
 
 
@@ -96,8 +110,19 @@ def test_cli_main_csv_sink(spark, tmp_path):
     dest = str(tmp_path / "out_csv")
     rc = main(["select distinct A, B from table1;", "--catalog", fixtures, "--output", dest])
     assert rc == 0
-    rows = spark.read.option("header", "true").csv(dest)
-    assert rows.count() == 10
+    import csv
+    import glob
+
+    with open(os.path.join(fixtures, "table1.csv"), newline="") as fh:
+        want = {(a, b) for a, b, _ in csv.reader(fh)}
+    got = []
+    for part in sorted(glob.glob(os.path.join(dest, "part-*.csv"))):
+        with open(part, newline="") as fh:
+            reader = csv.reader(fh)
+            assert next(reader) == ["A", "B"]
+            got += [tuple(r) for r in reader]
+    assert len(got) == len(want) == 10
+    assert set(got) == want
 
 
 def test_run_sql_bind_params(spark):
@@ -106,6 +131,10 @@ def test_run_sql_bind_params(spark):
     spark.range(10).createOrReplaceTempView("bind_t")
     assert run_sql(spark, "select count(*) as n from bind_t where id > :lo", {"lo": 6}).first().n == 3
     assert run_sql(spark, "select count(*) as n from bind_t where id > ?", [6]).first().n == 3
+    # Spark parses trailing semicolons itself, also on bound queries.
+    plain = run_sql(spark, "select id from bind_t where id > 6").collect()
+    assert run_sql(spark, "select id from bind_t where id > 6;;").collect() == plain
+    assert run_sql(spark, "select id from bind_t where id > ?;", [6]).collect() == plain
 
 
 def test_resize_images_deterministic(spark, sf_dir):
@@ -124,24 +153,6 @@ def test_resize_images_deterministic(spark, sf_dir):
         assert got[r.doc_id] == (
             32, 32, 1024, hashlib.sha256(expect.hex().upper().encode()).hexdigest(),
         )
-
-
-def test_io_round_trips_all_formats(spark, sf_dir, tmp_path):
-    """The exported writers preserve rows and schema: parquet, and CSV
-    read back with an explicit schema."""
-    from sql_engine_spark.sources import sinks
-
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    want = sorted(map(tuple, src.collect()))
-    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields)
-
-    sinks.write_parquet(src, str(tmp_path / "p"))
-    assert sorted(map(tuple, spark.read.parquet(str(tmp_path / "p")).collect())) == want
-
-    sinks.write_csv(src, str(tmp_path / "c"))
-    got_csv = spark.read.schema(ddl).option("header", "true").csv(str(tmp_path / "c"))
-    assert sorted(map(tuple, got_csv.collect())) == want
-    assert got_csv.schema == src.schema
 
 
 # --- pure-Python media codec ----------------------------------------
@@ -257,11 +268,10 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from sql_engine_spark.catalog import load_table
-    from sql_engine_spark.sources.sinks import write_parquet
 
     ev = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "events_by_type")
-    write_parquet(ev, out, partition_by=["event_type"])
+    ev.write.partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
     buf = _io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -1054,3 +1064,73 @@ def test_bench_ann_recall_keys_fracs_and_determinism(spark, sf_dir):
             assert set(point) in ({"recall_at_10", "scan_frac"}, {"recall_at_10", "probe_frac"})
             assert all(0.0 <= v <= 1.0 for v in point.values()), (name, point)
     assert bench._ann_recall(spark, sf_dir) == rec
+
+
+# Public engine defs that no engine, bench, tools or perfbench code
+# calls yet, each kept for a documented reason.
+_UNREACHED_ALLOWED = {
+    # IVF ingest and pre-partitioned top-k: the 100 TB path of the ANN
+    # index, which no sf-sized workload needs (SCALE.md:280).
+    "ivf_ingest",
+    "ivf_topk_prepartitioned",
+    # Bucketed write and co-located join: open as ROADMAP item 4.
+    "write_bucketed",
+    "co_located_join",
+    # Mergeable distinct sketch (SCALE.md:531); the portable-HLL test
+    # compares against it.
+    "mergeable_distinct",
+    # Exactly-once stream-to-parquet sink (SURVEY.md:625).
+    "stream_to_parquet_exactly_once",
+}
+
+
+def _is_query_entry(fn) -> bool:
+    for d in fn.decorator_list:
+        target = d.func if isinstance(d, ast.Call) else d
+        if isinstance(target, ast.Name) and target.id == "query":
+            return True
+    return False
+
+
+def test_every_public_engine_def_is_reached_from_non_test_code():
+    """No code that only tests reach: every public top-level ``def``
+    under ``sql_engine_spark/`` is referenced by name (a ``Name``,
+    ``Attribute`` or import alias) from engine modules, ``bench.py``,
+    ``tools/``, ``__spark_entry__.py`` or non-test ``perfbench/`` files.
+    Import aliases in package ``__init__`` files are re-exports and do
+    not count; ``@query`` matrix entries are reached through the
+    registry. Matching by name can only miss an unreached def whose
+    name is also used elsewhere, never fail a reached one."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    engine = sorted((root / "sql_engine_spark").rglob("*.py"))
+    sources = engine + [root / "bench.py", root / "__spark_entry__.py"]
+    sources += sorted((root / "tools").glob("*.py"))
+    sources += [p for p in sorted((root / "perfbench").glob("*.py")) if not p.name.startswith("test_")]
+
+    referenced: set[str] = set()
+    for path in sources:
+        reexports = path.name == "__init__.py"
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias) and not reexports:
+                referenced.update(node.name.split("."))
+
+    unreached = {}
+    for path in engine:
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not node.name.startswith("_")
+                and not _is_query_entry(node)
+                and node.name not in referenced
+            ):
+                unreached[node.name] = f"{path.relative_to(root)}:{node.lineno} {node.name}"
+    extra = sorted(v for k, v in unreached.items() if k not in _UNREACHED_ALLOWED)
+    assert not extra, "public defs only tests reach:\n" + "\n".join(extra)
+    # An allowlisted def that is now reached (or gone) leaves the list.
+    assert set(unreached) == _UNREACHED_ALLOWED, sorted(_UNREACHED_ALLOWED - set(unreached))
