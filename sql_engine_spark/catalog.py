@@ -6,12 +6,14 @@ and ``populatedb`` slurping whole CSVs into row lists, sqlengine.py:104-117).
 Spark's catalog + analyzer take over name resolution; DataFrames stay
 lazy/columnar instead of materialized Python lists.
 
-Each table's schema is inferred once per session: ``load_table``
-memoizes Spark's inferred schema per (session UUID, path), keyed on a
-stamp of the path's files and the parquet inference confs, and reads
-later calls with that schema instead of running one inference job per
-call. The memo holds schemas only, never DataFrames, so every call
-still returns a relation with fresh expression ids.
+Every table is read here, batch (``load_table``) and stream
+(``load_stream``) alike: the schema comes from the parquet footers, not
+from a copy declared next to a reader. It is inferred once per session:
+Spark's inferred schema is memoized per (session UUID, path), keyed on
+a stamp of the path's files and the parquet inference confs, and later
+reads use it instead of running one inference job per call. The memo
+holds schemas only, never DataFrames, so every call still returns a
+relation with fresh expression ids.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from sql_engine_spark.session import rightsize_shuffle_partitions
+from sql_engine_spark.session import pin_session_confs
 
 # The driver-generated synthetic corpus (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -81,21 +83,22 @@ def _schema_key(spark: SparkSession, path: str) -> "tuple[tuple, tuple] | None":
     return (uuid, path), (tuple(stamp), confs)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, with the schema inferred at most
-    once per session and file stamp (the module docstring)."""
+def _inferred_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at ``path``, inferred at
+    most once per session and file stamp (the module docstring); a
+    memo hit starts no job and builds no relation."""
     key = _schema_key(spark, path)
     if key is None:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path).schema
     entry, version = key
     with _SCHEMAS_LOCK:
         memo = _SCHEMAS.get(entry)
     if memo is not None and memo[0] == version:
-        return spark.read.schema(memo[1]).parquet(path)
-    df = spark.read.parquet(path)
+        return memo[1]
+    schema = spark.read.parquet(path).schema
     with _SCHEMAS_LOCK:
-        _SCHEMAS[entry] = (version, df.schema)
-    return df
+        _SCHEMAS[entry] = (version, schema)
+    return schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,27 +110,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the opposite of the reference, which loads every column of every row
     before any filtering (sqlengine.py:104-117).
 
-    The first call for a local path in a session infers the schema
-    (one Spark job); later calls reuse it and start no job until the
-    result runs, unless the path's files or the parquet inference confs
-    changed since (the module docstring). Every call returns a new
-    relation, so two results of one table self-join.
+    The session confs the results depend on are pinned first
+    (``session.pin_session_confs``): a caller's session may lack
+    ``nanosAsLong``, without which Spark rejects a TIMESTAMP(NANOS)
+    column, or UTC, without which the events ``ts`` would shift away
+    from the UTC-reading DuckDB oracle. The first call for a local
+    path in a session then infers the schema (one Spark job); later
+    calls reuse it and start no job until the result runs, unless the
+    path's files or the parquet inference confs changed since (the
+    module docstring). Every call returns a new relation, so two
+    results of one table self-join.
     """
-    if name == "events":
-        # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's
-        # reader rejects outright unless nanos surface as long. A
-        # caller-provided session (the driver's) may lack the conf, and
-        # it's a runtime SQL conf, so set it here before schema read.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # The NTZ→LTZ cast in _normalize_nanos_ts (and every downstream
-        # to_date/window) reads the session time zone; a caller-provided
-        # non-UTC session would shift instants away from the UTC-reading
-        # DuckDB oracle. Runtime SQL conf — pin it with the same
-        # only-for-callers-sessions rationale as nanosAsLong.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    rightsize_shuffle_partitions(spark)
-    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    return _normalize_nanos_ts(df)
+    pin_session_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return _normalize_nanos_ts(spark.read.schema(_inferred_schema(spark, path)).parquet(path))
+
+
+def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one table, with the schema and the
+    events ``ts`` normalisation of :func:`load_table`.
+
+    A file source cannot infer a schema mid-stream, so the stream is
+    read with the table's memoized inferred schema, under the same
+    pinned session confs: whichever timestamp type the corpus stores,
+    batch and stream see the same columns. New files named
+    ``<name>.parquet`` arriving in ``sf_dir`` would be picked up
+    incrementally in production."""
+    pin_session_confs(spark)
+    schema = _inferred_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return _normalize_nanos_ts(
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
+        .load(sf_dir)
+    )
 
 
 def _normalize_nanos_ts(df: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.functions.money import cents, from_cents
 from sql_engine_spark.matrix import query
 from sql_engine_spark.operators import dedup as D
@@ -745,7 +745,7 @@ def s01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     window → AvailableNow → memory sink). Bounded complete-mode output
     equals the batch aggregation, so the batch oracle checks the
     streaming engine's result (streaming/windows.py)."""
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     return SW.run_to_batch(SW.tumbling_window_agg(stream, width="1 hour"), output_mode="complete")
 
 
@@ -810,7 +810,7 @@ def s02_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py has asserted batch-equivalent since r2."""
     from sql_engine_spark.streaming.stateful import sessionize_stream
 
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     out = SW.run_to_batch(sessionize_stream(stream), output_mode="append")
     return out.select(
         "user_id",
@@ -867,7 +867,7 @@ def s03_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in exactly 2 windows. Bounded complete-mode output equals the
     batch expansion, which the oracle reproduces by unnesting both
     window starts per event."""
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     return SW.run_to_batch(
         SW.sliding_window_counts(stream, width="1 hour", slide="30 minutes"),
         output_mode="complete",
@@ -887,7 +887,7 @@ def s04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — the 100 TB-safe exactly-once path). The corpus has unique
     event_ids, so the lossless append-mode output equals the plain
     event set, which is exactly what the oracle checks."""
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     out = SW.run_to_batch(SW.streaming_dedup(stream), output_mode="append")
     return out.select(
         "event_id",
@@ -1228,7 +1228,7 @@ def s05_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState variant (s02), the native operator emits
     every session on the bounded run, so this one is fully
     oracle-checked."""
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     return SW.run_to_batch(
         SW.session_window_agg(stream, gap="30 minutes"), output_mode="complete"
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.matrix import query
 from sql_engine_spark.operators import pipeline as P
 
@@ -383,7 +383,7 @@ def s06_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch inequality join the oracle runs."""
     from sql_engine_spark.streaming import windows as SW
 
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     out = SW.run_to_batch(SW.interval_join(stream), output_mode="append")
     return out.select(
         "click_id",

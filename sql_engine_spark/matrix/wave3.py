@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.matrix import query
 from sql_engine_spark.operators import pipeline as P
 
@@ -326,7 +326,7 @@ def s07_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs."""
     from sql_engine_spark.streaming import windows as SW
 
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     dims = spark.createDataFrame(EVENT_WEIGHTS, "event_type string, weight int")
     return SW.run_to_batch(
         SW.static_enrich_agg(stream, dims, width="1 hour"), output_mode="complete"

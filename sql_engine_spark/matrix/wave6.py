@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.matrix import ORACLE, query
 from sql_engine_spark.matrix.ext import _JACCARD_PAIRS_CTE, _STOP_LIST
 from sql_engine_spark.operators import pipeline as P
@@ -103,13 +103,10 @@ def s08_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sql_engine_spark.streaming.ingest import (
-        read_documents_stream,
-        stream_incremental_dedup,
-    )
+    from sql_engine_spark.streaming.ingest import stream_incremental_dedup
 
     corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-    stream = read_documents_stream(spark, sf_dir).where(F.col("doc_id") % 10 == 0)
+    stream = load_stream(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
     # The returned DataFrame lazily reads from base/pairs, so the dir
     # must outlive this call — reclaim it at interpreter exit instead
     # of leaking one sink+checkpoint per invocation.

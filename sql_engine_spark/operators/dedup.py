@@ -647,22 +647,11 @@ def portable_shingle_index(
     )
 
 
-def minhash_band_keys(
-    n_bands: int, rows_per_band: int, seed: int, col: str = "sh", pre_reduced: bool = False
-) -> list[Column]:
-    """The b band-key COLUMN expressions over a shingle array column
-    ``col``: r affine minhashes folded modularly per band, band index in
-    the fold seed. Split out so signatures stay a pure scan-stage
-    expression list.
-
-    ``pre_reduced=True`` declares the array elements already reduced
-    mod P: the b·r transforms then skip their per-element ``s % P``.
-    The reduction is a SHARED subexpression of all 32 minhashes, but
-    expression CSE does not dedupe it across output fields (the
-    sketches.py r9 lesson), so the caller hoists it into ONE prior
-    projection — 1 mod per element instead of 32, same integers
-    ((a·(s mod P) + b) mod P ≡ (a·s' + b) mod P with s' = s mod P;
-    band-key equality asserted bit-exact in the r16 A/B)."""
+def minhash_band_keys(n_bands: int, rows_per_band: int, seed: int) -> list[Column]:
+    """The b band-key COLUMN expressions over the shingle array column
+    ``shm``, whose elements are already reduced mod P: r affine
+    minhashes folded modularly per band, band index in the fold seed.
+    Split out so signatures stay a pure scan-stage expression list."""
     coeffs = minhash_coeffs(n_bands * rows_per_band, seed)
 
     def _affine(a: int, b: int):
@@ -670,11 +659,9 @@ def minhash_band_keys(
         # array_index) to two-parameter higher-order-function lambdas,
         # so a `lambda s, i=i:` closure idiom would silently hash the
         # POSITION into each minhash.
-        if pre_reduced:
-            return lambda s: (F.lit(a) * s + F.lit(b)) % F.lit(MINHASH_P)
-        return lambda s: (F.lit(a) * (s % F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
+        return lambda s: (F.lit(a) * s + F.lit(b)) % F.lit(MINHASH_P)
 
-    minhashes = [F.array_min(F.transform(col, _affine(a, b))) for (a, b) in coeffs]
+    minhashes = [F.array_min(F.transform("shm", _affine(a, b))) for (a, b) in coeffs]
     band_keys = []
     for bidx in range(n_bands):
         k = F.lit(bidx + 1).cast("long")
@@ -730,12 +717,15 @@ def minhash_lsh_pairs(
     sh._corpus_input_bytes = _input_bytes(idx)
     # Hoist the mod-P reduction out of the b·r minhash transforms: one
     # projection materializes s mod P per element, so the 32 affine
-    # transforms skip their per-element mod (minhash_band_keys
-    # pre_reduced rationale; measured ~10% off the band-key stage).
+    # transforms skip their per-element mod. The reduction is a SHARED
+    # subexpression of all 32 minhashes, but expression CSE does not
+    # dedupe it across output fields (the sketches.py r9 lesson), so it
+    # gets its own projection: 1 mod per element instead of 32, same
+    # integers ((a·(s mod P) + b) mod P ≡ (a·s' + b) mod P with
+    # s' = s mod P; band-key equality asserted bit-exact in the r16
+    # A/B; measured ~10% off the band-key stage).
     shm = sh.select("id", F.transform("sh", lambda s: s % F.lit(MINHASH_P)).alias("shm"))
-    sig = shm.select(
-        "id", *minhash_band_keys(n_bands, rows_per_band, seed, col="shm", pre_reduced=True)
-    )
+    sig = shm.select("id", *minhash_band_keys(n_bands, rows_per_band, seed))
     n_sc = scaled_join_partitions(sh)
     # Long format: one shuffle on (band_idx, band_key) instead of b joins.
     ex = _cluster(

@@ -49,15 +49,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("byte_len", LongType()),
-        StructField("first_byte", IntegerType()),
-        StructField("sha256", StringType()),
-    ]
-)
-
 
 def attach_payload(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Wrap a source column as a multimodal (payload, meta) pair: the
@@ -480,14 +471,6 @@ def decode_media(payload: bytes, mime: str) -> bytes:
     return payload  # unknown mime: opaque passthrough
 
 
-def _maybe_error_schema(schema: StructType, strict: bool) -> StructType:
-    """Quarantine-mode output schema: the operator's schema plus a
-    nullable ``error`` string (null on healthy rows)."""
-    if strict:
-        return schema
-    return StructType([*schema.fields, StructField("error", StringType())])
-
-
 def _quarantined_batches(
     batches: Iterator[pd.DataFrame],
     strict: bool,
@@ -538,14 +521,27 @@ def _quarantined_batches(
         yield pd.DataFrame(cols)
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_bytes", LongType()),
-        StructField("frame_sha256", StringType()),
-    ]
-)
+# Spark type of each pandas dtype a payload stage's ``fields`` use.
+_SPARK_TYPES = {"Int64": LongType(), "Int32": IntegerType(), "object": StringType()}
+
+
+def _payload_stage(
+    df: DataFrame, strict: bool, fields: dict[str, str], row_fn, id_out: str = "doc_id"
+) -> DataFrame:
+    """One payload-touching ``mapInPandas`` stage over
+    (doc_id, payload, meta) through :func:`_quarantined_batches`. Its
+    output schema is derived from ``fields``: the long id column
+    ``id_out``, then each field's Spark type, then in quarantine mode
+    (``strict=False``) the nullable ``error`` string, null on healthy
+    rows."""
+    schema = StructType(
+        [StructField(id_out, LongType())]
+        + [StructField(f, _SPARK_TYPES[dt]) for f, dt in fields.items()]
+        + ([] if strict else [StructField("error", StringType())])
+    )
+    return df.select("doc_id", "payload", "meta").mapInPandas(
+        lambda b: _quarantined_batches(b, strict, fields, row_fn, id_out), schema=schema
+    )
 
 
 def frame_sample(
@@ -586,21 +582,7 @@ def frame_sample(
         return out
 
     fields = {"frame_idx": "Int64", "frame_bytes": "Int64", "frame_sha256": "object"}
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        lambda b: _quarantined_batches(b, strict, fields, _rows),
-        schema=_maybe_error_schema(FRAME_SCHEMA, strict),
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("resized_bytes", LongType()),
-        StructField("resized_sha256", StringType()),
-    ]
-)
+    return _payload_stage(df, strict, fields, _rows)
 
 
 def resize_images(
@@ -646,10 +628,7 @@ def resize_images(
         "resized_bytes": "Int64",
         "resized_sha256": "object",
     }
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        lambda b: _quarantined_batches(b, strict, fields, _rows),
-        schema=_maybe_error_schema(RESIZED_SCHEMA, strict),
-    )
+    return _payload_stage(df, strict, fields, _rows)
 
 
 PAYLOAD_SCHEMA = StructType(
@@ -659,17 +638,6 @@ PAYLOAD_SCHEMA = StructType(
         StructField("meta", MapType(StringType(), StringType())),
     ]
 )
-
-IMAGE_STATS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixel_bytes", LongType()),
-        StructField("pixel_sum", LongType()),
-    ]
-)
-
 
 def encode_text_as_png(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", width: int = 16
@@ -786,10 +754,7 @@ def image_stats(df: DataFrame, strict: bool = True) -> DataFrame:
         "n_pixel_bytes": "Int64",
         "pixel_sum": "Int64",
     }
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        lambda b: _quarantined_batches(b, strict, fields, _rows),
-        schema=_maybe_error_schema(IMAGE_STATS_SCHEMA, strict),
-    )
+    return _payload_stage(df, strict, fields, _rows)
 
 
 def extract_features(df: DataFrame, strict: bool = True) -> DataFrame:
@@ -811,21 +776,7 @@ def extract_features(df: DataFrame, strict: bool = True) -> DataFrame:
         ]
 
     fields = {"byte_len": "Int64", "first_byte": "Int32", "sha256": "object"}
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        lambda b: _quarantined_batches(b, strict, fields, _rows),
-        schema=_maybe_error_schema(FEATURE_SCHEMA, strict),
-    )
-
-
-AHASH_SCHEMA = StructType(
-    [
-        StructField("id", LongType()),
-        StructField("band0", LongType()),
-        StructField("band1", LongType()),
-        StructField("band2", LongType()),
-        StructField("band3", LongType()),
-    ]
-)
+    return _payload_stage(df, strict, fields, _rows)
 
 
 def image_avg_hash(df: DataFrame, grid: int = 8, strict: bool = True) -> DataFrame:
@@ -846,8 +797,9 @@ def image_avg_hash(df: DataFrame, grid: int = 8, strict: bool = True) -> DataFra
 
     if grid * grid != 64:
         # The banding contract is a 64-bit signature in 4 x 16-bit
-        # bands (AHASH_SCHEMA + banded_hamming_pairs); any other grid
-        # would silently hash a corner of the image or crash a task.
+        # bands (the band fields below + banded_hamming_pairs); any
+        # other grid would silently hash a corner of the image or crash
+        # a task.
         raise ValueError(f"image_avg_hash requires grid*grid == 64, got grid={grid}")
 
     def _rows(payload: bytes, meta) -> list[dict]:
@@ -909,10 +861,7 @@ def image_avg_hash(df: DataFrame, grid: int = 8, strict: bool = True) -> DataFra
         return [row]
 
     fields = {f"band{b}": "Int64" for b in range(4)}
-    return df.select("doc_id", "payload", "meta").mapInPandas(
-        lambda b: _quarantined_batches(b, strict, fields, _rows, id_out="id"),
-        schema=_maybe_error_schema(AHASH_SCHEMA, strict),
-    )
+    return _payload_stage(df, strict, fields, _rows, id_out="id")
 
 
 def image_dup_pairs(

@@ -27,6 +27,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamp semantics for the DuckDB oracle (naive
     # timestamps in parquet are interpreted as UTC on both sides).
+    # Pinned on every session the catalog reads through
+    # (pin_session_confs).
     "spark.sql.session.timeZone": "UTC",
     # ANSI semantics (Spark 4 default) match the DuckDB oracle: overflow
     # and bad casts are errors, not silent NULLs.
@@ -54,9 +56,11 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE")
     or os.environ.get("SPARK_GRAFT_CPUS")
     or "32",
-    # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's parquet
-    # reader rejects; read as long nanos and convert in the catalog
-    # (catalog.load_table) with exact integer division.
+    # events.parquet may store ts as TIMESTAMP(NANOS), which Spark's
+    # parquet reader rejects; read as long nanos and convert in the
+    # catalog (catalog._normalize_nanos_ts) with exact integer division.
+    # Pinned on every session the catalog reads through
+    # (pin_session_confs).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Keep scan partitions reasonable for small local files while still
     # splitting 100 TB inputs (default 128 MiB per partition).
@@ -172,29 +176,48 @@ def _g1_region_floor(heap: str) -> str | None:
     return _G1_REGION_FLOOR if size < 8 << 30 else None
 
 
-def rightsize_shuffle_partitions(spark: SparkSession) -> None:
-    """Right-size a STOCK session's shuffle partitions to its core
-    count — but ONLY when the conf is untouched default ("200"), so a
-    deliberate setting is never overridden (documented tradeoff: a
-    user who deliberately sets exactly 200 is indistinguishable from
-    the default — SURVEY §8.2 / ADVICE r2). On a local box the stock
-    200 is pure task-launch overhead for every non-AQE-coalescible
-    exchange (windows, sorts, streaming state — state partition counts
-    freeze into checkpoints at first batch); on a real cluster the
-    conf is always deliberate or AQE-managed and defaultParallelism is
-    cluster-sized, so this is a no-op/safe.
+# The _DEFAULTS entries that results depend on: UTC, so naive parquet
+# timestamps read as the instants DuckDB reads and window starts and
+# watermarks follow the same clock; nanosAsLong, so a TIMESTAMP(NANOS)
+# column reads at all.
+_PINNED: tuple[str, ...] = (
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
 
-    This is the ONLY place in the engine that writes
-    ``spark.sql.shuffle.partitions`` after the session is built: no
-    operator changes it for the length of a call, so a query planned
-    concurrently on the same session never sees a transient value.
-    The batch catalog and the stream readers share this one copy, so
-    the sentinel logic cannot drift between them."""
+
+def pin_session_confs(spark: SparkSession) -> None:
+    """Pin the session confs the engine's results depend on, on any
+    session: the catalog calls this before every read, so a session
+    the caller built without :func:`get_spark` (the driver's) reads
+    the corpus as the engine's own does.
+
+    - ``spark.sql.session.timeZone`` = UTC and
+      ``spark.sql.legacy.parquet.nanosAsLong`` = true, as in
+      ``_DEFAULTS``.
+    - ``spark.sql.shuffle.partitions`` is right-sized to the core count
+      ONLY when it is the untouched default ("200"), so a deliberate
+      setting is never overridden (documented tradeoff: a user who
+      deliberately sets exactly 200 is indistinguishable from the
+      default — SURVEY §8.2 / ADVICE r2). On a local box the stock
+      200 is pure task-launch overhead for every non-AQE-coalescible
+      exchange (windows, sorts, streaming state — state partition
+      counts freeze into checkpoints at first batch); on a real
+      cluster the conf is always deliberate or AQE-managed and
+      defaultParallelism is cluster-sized, so this is a no-op/safe.
+
+    A key is written only when its value differs, so a session built by
+    :func:`get_spark` sees no write at all. This is the ONLY place in
+    the engine that writes a session conf after the session is built:
+    no operator changes one for the length of a call, so a query
+    planned concurrently on the same session never sees a transient
+    value."""
+    confs = {k: _DEFAULTS[k] for k in _PINNED}
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(2, spark.sparkContext.defaultParallelism)),
-        )
+        confs["spark.sql.shuffle.partitions"] = str(max(2, spark.sparkContext.defaultParallelism))
+    for k, v in confs.items():
+        if spark.conf.get(k) != v:
+            spark.conf.set(k, v)
 
 
 def shuffle_partitions(spark: SparkSession) -> "int | None":

@@ -1,5 +1,4 @@
 from sql_engine_spark.streaming.windows import (
-    read_events_stream,
     run_to_batch,
     session_window_agg,
     sliding_window_counts,
@@ -7,7 +6,6 @@ from sql_engine_spark.streaming.windows import (
 )
 
 __all__ = [
-    "read_events_stream",
     "tumbling_window_agg",
     "sliding_window_counts",
     "session_window_agg",

@@ -16,35 +16,11 @@ replayed batch overwrites itself instead of duplicating pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from sql_engine_spark.session import rightsize_shuffle_partitions
 from sql_engine_spark.streaming.windows import _write_batch_partition
 
-DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
 _PAIRS_SCHEMA = "id_new long, id_old long, jaccard double"
-
-
-def read_documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-    glob: str = "documents.parquet",
-) -> DataFrame:
-    """File-source stream over the documents parquet (explicit schema —
-    file sources cannot infer mid-stream). ``max_files_per_trigger``
-    bounds micro-batch size; tests point this at a multi-file copy of
-    the corpus (glob='*.parquet') to force several batches."""
-    rightsize_shuffle_partitions(spark)
-    reader = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(sf_dir)
 
 
 def stream_incremental_dedup(

@@ -2,13 +2,14 @@
 (SURVEY.md §2.3 Tier X; the reference has no streaming construct at all
 — SURVEY.md §2.2 "Not present anywhere").
 
-Pattern: ``readStream`` file source → event-time watermark → windowed
-aggregation → sink. Tests and the driver harness run bounded with
-``Trigger.AvailableNow`` + memory sink, which processes the whole input
-and (in complete mode) emits exactly the batch-equivalent result — so
-the same DuckDB oracle SQL that checks the batch window aggregation
-checks the stream. In production the identical query runs unbounded
-with ``outputMode("append")``: the watermark bounds state, late events
+Pattern: ``readStream`` file source (``catalog.load_stream``) →
+event-time watermark → windowed aggregation → sink. Tests and the
+driver harness run bounded with ``Trigger.AvailableNow`` + memory
+sink, which processes the whole input and (in complete mode) emits
+exactly the batch-equivalent result — so the same DuckDB oracle SQL
+that checks the batch window aggregation checks the stream. In
+production the identical query runs unbounded with
+``outputMode("append")``: the watermark bounds state, late events
 beyond it are dropped, and finalized windows flush to a parquet/Delta
 sink incrementally.
 
@@ -18,78 +19,14 @@ streaming results are deterministic and oracle-matchable.
 
 from __future__ import annotations
 
-import os
 import uuid
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sql_engine_spark.functions.money import cents, from_cents
-from sql_engine_spark.session import rightsize_shuffle_partitions
-
-EVENTS_SCHEMA_NANOS = (
-    "event_id long, ts long, user_id long, event_type string, value double, props string"
-)
-EVENTS_SCHEMA_TS = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-)
-
-
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """Sniff the parquet footer: TIMESTAMP(NANOS) needs the
-    read-as-long + exact-divide workaround; TIMESTAMP(MICROS) reads
-    natively. One footer read at stream start — the schema-bootstrap
-    step any production file-source stream does once (file sources
-    cannot infer schema mid-stream).
-
-    Failure policy: only a MISSING FILE (or a footer without ``ts``)
-    answers False — those genuinely mean "no nanos column to work
-    around". A broken/absent pyarrow must NOT silently answer False:
-    the session-wide ``nanosAsLong=true`` conf would then surface a
-    nanos corpus as long while the stream schema says timestamp,
-    failing at runtime far from the cause — so import errors
-    propagate to the caller, naming the real problem."""
-    import pyarrow.parquet as pq
-
-    try:
-        t = pq.ParquetFile(os.path.join(sf_dir, "events.parquet")).schema_arrow.field("ts").type
-    except (FileNotFoundError, OSError, KeyError):
-        return False
-    # prefix match: tz-annotated nanos ("timestamp[ns, tz=UTC]")
-    # needs the same long-read workaround as plain nanos.
-    return str(t).startswith("timestamp[ns")
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet. File sources need an
-    explicit schema (no inference mid-stream); new files arriving in the
-    directory would be picked up incrementally in production. A ``ts``
-    stored as TIMESTAMP(NANOS) (which Spark's reader rejects as a
-    timestamp) is read as long nanos (see session.py) and converted to
-    a µs timestamp with exact integer division; TIMESTAMP(MICROS)
-    corpora read directly."""
-    # Same stock-conf right-sizing as catalog.load_table: a vanilla
-    # session that starts with a STREAMING query would otherwise run
-    # every stateful operator with 200 state-store partitions — pure
-    # per-micro-batch overhead on a local box, and the partition count
-    # is frozen into the query's checkpoint at start.
-    rightsize_shuffle_partitions(spark)
-    # Same UTC pin as catalog.load_table("events"): window starts are
-    # formatted as wall-clock strings and watermark comparisons read
-    # the session zone — a caller-provided non-UTC session would drift
-    # from the batch/DuckDB oracle.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    nanos = _events_ts_is_nanos(sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA_NANOS if nanos else EVENTS_SCHEMA_TS)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+from sql_engine_spark.session import pin_session_confs
 
 
 def tumbling_window_agg(
@@ -200,12 +137,11 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
     FIRST micro-batch to ``spark.sql.shuffle.partitions`` (AQE never
     coalesces streaming state), so the count is the session's
     ``spark.sql.shuffle.partitions``. ``session.get_spark`` and
-    :func:`read_events_stream` (through ``rightsize_shuffle_partitions``)
-    already set it to the core count, and a deliberate setting (such as
-    ``SPARK_GRAFT_SHUFFLE``) overrides that, as
-    ``rightsize_shuffle_partitions`` promises. The run changes no
-    session conf, so a query planned concurrently on the same session
-    is unaffected."""
+    ``catalog.load_stream`` (through ``pin_session_confs``) already set
+    it to the core count, and a deliberate setting (such as
+    ``SPARK_GRAFT_SHUFFLE``) overrides that, as ``pin_session_confs``
+    promises. The run changes no session conf, so a query planned
+    concurrently on the same session is unaffected."""
     spark = stream_df.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
     q = (
@@ -364,8 +300,7 @@ def stream_late_data_accounting(
     import time as _time
 
     spark = events.sparkSession
-    rightsize_shuffle_partitions(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session_confs(spark)
 
     on_time = F.col("event_id") % late_mod != 0
     shards = (
@@ -390,7 +325,7 @@ def stream_late_data_accounting(
         _os.utime(dest, (now - 300 + i * 100, now - 300 + i * 100))
 
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_TS)
+        spark.readStream.schema(events.schema)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
         .load(in_dir)

@@ -94,17 +94,15 @@ def test_partial_aggregation_map_side(spark, sf_dir):
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path_factory):
     """Bucketing both join sides on the key elides the Exchange on both
     sides — the write-once/join-many co-location that makes fact⋈fact
-    joins survive 100 TB (sources/bucketing.py)."""
-    from sql_engine_spark.sources.bucketing import co_located_join, write_bucketed
-
+    joins survive 100 TB (Spark's own ``bucketBy``)."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "o_custkey")
-    write_bucketed(o, "b_orders", ["o_custkey"], n_buckets=8)
-    write_bucketed(c, "b_customer", ["o_custkey"], n_buckets=8)
+    for df, table in ((o, "b_orders"), (c, "b_customer")):
+        df.write.mode("overwrite").format("parquet").bucketBy(8, "o_custkey").saveAsTable(table)
     # Disable broadcast so the join would otherwise shuffle both sides.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = co_located_join(spark, "b_orders", "b_customer", on=["o_custkey"])
+        j = spark.table("b_orders").join(spark.table("b_customer"), on=["o_custkey"])
         plan = _plan(j)
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan

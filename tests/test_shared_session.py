@@ -33,11 +33,13 @@ def _run_together(*fns):
 
 
 def test_no_operator_writes_shuffle_partitions(spark, sf_dir, monkeypatch):
-    """The distributed connected-components loop and a streaming run
-    leave ``spark.sql.shuffle.partitions`` alone: a query planned on
-    the same session meanwhile must never see a transient value. The
-    session conf is already deliberate ("8"), so the one sanctioned
-    writer, ``rightsize_shuffle_partitions``, stays silent too."""
+    """The distributed connected-components loop, a batch read of
+    ``events`` and the streaming runs of s04 and s08 write no session
+    conf at all: a query planned on the same session meanwhile must
+    never see a transient value. Every conf the one sanctioned writer,
+    ``session.pin_session_confs``, pins is already at its value on the
+    engine session (shuffle partitions deliberately "8", UTC,
+    ``nanosAsLong``), so it stays silent too."""
     written: list[str] = []
     orig_set = RuntimeConfig.set
 
@@ -50,9 +52,10 @@ def test_no_operator_writes_shuffle_partitions(spark, sf_dir, monkeypatch):
     verts = spark.createDataFrame([(i,) for i in range(101)], "doc_id long")
     out = D.connected_components(edges, verts, max_iterations=8, driver_threshold=0)
     assert {r.component for r in out.collect()} == {0}
-    stream_out = matrix.QUERIES["s04_stream_dedup"](spark, sf_dir)
-    assert stream_out.count() > 0
-    assert "spark.sql.shuffle.partitions" not in written, written
+    assert load_table(spark, sf_dir, "events").count() > 0
+    for name in ("s04_stream_dedup", "s08_stream_ingest_dedup"):
+        assert matrix.QUERIES[name](spark, sf_dir).count() > 0, name
+    assert written == [], written
 
 
 def test_memo_builds_once_under_concurrent_callers(spark, sf_dir, monkeypatch):

@@ -6,15 +6,21 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.functions.money import cents, from_cents
 from sql_engine_spark.streaming import windows as SW
 from sql_engine_spark.streaming.stateful import sessionize_stream
 
 
+# The events columns, for the hand-built corpora of the late-data tests.
+EVENT_COLUMNS = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
+
+
 @pytest.fixture(scope="module")
 def events_stream(spark, sf_dir):
-    return SW.read_events_stream(spark, sf_dir)
+    return load_stream(spark, sf_dir, "events")
 
 
 @pytest.fixture(scope="module")
@@ -191,7 +197,7 @@ def test_stream_to_parquet_sink(spark, sf_dir, events_batch, tmp_path):
 
     def run() -> None:
         q = (
-            SW.read_events_stream(spark, sf_dir)
+            load_stream(spark, sf_dir, "events")
             .select("event_id", "user_id", "event_type", "value")
             .writeStream.format("parquet")
             .option("path", out)
@@ -216,7 +222,7 @@ def test_foreach_batch_sink_exactly_once(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     agg = SW.tumbling_window_agg(stream, width="1 hour")
     SW.stream_to_parquet_exactly_once(agg, out, ckpt)
     n1 = spark.read.parquet(out).count()
@@ -259,7 +265,7 @@ def test_late_accounting_sentinel_matches_threshold(spark, tmp_path):
     rows.append((50, base + dt.timedelta(minutes=5), 1, "view", 1.0, "{}"))
     # late id 100 at +66 min: window [60,70) ends +70 > watermark -> KEPT
     rows.append((100, base + dt.timedelta(minutes=66), 1, "view", 1.0, "{}"))
-    df = spark.createDataFrame(rows, SW.EVENTS_SCHEMA_TS)
+    df = spark.createDataFrame(rows, EVENT_COLUMNS)
     out = SW.stream_late_data_accounting(df, str(tmp_path / "s09"))
     got = {r.bucket: r.n_events for r in out.collect()}
     assert got.pop("LATE_DROPPED") == 1
@@ -293,7 +299,7 @@ def test_late_watermark_is_first_shard_only(spark, tmp_path):
     # late event at +95 min: window [90,100) end +100 min; even-shard
     # watermark = +98 min - 30.008 min < +100 -> kept
     rows.append((150, base + dt.timedelta(minutes=95), 1, "view", 1.0, "{}"))
-    df = spark.createDataFrame(rows, SW.EVENTS_SCHEMA_TS)
+    df = spark.createDataFrame(rows, EVENT_COLUMNS)
     out = SW.stream_late_data_accounting(df, str(tmp_path / "s09a"))
     got = {r.bucket: r.n_events for r in out.collect()}
     assert got.pop("LATE_DROPPED") == 0
@@ -319,7 +325,7 @@ def test_late_dropped_counts_windows_not_events(spark, tmp_path):
     # the ~+68 min watermark -> one dropped window group
     rows.append((50, base + dt.timedelta(minutes=5), 1, "view", 1.0, "{}"))
     rows.append((100, base + dt.timedelta(minutes=6), 1, "view", 1.0, "{}"))
-    df = spark.createDataFrame(rows, SW.EVENTS_SCHEMA_TS)
+    df = spark.createDataFrame(rows, EVENT_COLUMNS)
     out = SW.stream_late_data_accounting(df, str(tmp_path / "s09b"))
     got = {r.bucket: r.n_events for r in out.collect()}
     assert got.pop("LATE_DROPPED") == 1
@@ -357,3 +363,66 @@ def test_s02_cents_tie_rule_pinned():
     # the values are genuinely adversarial: Python's half-even round
     # disagrees on every one (i.e. this test would catch a revert)
     assert all(int(round(v * 100)) != g for v, g in zip(vals, got_py))
+
+
+def _event_reads(spark, sf_dir):
+    """The events table read three ways, each as a sorted list of rows:
+    the batch rows (``ts`` as epoch µs and as a session-zone string),
+    an s04-shaped ``streaming_dedup`` run and a tumbling-window run,
+    both over ``load_stream``."""
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    batch = load_table(spark, sf_dir, "events")
+    dedup = SW.run_to_batch(
+        SW.streaming_dedup(load_stream(spark, sf_dir, "events")), output_mode="append"
+    )
+    tumbling = SW.run_to_batch(
+        SW.tumbling_window_agg(load_stream(spark, sf_dir, "events"), width="1 hour")
+    )
+    return (
+        rows(
+            batch.select(
+                "event_id", "user_id", "event_type", "value", "props",
+                F.unix_micros("ts"), F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+            )
+        ),
+        rows(
+            dedup.select(
+                "event_id", "user_id", "event_type", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
+            )
+        ),
+        rows(tumbling),
+    )
+
+
+@pytest.mark.parametrize("session", ["engine", "unpinned"])
+def test_nanos_corpus_reads_as_micros(spark, sf_dir, tmp_path, session):
+    """An events file that stores ``ts`` as TIMESTAMP(NANOS) reads,
+    batch and stream, exactly as the µs corpus does. ``unpinned`` runs
+    on a new session whose time zone is not UTC and whose
+    ``nanosAsLong`` is off, so the rows only match if the catalog pins
+    both before it reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(table, str(tmp_path / "events.parquet"), version="2.6")
+    assert str(pq.ParquetFile(str(tmp_path / "events.parquet")).schema_arrow.field("ts").type) == (
+        "timestamp[ns]"
+    )
+
+    expect = _event_reads(spark, sf_dir)
+    reader = spark
+    if session == "unpinned":
+        reader = spark.newSession()
+        reader.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        reader.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    got = _event_reads(reader, str(tmp_path))
+    for want, have in zip(expect, got):
+        assert len(want) > 0
+        assert have == want
+    assert reader.conf.get("spark.sql.session.timeZone") == "UTC"

@@ -1073,9 +1073,6 @@ _UNREACHED_ALLOWED = {
     # index, which no sf-sized workload needs (SCALE.md:280).
     "ivf_ingest",
     "ivf_topk_prepartitioned",
-    # Bucketed write and co-located join: open as ROADMAP item 4.
-    "write_bucketed",
-    "co_located_join",
     # Mergeable distinct sketch (SCALE.md:531); the portable-HLL test
     # compares against it.
     "mergeable_distinct",
@@ -1134,3 +1131,28 @@ def test_every_public_engine_def_is_reached_from_non_test_code():
     assert not extra, "public defs only tests reach:\n" + "\n".join(extra)
     # An allowlisted def that is now reached (or gone) leaves the list.
     assert set(unreached) == _UNREACHED_ALLOWED, sorted(_UNREACHED_ALLOWED - set(unreached))
+
+
+def test_only_session_module_writes_session_conf():
+    """No operator path writes a session conf: the only call of the form
+    ``<x>.conf.set(...)`` under ``sql_engine_spark/`` is in
+    ``session.py`` (``pin_session_confs``), so a query planned on a
+    shared session never sees a value another call set meanwhile."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    allowed = root / "sql_engine_spark" / "session.py"
+    writes = []
+    for path in sorted((root / "sql_engine_spark").rglob("*.py")):
+        if path == allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                writes.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not writes, "session conf written outside session.py:\n" + "\n".join(writes)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sql_engine_spark.catalog import load_table
+from sql_engine_spark.catalog import load_stream, load_table
 from sql_engine_spark.operators.pipeline import MIX_HASH_K, length_histogram, weighted_mix
 
 
@@ -85,7 +85,7 @@ def test_stream_static_enrich_equals_batch(spark, sf_dir):
     from sql_engine_spark.functions.money import cents, from_cents
     from sql_engine_spark.streaming import windows as SW
 
-    stream = SW.read_events_stream(spark, sf_dir)
+    stream = load_stream(spark, sf_dir, "events")
     dims = spark.createDataFrame(EVENT_WEIGHTS, "event_type string, weight int")
     got = SW.run_to_batch(SW.static_enrich_agg(stream, dims), output_mode="complete")
 

@@ -98,10 +98,7 @@ def test_stream_ingest_dedup_batch_invariant(spark, docs, tmp_path):
     (maxFilesPerTrigger=1 over a multi-file copy) — the unioned stream
     output must equal the one-shot batch computation AND x54's
     id-mod incremental dedup, proving batch-boundary invariance."""
-    from sql_engine_spark.streaming.ingest import (
-        read_documents_stream,
-        stream_incremental_dedup,
-    )
+    from sql_engine_spark.streaming.ingest import stream_incremental_dedup
 
     new_docs = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -110,7 +107,7 @@ def test_stream_ingest_dedup_batch_invariant(spark, docs, tmp_path):
     n_files = len([f for f in __import__("os").listdir(src) if f.endswith(".parquet")])
     assert n_files >= 2  # several micro-batches
 
-    stream = read_documents_stream(spark, src, max_files_per_trigger=1, glob="*.parquet")
+    stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
     got_df = stream_incremental_dedup(
         stream, corpus, out_path=str(tmp_path / "pairs"), checkpoint=str(tmp_path / "ckpt")
     )
@@ -143,10 +140,7 @@ def test_stream_ingest_dedup_replayed_batch_overwrites_its_partition(spark, docs
     files, pinned in batch order, each holding a doc with near-dups."""
     import os
 
-    from sql_engine_spark.streaming.ingest import (
-        read_documents_stream,
-        stream_incremental_dedup,
-    )
+    from sql_engine_spark.streaming.ingest import stream_incremental_dedup
 
     new_docs = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -165,7 +159,9 @@ def test_stream_ingest_dedup_replayed_batch_overwrites_its_partition(spark, docs
     out, ckpt = str(tmp_path / "pairs"), str(tmp_path / "ckpt")
 
     def run():
-        stream = read_documents_stream(spark, str(src), max_files_per_trigger=1, glob="*.parquet")
+        stream = (
+            spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+        )
         got = stream_incremental_dedup(stream, corpus, out_path=out, checkpoint=ckpt)
         return sorted(tuple(r) for r in got.collect())
 
@@ -184,14 +180,11 @@ def test_stream_ingest_dedup_replayed_batch_overwrites_its_partition(spark, docs
 
 
 def test_stream_ingest_dedup_empty_stream(spark, docs, tmp_path):
-    from sql_engine_spark.streaming.ingest import (
-        read_documents_stream,
-        stream_incremental_dedup,
-    )
+    from sql_engine_spark.streaming.ingest import stream_incremental_dedup
 
     src = str(tmp_path / "empty_docs")
     docs.filter(F.lit(False)).write.parquet(src)
-    stream = read_documents_stream(spark, src, glob="*.parquet")
+    stream = spark.readStream.schema(docs.schema).parquet(src)
     out = stream_incremental_dedup(
         stream,
         docs,
