@@ -133,17 +133,17 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     A file source cannot infer a schema mid-stream, so the stream is
     read with the table's memoized inferred schema, under the same
     pinned session confs: whichever timestamp type the corpus stores,
-    batch and stream see the same columns. New files named
-    ``<name>.parquet`` arriving in ``sf_dir`` would be picked up
-    incrementally in production."""
+    batch and stream see the same columns. A table stored as a
+    directory of part files (``<name>.parquet/part-*.parquet``) streams
+    that directory, and new part files arriving in it are picked up
+    incrementally. A single-file table streams ``sf_dir`` filtered to
+    that file name, because a file source needs a directory to list."""
     pin_session_confs(spark)
-    schema = _inferred_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    return _normalize_nanos_ts(
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", f"{name}.parquet")
-        .load(sf_dir)
-    )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark.readStream.schema(_inferred_schema(spark, path)).format("parquet")
+    if os.path.isdir(path):
+        return _normalize_nanos_ts(reader.load(path))
+    return _normalize_nanos_ts(reader.option("pathGlobFilter", f"{name}.parquet").load(sf_dir))
 
 
 def _normalize_nanos_ts(df: DataFrame) -> DataFrame:

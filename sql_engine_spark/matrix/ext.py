@@ -341,10 +341,10 @@ def _x04_minhash_sql() -> str:
     band fold, same exact-Jaccard verification."""
     P = D.MINHASH_P
     # Geometry comes from the dedup module's N_BANDS/ROWS_PER_BAND
-    # constants — the same names the operator defaults read — so the
-    # oracle cannot silently desync from the Spark side (ADVICE r6).
+    # constants — the same names the operator reads — so the oracle
+    # cannot silently desync from the Spark side (ADVICE r6).
     nb, rpb = D.N_BANDS, D.ROWS_PER_BAND
-    coeffs = D.minhash_coeffs(nb * rpb)
+    coeffs = D.minhash_coeffs()
     mins = ",\n         ".join(
         f"MIN(({a} * (x % {P}) + {b}) % {P}) AS mh{i}" for i, (a, b) in enumerate(coeffs)
     )
@@ -507,9 +507,9 @@ def x07_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x08_sim_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding similarity-pair mining (cosine ≥ 0.4 — this corpus has
     no planted high-cosine duplicates; 0.4 ≈ its 99.99th percentile),
-    exact all-pairs mode for oracle checkability; the scale path is
-    use_buckets=True (operators/similarity.embedding_dup_pairs)."""
-    return S.embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4, use_buckets=False)
+    exact all-pairs scoring for oracle checkability; the scale path is
+    operators/similarity.semantic_dedup (x59)."""
+    return S.embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
 # ---------------------------------------------------------------------

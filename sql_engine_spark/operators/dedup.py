@@ -356,7 +356,7 @@ def token_join(
     (aliased ``a``) meet ``index`` rows (aliased ``b``) where every
     token column in ``on`` is equal and ``pair_filter`` (over
     ``a.*``/``b.*``) holds. A token is a shingle (PPJoin, span pairs)
-    or a (band, band key) pair (MinHash, SimHash, aHash, SRP). Pair
+    or a (band, band key) pair (MinHash, SimHash, aHash). Pair
     dedup is left to the caller. Callers that pin the join cluster
     both sides on ``on`` at the scaled count and put the
     ``shuffle_hash`` hint on the side to build: both sides are exploded
@@ -388,8 +388,8 @@ def candidate_join(
     deliberate exchange replaces two (r16; prefix collisions duplicate
     each pair only ~1.2× at sf0.1, so the raw rows crossing one
     exchange cost less than partial-dedup plus deduped rows crossing
-    two). Producers with no verify join (banded hamming, span pairs,
-    SRP) dedup their own pairs: with no exchange to share, the id_a
+    two). Producers with no verify join (banded hamming, span pairs)
+    dedup their own pairs: with no exchange to share, the id_a
     pre-partition only ships every band-colliding duplicate raw
     (x63 at sf0.1: 166,682 → 439,080 shuffle records). The streaming
     probe ``pipeline.incremental_pairs_vs_corpus`` also dedups its
@@ -494,7 +494,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    prefix_order: str = "df",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs via a prefix-filtered
     inverted index (AllPairs/PPJoin family, Bayardo et al. WWW'07).
@@ -510,19 +509,12 @@ def ngram_jaccard_pairs(
     deep to still reach the overlap threshold. Survivors are verified
     with an exact array_intersect Jaccard.
 
-    ``prefix_order`` picks the global shingle order — any order is
-    exact; the order decides SKEW:
-
-    - ``"df"`` (default, the canonical PPJoin choice): ascending
-      document frequency, ties by hash. Prefixes hold each doc's
-      RAREST shingles, so a stop-phrase shingle shared by m docs sits
-      in suffixes and never generates its m(m−1)/2 candidate pairs —
-      the named 100 TB skew fix. Costs one extra pass (a count per
-      shingle + a re-sort join) over the shingle table.
-    - ``"hash"``: corpus-independent xxhash64 order — one pass, no df
-      join, but hot shingles land in prefixes at the same rate as any
-      other, so candidate count degrades quadratically on corpora with
-      near-universal phrases.
+    The global order is ascending document frequency, ties by hash (the
+    canonical PPJoin choice; any order is exact, the order decides
+    SKEW): prefixes hold each doc's RAREST shingles, so a stop-phrase
+    shingle shared by m docs sits in suffixes and never generates its
+    m(m−1)/2 candidate pairs — the 100 TB skew fix, for one extra pass
+    (a count per shingle + a re-sort join) over the shingle table.
 
     Output: (id_a, id_b, jaccard), id_a < id_b.
     The sub-quadratic 100 TB path is :func:`minhash_lsh_pairs`.
@@ -544,29 +536,21 @@ def ngram_jaccard_pairs(
     # (x01-style keep-one), survivor selection, and connected
     # components all consume the same (id_a, id_b, jaccard) set, and
     # its size is O(near-dup pairs) — tiny next to the corpus. Keyed
-    # like the shingle index plus (threshold, prefix_order).
+    # like the shingle index plus the threshold.
     return _memo_persist(
         _MEMO,
-        ("pairs", id_col, text_col, n, round(threshold * 1_000_000), prefix_order),
+        ("pairs", id_col, text_col, n, round(threshold * 1_000_000)),
         df,
-        lambda: _verify_pairs_jaccard(
-            _candidate_pairs(sh, threshold, prefix_order), sh, threshold
-        ),
+        lambda: _verify_pairs_jaccard(_candidate_pairs(sh, threshold), sh, threshold),
     )
 
 
-def _candidate_pairs(sh: DataFrame, threshold: float, prefix_order: str) -> DataFrame:
+def _candidate_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     """Distinct (id_a, id_b) candidate pairs from the prefix-filtered
-    inverted-index self-join (exact superset of the true ≥-threshold
-    pairs). Exposed separately so skew tests can count candidates per
-    prefix order without running verification."""
-    if prefix_order == "hash":
-        # shingle_hashes already emits hash-sorted arrays.
-        toks = _tokens(sh, "sh", threshold)
-    elif prefix_order == "df":
-        toks = _tokens(ordered_shingle_index(sh), "osh", threshold)
-    else:
-        raise ValueError(f"prefix_order must be 'df' or 'hash', got {prefix_order!r}")
+    self-join over the df-ordered index (exact superset of the true
+    ≥-threshold pairs). Exposed separately so skew tests can count
+    candidates without running verification."""
+    toks = _tokens(ordered_shingle_index(sh), "osh", threshold)
     # One repartition of the shared exploded side serves both aliases
     # (corpus-scaled count: the 250× no-spill wall).
     n_sc = scaled_join_partitions(sh)
@@ -603,22 +587,25 @@ def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
 # needed.
 MINHASH_P = 2_147_483_647  # 2³¹ − 1, prime
 _FOLD_MULT = 1_000_003  # band-key fold multiplier (prime < 2²⁰)
-# Banding geometry — single source of truth for BOTH the operator
-# defaults and the x04 DuckDB replay oracle (matrix/ext.py formats
-# these into the SQL). Changing one side without the other would
-# silently desync the hard oracle (ADVICE r6); a unit test pins the
+# Banding geometry and coefficient seed — the single source for BOTH
+# the operator and the x04 DuckDB replay oracle (matrix/ext.py formats
+# these into the SQL). Neither side takes them as parameters, so the
+# hard oracle cannot silently desync (ADVICE r6); a unit test pins the
 # generated oracle's band count to these names.
 N_BANDS = 8
 ROWS_PER_BAND = 4
+MINHASH_SEED = 42
 
 
-def minhash_coeffs(n_hashes: int = 32, seed: int = 42) -> list[tuple[int, int]]:
-    """The (aᵢ, bᵢ) affine coefficients — shared VERBATIM by the Spark
-    operator and the DuckDB oracle SQL (matrix/ext.py formats this same
-    list into the replay query, so the two sides cannot drift)."""
-    rng = random.Random(seed)
+def minhash_coeffs() -> list[tuple[int, int]]:
+    """The N_BANDS·ROWS_PER_BAND (aᵢ, bᵢ) affine coefficients — shared
+    VERBATIM by the Spark operator and the DuckDB oracle SQL
+    (matrix/ext.py formats this same list into the replay query, so the
+    two sides cannot drift)."""
+    rng = random.Random(MINHASH_SEED)
     return [
-        (rng.randrange(1, MINHASH_P), rng.randrange(0, MINHASH_P)) for _ in range(n_hashes)
+        (rng.randrange(1, MINHASH_P), rng.randrange(0, MINHASH_P))
+        for _ in range(N_BANDS * ROWS_PER_BAND)
     ]
 
 
@@ -647,12 +634,13 @@ def portable_shingle_index(
     )
 
 
-def minhash_band_keys(n_bands: int, rows_per_band: int, seed: int) -> list[Column]:
-    """The b band-key COLUMN expressions over the shingle array column
-    ``shm``, whose elements are already reduced mod P: r affine
-    minhashes folded modularly per band, band index in the fold seed.
-    Split out so signatures stay a pure scan-stage expression list."""
-    coeffs = minhash_coeffs(n_bands * rows_per_band, seed)
+def minhash_band_keys() -> list[Column]:
+    """The N_BANDS band-key COLUMN expressions over the shingle array
+    column ``shm``, whose elements are already reduced mod P:
+    ROWS_PER_BAND affine minhashes folded modularly per band, band
+    index in the fold seed. Split out so signatures stay a pure
+    scan-stage expression list."""
+    coeffs = minhash_coeffs()
 
     def _affine(a: int, b: int):
         # MUST be a one-parameter lambda: pyspark passes (element,
@@ -663,9 +651,9 @@ def minhash_band_keys(n_bands: int, rows_per_band: int, seed: int) -> list[Colum
 
     minhashes = [F.array_min(F.transform("shm", _affine(a, b))) for (a, b) in coeffs]
     band_keys = []
-    for bidx in range(n_bands):
+    for bidx in range(N_BANDS):
         k = F.lit(bidx + 1).cast("long")
-        for mh in minhashes[bidx * rows_per_band : (bidx + 1) * rows_per_band]:
+        for mh in minhashes[bidx * ROWS_PER_BAND : (bidx + 1) * ROWS_PER_BAND]:
             k = (k * F.lit(_FOLD_MULT) + mh) % F.lit(MINHASH_P)
         band_keys.append(k.alias(f"bk{bidx}"))
     return band_keys
@@ -677,20 +665,18 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    seed: int = 42,
 ) -> DataFrame:
     """Near-dup pairs via MinHash + banding, expression-only (no ML
     pipeline, no per-hash explode): the sub-quadratic 100 TB path.
 
-    - signatures: b·r affine minhash values per doc over the PORTABLE
-      shingle ints (family note above) — computed in the scan stage
-      under whole-stage codegen, zero shuffles and zero Python, and
-      integer-replayable by the DuckDB oracle (x04 is a HARD oracle
-      row since r6; banding decisions are deterministic given the
-      shared coefficients, so the replay reproduces the exact pair
-      set, not just its statistics).
+    - signatures: b·r affine minhash values per doc (b = N_BANDS,
+      r = ROWS_PER_BAND) over the PORTABLE shingle ints (family note
+      above) — computed in the scan stage under whole-stage codegen,
+      zero shuffles and zero Python, and integer-replayable by the
+      DuckDB oracle (x04 is a HARD oracle row since r6; banding
+      decisions are deterministic given the shared coefficients, so
+      the replay reproduces the exact pair set, not just its
+      statistics).
     - banding: each band of r minhashes folds to one key; docs explode
       to (band_idx, band_key) — b rows per doc — and self-join on the
       band. P(candidate) = 1 − (1 − J^r)^b ≈ 0.985 at J = 0.8 with
@@ -725,13 +711,13 @@ def minhash_lsh_pairs(
     # s' = s mod P; band-key equality asserted bit-exact in the r16
     # A/B; measured ~10% off the band-key stage).
     shm = sh.select("id", F.transform("sh", lambda s: s % F.lit(MINHASH_P)).alias("shm"))
-    sig = shm.select("id", *minhash_band_keys(n_bands, rows_per_band, seed))
+    sig = shm.select("id", *minhash_band_keys())
     n_sc = scaled_join_partitions(sh)
     # Long format: one shuffle on (band_idx, band_key) instead of b joins.
     ex = _cluster(
         sig.select(
             "id",
-            F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(n_bands)])).alias("band", "key"),
+            F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(N_BANDS)])).alias("band", "key"),
         ),
         n_sc,
         "band",

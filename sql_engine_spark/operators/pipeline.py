@@ -37,7 +37,6 @@ def benchmark_contamination(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    n_bench_buckets: int = 1,
 ) -> DataFrame:
     """Benchmark-contamination check: for every non-benchmark document,
     the fraction of its distinct word-``n``-gram shingles that appear
@@ -68,31 +67,21 @@ def benchmark_contamination(
     distinct stage was 0.45 s of a 1.4 s query; this shape measures
     0.4 s faster with bit-identical output).
 
-    SIZE GUARD (ADVICE r5): the single-array shape has a JVM ceiling —
-    one final task holds the whole distinct set as ONE array value
-    (2 GiB / Integer.MAX elements). That is exactly the broadcast-side
-    assumption (the set must fit on every executor anyway), but if
-    ``is_benchmark`` ever selects a corpus-scale slice rather than a
-    benchmark, pass ``n_bench_buckets > 1``: the collapse then groups
-    by ``pmod(hash(g), n_bench_buckets)`` — still map-side-combinable,
-    bit-identical output (each shingle lands in exactly one bucket),
-    with the per-array ceiling raised n_bench_buckets× at the cost of
-    a multi-task final stage. The default stays 1 because the one-task
-    latency win is why this shape exists.
+    SIZE GUARD (ADVICE r5): the benchmark slice's distinct shingle set
+    must fit one array value (2 GiB / Integer.MAX elements), the same
+    assumption the broadcast already makes.
     """
     sh = D.ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
         is_benchmark.alias("is_b"),
         D.shingle_hashes(text_col, n).alias("sh"),
     )
-    bench_flat = sh.filter(F.col("is_b")).select(F.explode("sh").alias("g"))
-    if n_bench_buckets > 1:
-        collapsed = bench_flat.groupBy(
-            F.pmod(F.hash("g"), F.lit(n_bench_buckets)).alias("__bb")
-        ).agg(F.collect_set("g").alias("gs"))
-    else:
-        collapsed = bench_flat.agg(F.collect_set("g").alias("gs"))
-    bench = collapsed.select(F.explode("gs").alias("g"), F.lit(1).alias("__hit"))
+    bench = (
+        sh.filter(F.col("is_b"))
+        .select(F.explode("sh").alias("g"))
+        .agg(F.collect_set("g").alias("gs"))
+        .select(F.explode("gs").alias("g"), F.lit(1).alias("__hit"))
+    )
     flat = sh.filter(~F.col("is_b")).select(
         "id", F.size("sh").cast("long").alias("n_shingles"), F.explode_outer("sh").alias("g")
     )
@@ -950,7 +939,7 @@ def crossmodal_dup_agreement(
     lex = D.ngram_jaccard_pairs(docs, threshold=j_threshold).select(
         F.col("id_a").alias("la"), F.col("id_b").alias("lb"), "jaccard"
     )
-    sem = embedding_dup_pairs(emb, threshold=c_threshold, use_buckets=False).select(
+    sem = embedding_dup_pairs(emb, threshold=c_threshold).select(
         F.col("id_a").alias("sa"), F.col("id_b").alias("sb"), "cosine_sim"
     )
     j = lex.join(

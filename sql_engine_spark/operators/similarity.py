@@ -11,9 +11,12 @@
   probability 1−θ/π, so near neighbors share a whole band with high
   probability (cos≥0.95 ⇒ ~0.66 per band, ~0.99 for any-of-4).
   Search filters to rows sharing ≥1 band with the query, then
-  exact-reranks; pair mining joins per band (4 equi-joins, unioned) —
-  sub-quadratic, shuffle keyed on small ints. Recall is checked
-  against brute force in tests (seeded, deterministic).
+  exact-reranks. Recall is checked against brute force in tests
+  (seeded, deterministic).
+
+Near-duplicate pair mining has two operators: the exact all-pairs
+scorer :func:`embedding_dup_pairs` (small inputs, oracle baseline) and
+the clustered :func:`semantic_dedup`, the scale path.
 
 Design sources: SRP-LSH (Charikar, STOC 2002) and the top-k similarity
 search literature in PAPERS.md (EDBT 2020, ICDE 2021).
@@ -481,59 +484,23 @@ def embedding_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    use_buckets: bool = True,
-    n_planes: int = ANN_PLANES,
-    n_bands: int = ANN_BANDS,
-    seed: int = ANN_SEED,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
-    threshold).
-
-    ``use_buckets=True``: banded SRP join — each vector's bands explode
-    to (band, key) tokens and ONE equi-join on them (the shared
-    ``dedup.token_join``) meets every pair that agrees on any band;
-    the pairs are deduped, then exact cosine filter. Sub-quadratic
-    with ~0.99 recall at cos≥0.95 — the 100 TB path.
-    ``use_buckets=False``: exact all-pairs scoring (oracle-checkable
-    baseline; O(n²), small inputs only)."""
+    threshold) by exact all-pairs scoring: the oracle-checkable
+    baseline, O(n²), small inputs only. The scale path for embedding
+    near-dups is :func:`semantic_dedup`."""
     # Norms are per-VECTOR, not per-pair: compute |v|² once on each side
     # before the join so the O(pairs) stage evaluates only the single
     # cross dot product (the naive per-pair cosine re-folds both norms,
     # tripling the dominant cost). Same fold order as the oracle's
     # per-vector ``nrm`` CTE, so values stay bit-identical.
     from sql_engine_spark.functions.vector import dot as _dot
-    from sql_engine_spark.operators.dedup import _cluster, scaled_join_partitions, token_join
 
     vd = to_double_array(vec_col)
     nrm = _dot(vd, vd)
-    if use_buckets:
-        base = with_srp_bands(
-            df.select(id_col, vec_col, nrm.alias("nrm")), dim, vec_col, n_planes, n_bands, seed
-        )
-        bands = F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-        ex = _cluster(
-            base.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "nrm",
-                F.posexplode(bands).alias("band", "key"),
-            ),
-            scaled_join_partitions(df),
-            "band",
-            "key",
-        )
-        # Pinned shuffle-hash (dedup.token_join rationale). The cosine
-        # is computed after the pair dedup, not inside the join: there
-        # it fuses into the scan stage, a single task on a one-file
-        # embeddings table.
-        joined = token_join(
-            ex, ex.hint("shuffle_hash"), ("band", "key"), F.col("a.id") < F.col("b.id"),
-            F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb"),
-        ).dropDuplicates(["id_a", "id_b"])
-    else:
-        a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), nrm.alias("na"))
-        b_ = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), nrm.alias("nb"))
-        joined = a.join(b_, F.col("id_a") < F.col("id_b"))
+    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), nrm.alias("na"))
+    b_ = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), nrm.alias("nb"))
+    joined = a.join(b_, F.col("id_a") < F.col("id_b"))
     denom = F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))
     sim = F.when(denom != F.lit(0.0), _dot(to_double_array(F.col("va")), to_double_array(F.col("vb"))) / denom)
     return joined.select("id_a", "id_b", sim.alias("cosine_sim")).filter(F.col("cosine_sim") >= threshold)

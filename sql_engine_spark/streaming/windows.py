@@ -219,27 +219,6 @@ def _write_batch_partition(batch_df: DataFrame, batch_id: int, path: str) -> Non
     )
 
 
-def stream_to_parquet_exactly_once(
-    stream_df: DataFrame, path: str, checkpoint: str
-) -> None:
-    """Exactly-once parquet sink via ``foreachBatch``: each micro-batch
-    lands in its own idempotent ``__batch_id`` partition
-    (:func:`_write_batch_partition`). Idempotence + checkpointed
-    offsets = exactly-once output, the contract a 100 TB/day ingest
-    pipeline needs from a plain-parquet lake (no Delta/transactional
-    table required).
-
-    Runs bounded (AvailableNow) here; unbounded production use is the
-    same call without awaitTermination."""
-    q = (
-        stream_df.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(partial(_write_batch_partition, path=path))
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_late_data_accounting(
     events: DataFrame,
     work_dir: str,
@@ -286,8 +265,8 @@ def stream_late_data_accounting(
     dropped window count once; pinned in
     ``test_late_dropped_counts_windows_not_events``) — and the oracle
     replays exactly that. Update-mode micro-batch outputs land in idempotent
-    ``__batch_id`` partitions (same exactly-once shape as
-    :func:`stream_to_parquet_exactly_once`); the final value of each
+    ``__batch_id`` partitions (the exactly-once shape of
+    :func:`_write_batch_partition`); the final value of each
     window is its row from the LAST batch that updated it
     (``max_by(n_events, __batch_id)`` — cumulative state, so later
     batches supersede earlier ones).

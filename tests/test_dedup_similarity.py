@@ -53,17 +53,9 @@ def test_ngram_jaccard_exact_vs_bruteforce_random(spark):
                     inter = len(sa & sb)
                     if inter / (len(sa) + len(sb) - inter) >= t - 1e-12:
                         truth.add((a, b))
-        for order in ("df", "hash"):
-            D.clear_shingle_index()
-            got = {
-                (r.id_a, r.id_b)
-                for r in D.ngram_jaccard_pairs(
-                    df, threshold=t, prefix_order=order
-                ).collect()
-            }
-            assert got == truth, (
-                f"t={t} order={order}: missing={truth-got} extra={got-truth}"
-            )
+        D.clear_shingle_index()
+        got = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(df, threshold=t).collect()}
+        assert got == truth, f"t={t}: missing={truth-got} extra={got-truth}"
     D.clear_shingle_index()
 
 
@@ -115,10 +107,10 @@ def test_dedup_by_pairs_drops_only_losers(docs, exact_pairs):
 
 def test_rarest_first_prefixes_cut_hot_shingle_candidates(spark):
     """Skewed corpus: every doc shares one hot phrase, otherwise unique
-    text. Hash-ordered prefixes let the hot shingles collide (→ ~m²/2
-    candidates); document-frequency (rarest-first) prefixes push them
-    into suffixes, so candidates collapse while the final exact result
-    is identical — the 100 TB skew fix VERDICT.md asked for."""
+    text. A prefix holding a hot shingle would meet all m(m−1)/2 pairs;
+    document-frequency (rarest-first) prefixes push the hot shingles
+    into suffixes, so no candidate pair meets and the exact result
+    stays empty — the 100 TB skew fix VERDICT.md asked for."""
     import itertools
 
     from sql_engine_spark.operators.dedup import (
@@ -129,9 +121,7 @@ def test_rarest_first_prefixes_cut_hot_shingle_candidates(spark):
     )
 
     words = ["".join(p) for p in itertools.product("abcdefghij", repeat=3)]
-    # 12-word hot phrase → 10 hot shingles shared by EVERY doc; several
-    # inevitably sit low in the global hash order, so hash-ordered
-    # prefixes collide on them.
+    # 12-word hot phrase → 10 hot shingles shared by EVERY doc.
     hot = " ".join(f"hot{j}" for j in range(12))
     m = 60
     rows = []
@@ -145,18 +135,21 @@ def test_rarest_first_prefixes_cut_hot_shingle_candidates(spark):
         .withColumn("sz", F.size("sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_hash = _candidate_pairs(sh, 0.8, "hash").count()
-    n_df = _candidate_pairs(sh, 0.8, "df").count()
+    n_hot = (
+        sh.select(F.explode("sh").alias("s"))
+        .groupBy("s")
+        .count()
+        .filter(F.col("count") == m)
+        .count()
+    )
+    n_df = _candidate_pairs(sh, 0.8).count()
     sh.unpersist()
-    # hash order: hot shingles sit in prefixes of every doc with
-    # probability prefix_len/sz each → many of the m(m-1)/2 pairs meet.
+    # the fixture is skewed: all 10 hot shingles occur in all m docs.
+    assert n_hot == 10, f"skew fixture not skewed ({n_hot} shingles in every doc)"
     # df order: hot shingles are the most frequent → always in suffixes.
     assert n_df == 0, f"df-ordered prefixes still met {n_df} pairs"
-    assert n_hash > 100, f"skew fixture not skewed (hash candidates {n_hash})"
-    # exact results agree (no true pairs at j>=0.8 in this corpus)
-    got_df = ngram_jaccard_pairs(df, threshold=0.8, prefix_order="df").count()
-    got_hash = ngram_jaccard_pairs(df, threshold=0.8, prefix_order="hash").count()
-    assert got_df == got_hash == 0
+    # exact result: no true pairs at j>=0.8 in this corpus
+    assert ngram_jaccard_pairs(df, threshold=0.8).count() == 0
 
 
 def test_connected_components_100_hop_chain_logarithmic_rounds(spark):
@@ -341,18 +334,6 @@ def test_ann_multiprobe_monotone_and_exhaustive(emb):
     assert full == brute
 
 
-def test_bucketed_dup_pairs_subset_of_exact(emb):
-    """Banded SRP pair mining must be a subset of the exact result with
-    usable recall. At cos≈0.4 (this corpus's top percentile; it has no
-    high-cosine planted dups) per-band collision is ~0.16, any-of-4 ≈
-    0.5 — for a true near-dup corpus (cos≥0.95) it is ≈0.99."""
-    exact = {(r.id_a, r.id_b) for r in S.embedding_dup_pairs(emb, threshold=0.4, use_buckets=False).collect()}
-    approx = {(r.id_a, r.id_b) for r in S.embedding_dup_pairs(emb, threshold=0.4, use_buckets=True).collect()}
-    assert approx <= exact
-    if len(exact) >= 10:
-        assert len(approx) / len(exact) >= 0.3, f"bucketed recall {len(approx)}/{len(exact)}"
-
-
 def test_ivf_recall_vs_brute(emb):
     """This corpus's nearest neighbors sit at cos≈0.3 (no planted
     dups), so partial-probe recall is inherently modest — assert the
@@ -459,20 +440,15 @@ def test_minhash_oracle_coeffs_are_shared_objects(spark):
 
 def test_minhash_oracle_banding_geometry_is_shared(spark):
     """ADVICE r6: the oracle's band geometry must come from the same
-    N_BANDS/ROWS_PER_BAND constants the operator defaults read, so
-    changing either side's parameters cannot silently desync the hard
-    oracle. Pins: operator defaults == constants, oracle SQL band
-    count == N_BANDS, minhash column count == N_BANDS*ROWS_PER_BAND,
-    and the default coefficient list covers exactly that many hashes."""
-    import inspect
+    N_BANDS/ROWS_PER_BAND constants the operator reads, so the hard
+    oracle cannot silently desync. Pins: oracle SQL band count ==
+    N_BANDS, minhash column count == N_BANDS*ROWS_PER_BAND, and the
+    coefficient list covers exactly that many hashes."""
     import re
 
     from sql_engine_spark.matrix import ORACLE
 
-    sig = inspect.signature(D.minhash_lsh_pairs)
-    assert sig.parameters["n_bands"].default == D.N_BANDS
-    assert sig.parameters["rows_per_band"].default == D.ROWS_PER_BAND
-    assert len(D.minhash_coeffs(D.N_BANDS * D.ROWS_PER_BAND)) == D.N_BANDS * D.ROWS_PER_BAND
+    assert len(D.minhash_coeffs()) == D.N_BANDS * D.ROWS_PER_BAND
 
     sql = ORACLE["x04_dedup_minhash_lsh"]
     assert f"unnest(range(0, {D.N_BANDS}))" in sql

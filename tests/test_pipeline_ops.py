@@ -77,22 +77,6 @@ def test_contamination_planted_benchmark_copy(spark):
     assert out[2].n_overlap == 0
 
 
-def test_contamination_bucketed_bench_collapse_identical(spark, sf_dir):
-    """The n_bench_buckets>1 escape hatch (ADVICE r5 size guard: no
-    single collect_set array above the JVM ceiling) is bit-identical to
-    the default one-task collapse on a real corpus slice."""
-    from sql_engine_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_b = F.col("doc_id") % 20 == 0
-    base = {tuple(r) for r in P.benchmark_contamination(docs, is_b).collect()}
-    bucketed = {
-        tuple(r)
-        for r in P.benchmark_contamination(docs, is_b, n_bench_buckets=4).collect()
-    }
-    assert base == bucketed
-
-
 def test_pack_sequences_budget_invariant(spark, sf_dir):
     """Every sequence's total fits the budget unless it is a single
     oversized doc; within a shard, doc order is preserved and seq ids

@@ -374,26 +374,6 @@ def test_banded_hamming_keeps_map_side_pair_dedup(spark, sf_dir):
         assert not [ln for ln in lines if "REPARTITION_BY_COL" in ln and "(id_a#" in ln], q
 
 
-def test_srp_dup_pairs_is_one_token_join(spark, sf_dir):
-    """The banded SRP path explodes its bands to (band, key) tokens and
-    self-joins once (dedup.token_join): one join, no per-band union.
-    Both sides are exploded corpus tables, so the join is pinned
-    shuffle-hash, never a broadcast (the 125× replica OOM class)."""
-    import re
-
-    from sql_engine_spark.operators.similarity import embedding_dup_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = _plan(embedding_dup_pairs(emb, 0.4, use_buckets=True))
-    assert "Union" not in plan
-    joins = re.findall(
-        r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin|BroadcastNestedLoopJoin"
-        r"|CartesianProduct)\b",
-        plan,
-    )
-    assert joins == ["ShuffledHashJoin"], plan
-
-
 def test_stopword_stats_broadcasts_stop_list(spark, sf_dir):
     """x50: the 20-row stopword list must broadcast into the per-token
     membership join (the corpus-side explode must not shuffle on the

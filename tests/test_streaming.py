@@ -3,6 +3,8 @@ runs + memory sinks for determinism)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -218,17 +220,25 @@ def test_foreach_batch_sink_exactly_once(spark, sf_dir, tmp_path):
     """The foreachBatch parquet sink must be IDEMPOTENT per batch id
     (replayed batch overwrites its own partition, no duplicates) and a
     checkpointed restart with no new data must add no rows."""
-    from sql_engine_spark.streaming import windows as SW
-
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     stream = load_stream(spark, sf_dir, "events")
     agg = SW.tumbling_window_agg(stream, width="1 hour")
-    SW.stream_to_parquet_exactly_once(agg, out, ckpt)
+
+    def run() -> None:
+        (
+            agg.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(partial(SW._write_batch_partition, path=out))
+            .start()
+            .awaitTermination()
+        )
+
+    run()
     n1 = spark.read.parquet(out).count()
     assert n1 > 0
     # Restart from the same checkpoint, no new input → no new rows.
-    SW.stream_to_parquet_exactly_once(agg, out, ckpt)
+    run()
     assert spark.read.parquet(out).count() == n1
     # Simulate a replayed batch: rewriting batch 0's output directly
     # must leave the row count unchanged (partition overwrite, not append).
@@ -243,6 +253,15 @@ def test_foreach_batch_sink_exactly_once(spark, sf_dir, tmp_path):
         .parquet(out)
     )
     assert spark.read.parquet(out).count() == n1
+
+
+def test_load_stream_reads_a_directory_table(spark, tmp_path):
+    """A table stored as a directory of part files
+    (``<name>.parquet/part-*.parquet``, what ``df.write.parquet``
+    writes) streams all of its rows, as ``load_table`` reads them."""
+    spark.range(10).write.parquet(str(tmp_path / "t.parquet"))
+    stream = load_stream(spark, str(tmp_path), "t")
+    assert SW.run_to_batch(stream, output_mode="append").count() == 10
 
 
 def test_late_accounting_sentinel_matches_threshold(spark, tmp_path):

@@ -681,21 +681,6 @@ def test_train_max_zero_raises_value_error():
         _train_spherical_quantizer(None, "id", "v", 4, 7, train_max=-5)
 
 
-def test_prefix_order_default_is_df():
-    """Every public near-dup entry point must DEFAULT to the
-    document-frequency ('df') prefix order — the hot-shingle skew
-    defence. 'hash' stays available as the documented one-pass
-    option, but a refactor must not silently flip the default
-    (VERDICT r2 item 9). Containment has no option and always uses df
-    order; test_pipeline_ops' hot-shingle test pins that by behaviour
-    (it fails with hash-ordered containment prefixes)."""
-    import inspect
-
-    from sql_engine_spark.operators import dedup as D
-
-    assert inspect.signature(D.ngram_jaccard_pairs).parameters["prefix_order"].default == "df"
-
-
 def test_glob_backtick_does_not_arm_later_literal():
     """A backtick identifier after GLOB must consume the pending-GLOB
     state: the next unrelated string literal in the query must NOT be
@@ -1076,8 +1061,6 @@ _UNREACHED_ALLOWED = {
     # Mergeable distinct sketch (SCALE.md:531); the portable-HLL test
     # compares against it.
     "mergeable_distinct",
-    # Exactly-once stream-to-parquet sink (SURVEY.md:625).
-    "stream_to_parquet_exactly_once",
 }
 
 

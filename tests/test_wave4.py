@@ -266,10 +266,7 @@ def test_crossmodal_agreement_partitions_pair_union(spark, docs, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     lex = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(docs, threshold=0.8).collect()}
-    sem = {
-        (r.id_a, r.id_b)
-        for r in embedding_dup_pairs(emb, threshold=0.4, use_buckets=False).collect()
-    }
+    sem = {(r.id_a, r.id_b) for r in embedding_dup_pairs(emb, threshold=0.4).collect()}
     out = crossmodal_dup_agreement(docs, emb).collect()
     got = {(r.id_a, r.id_b): r for r in out}
     assert set(got) == lex | sem
